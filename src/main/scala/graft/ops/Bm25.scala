@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -169,19 +169,10 @@ object Bm25 {
     // shape unchanged.
     val spark = docs.sparkSession
     import spark.implicits._
-    val qhead = queries.select(col("query_id"), col("terms"))
-      .limit(MaxBatchQueries + 1).collect()
-    val perQ: Seq[(String, Seq[String])] =
-      if (qhead.length > MaxBatchQueries) Seq.empty
-      else qhead.toSeq
-        .map(r => (r.getString(0),
-          Option(r.getSeq[String](1)).getOrElse(Seq.empty)))
-        .groupBy(_._1)
-        .map { case (qid, rows) =>
-          (qid, rows.flatMap(_._2).distinct.sorted)
-        }.toSeq
+    val qrows = readQueryBatch(queries)
+    val perQ = qrows.map(canonicalTermsets).getOrElse(Seq.empty)
     val termList = perQ.flatMap(_._2).distinct.sorted
-    val bounded = qhead.length <= MaxBatchQueries &&
+    val bounded = qrows.isDefined &&
       termList.nonEmpty && termList.size <= MaskSlotCap
     if (bounded) {
       val tf = graft.scale.Staging.materialize(docs
@@ -295,7 +286,7 @@ object Bm25 {
     // tf > 0), so `raw > 0` reproduces the expansion's candidacy
     // exactly — measured at the sf0.1 service cap the tail's
     // 4.38M-row broadcast expansion and its 1.9M-group hash
-    // aggregate disappear (CapExp2, bit-identical output). Slot
+    // aggregate disappear (bit-identical output). Slot
     // order is the sorted term list, so the per-(rep, doc) sum order
     // is fixed; the expansion tail's sum order was row order — both
     // land on the same 4-decimal rounding (oracle re-passed at all
@@ -695,12 +686,47 @@ object Bm25 {
       df, tf.select(col("doc_id"), col("dl")), corpusStats, k, k1, b)
   }
 
-  /** Queries are the driver-side pruning input (their term union
-    * resolves the bucket IN-list); bound the collect like every other
-    * bounded driver read in this engine. Shared with
-    * [[graft.pipeline.RetrievalPipeline.hybridTopKBatch]] so the
-    * hybrid and lexical batch caps can't drift. */
+  /** The query-batch cap: every batch path (lexical, cached, PQ,
+    * IVF, IVF-PQ, hybrid) reads its queries to the driver through one
+    * [[graft.scale.Staging.boundedCollect]] under this one constant, so
+    * the caps can't drift. */
   private[graft] val MaxBatchQueries = 1024
+
+  /** A (query_id, terms) batch as one bounded driver read, or None
+    * past [[MaxBatchQueries]]. */
+  private def readQueryBatch(queries: DataFrame): Option[Array[Row]] =
+    graft.scale.Staging.boundedCollect(
+      queries.select(col("query_id"), col("terms")), MaxBatchQueries)
+
+  /** The batch termset canonicalization every batch path shares (the
+    * result cache's memo keys are only sound while it matches the
+    * uncached path): per query_id the union of its rows' terms,
+    * distinct and sorted — a repeated query_id keeps its
+    * union-of-terms semantics. A NULL terms array or term contributes
+    * nothing (explode parity); the paths that refuse NULL arrays use
+    * [[strictTermsets]]. */
+  private def canonicalTermsets(rows: Array[Row])
+      : Seq[(String, Seq[String])] =
+    rows.toSeq
+      .map(r => (r.getString(0),
+        Option(r.getSeq[String](1)).getOrElse(Seq.empty)))
+      .groupBy(_._1)
+      .map { case (qid, qs) =>
+        (qid, qs.flatMap(_._2).filter(_ != null).distinct.sorted)
+      }.toSeq
+
+  /** [[canonicalTermsets]] for the paths whose contract refuses, loudly
+    * and tagged with `what`, an over-cap batch and a NULL terms
+    * array. */
+  private[graft] def strictTermsets(queries: DataFrame, what: String)
+      : Seq[(String, Seq[String])] = {
+    val rows = readQueryBatch(queries).getOrElse(
+      throw new IllegalArgumentException(s"$what: query set exceeds " +
+        s"the $MaxBatchQueries bounded-collect cap"))
+    rows.foreach(r => require(!r.isNullAt(1),
+      s"$what: query '${r.getString(0)}' has a NULL terms array"))
+    canonicalTermsets(rows)
+  }
 
   /** MANY queries against the persisted postings in ONE pruned probe —
     * the production retrieval-service shape composed with the index
@@ -727,21 +753,7 @@ object Bm25 {
   def scoreTopKIndexedBatch(spark: SparkSession, path: String,
       queries: DataFrame, k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val qrows = queries.select(col("query_id"), col("terms"))
-      .limit(MaxBatchQueries + 1).collect()
-    require(qrows.length <= MaxBatchQueries,
-      s"bm25 batch: query set exceeds the $MaxBatchQueries " +
-        "bounded-collect cap")
-    qrows.foreach(r => require(!r.isNullAt(1),
-      s"bm25 batch: query '${r.getString(0)}' has a NULL terms array"))
-    // canonical term set per query_id — a repeated query_id keeps its
-    // historical union-of-terms semantics
-    val canon: Seq[(String, Seq[String])] = qrows.toSeq
-      .map(r => (r.getString(0), r.getSeq[String](1)))
-      .groupBy(_._1)
-      .map { case (qid, rows) =>
-        (qid, rows.flatMap(_._2).distinct.sorted)
-      }.toSeq
+    val canon = strictTermsets(queries, "bm25 batch")
     val repOf: Map[Seq[String], String] = canon.groupBy(_._2)
       .map { case (ts, qs) => (ts, qs.map(_._1).min) }
     // Round-15: representatives score under a compact INT index, not

@@ -80,25 +80,10 @@ object Bm25ResultCache {
 
   private[graft] def canonicalize(spark: SparkSession, path: String,
       queries: DataFrame, k: Int): CanonBatch = {
-    val qrows = queries.select(col("query_id"), col("terms"))
-      .limit(Bm25.MaxBatchQueries + 1).collect()
-    require(qrows.length <= Bm25.MaxBatchQueries,
-      s"bm25 cached batch: query set exceeds the " +
-        s"${Bm25.MaxBatchQueries} bounded-collect cap")
-    // same loud NULL-terms contract as the uncached batch (parity:
-    // without it the canonicalization NPEs with no query id attached)
-    qrows.foreach(r => require(!r.isNullAt(1),
-      s"bm25 cached batch: query '${r.getString(0)}' has a NULL " +
-        "terms array"))
-    // the SAME canonicalization as the uncached batch: union-of-terms
-    // per repeated query_id, distinct+sorted termset, one
-    // representative per distinct termset
-    val canon: Seq[(String, Seq[String])] = qrows.toSeq
-      .map(r => (r.getString(0), r.getSeq[String](1)))
-      .groupBy(_._1)
-      .map { case (qid, rows) =>
-        (qid, rows.flatMap(_._2).distinct.sorted)
-      }.toSeq
+    // the SAME bounded read, loud NULL-terms contract and
+    // canonicalization as the uncached batch; one representative per
+    // distinct termset below
+    val canon = Bm25.strictTermsets(queries, "bm25 cached batch")
     // same loud empty-batch contract as the uncached path
     // (Bm25.scoreTopKIndexedBatch's `pairs.nonEmpty` — the documented
     // same-contract promise covers this edge too; round-12 ADVICE)

@@ -41,14 +41,13 @@ object Components {
     *   safe default for arbitrary graphs at scale. For clique-union
     *   graphs (near-dup clusters) it saves no rounds and costs one join
     *   per round (measured: 5 rounds either way on the sf0.1 near-dup
-    *   graph, ~25% cheaper per round without it — graft.CompExp), so
+    *   graph, ~25% cheaper per round without it), so
     *   callers that KNOW the graph is clique-shaped may disable it —
     *   `false` means "start without the jump join", and the run
     *   switches it on adaptively after [[AdaptiveDoublingAfter]]
     *   non-converged rounds (the clique assumption is then observably
     *   wrong for this input, and linear propagation on a deep
     *   component must not run into the maxIter failure).
-    * @param verbose print per-round changed counts (diagnostics).
     * @return (`id`, `comp`) for every node incident to an edge, where
     *   `comp` is the smallest node id in the component.
     */
@@ -60,8 +59,8 @@ object Components {
     * latency per round regardless of data size — so a 186-edge
     * near-dup graph paid ~2.2 s for what is microseconds of actual
     * union-find work. Under the bound the edges are a bounded driver
-    * read (16 bytes/edge; ~3 MB at the cap — the MaxBatchQueries
-    * collect discipline), the fixpoint is computed exactly on the
+    * read ([[graft.scale.Staging.boundedCollect]]; 16 bytes/edge, ~3 MB
+    * at the cap), the fixpoint is computed exactly on the
     * driver, and the result returns as a local relation; past it the
     * shuffle-bounded loop runs unchanged, which is the only shape
     * that exists at 100 TB. Same unique min-id fixpoint either way
@@ -70,42 +69,53 @@ object Components {
 
   def connectedComponents(edges: DataFrame,
       maxIter: Int = 25, pointerDoubling: Boolean = true,
-      verbose: Boolean = false,
       driverMaxEdges: Int = DriverMaxEdges): DataFrame = {
     // materialize the edge list ONCE before mirroring: `edges` is often
     // an expensive upstream plan (e.g. the near-dup pair join), and the
     // union would otherwise execute it twice
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    if (driverMaxEdges > 0) {
-      // bounded probe: limit short-circuits, so a corpus-scale edge
-      // set reads ~driverMaxEdges rows, never the full set
-      val head = e.limit(driverMaxEdges + 1).collect()
-      if (head.length <= driverMaxEdges &&
-          head.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val parent = scala.collection.mutable.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        head.foreach { row =>
-          val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
-          if (a != b) parent(math.max(a, b)) = math.min(a, b)
-        }
-        val nodes = parent.keys.toArray
-        // min-id label per component == the loop's converged fixpoint
-        val minOfRoot = scala.collection.mutable.HashMap[Long, Long]()
-        nodes.foreach { n =>
-          val r = find(n)
-          minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
-        }
-        import e.sparkSession.implicits._
-        return nodes.toSeq.map(n => (n, minOfRoot(find(n))))
-          .toDF("id", "comp")
-      }
+    // NULL endpoints keep the distributed loop's semantics: the driver
+    // union-find only takes fully non-null edge sets
+    val driverEdges =
+      if (driverMaxEdges <= 0) None
+      else graft.scale.Staging.boundedCollect(e, driverMaxEdges)
+        .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    driverEdges match {
+      case Some(rows) => unionFind(e.sparkSession, rows)
+      case None => propagateLabels(e, maxIter, pointerDoubling)
     }
+  }
+
+  /** The driver shortcut: union-find over the collected edges, labels
+    * re-rooted to each component's min id (the loop's fixpoint). */
+  private def unionFind(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    rows.foreach { row =>
+      val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val nodes = parent.keys.toArray
+    // min-id label per component == the loop's converged fixpoint
+    val minOfRoot = scala.collection.mutable.HashMap[Long, Long]()
+    nodes.foreach { n =>
+      val r = find(n)
+      minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
+    }
+    import spark.implicits._
+    nodes.toSeq.map(n => (n, minOfRoot(find(n)))).toDF("id", "comp")
+  }
+
+  /** The distributed fallback: iterative min-label propagation. */
+  private def propagateLabels(e: DataFrame, maxIter: Int,
+      pointerDoubling: Boolean): DataFrame = {
     val sym = e
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -142,7 +152,6 @@ object Components {
       // convergence check scans the just-materialized frame — no
       // second shuffle join per iteration
       val changed = updated.filter(col("comp") =!= col("old")).count()
-      if (verbose) println(s"[components] round $i changed=$changed")
       labels = updated.select(col("id"), col("comp"))
       converged = changed == 0
       i += 1

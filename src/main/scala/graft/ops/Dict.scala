@@ -22,12 +22,12 @@ object Dict {
     * Missing keys yield null (pair with [[getOrDefault]]). */
   def fromTable(dim: DataFrame, keyCol: String, valCol: String,
       maxEntries: Int = 100000): Column = {
-    val rows = dim
-      .select(col(keyCol).cast("string"), col(valCol).cast("string"))
-      .collect()
-    require(rows.length <= maxEntries,
-      s"dictionary has ${rows.length} entries (> $maxEntries) — " +
-        "use a broadcast join for tables this large")
+    val rows = graft.scale.Staging.boundedCollect(dim
+        .select(col(keyCol).cast("string"), col(valCol).cast("string")),
+        maxEntries)
+      .getOrElse(throw new IllegalArgumentException(
+        s"dictionary has more than $maxEntries entries — " +
+          "use a broadcast join for tables this large"))
     val pairs = rows.flatMap(r => Seq(lit(r.getString(0)),
       lit(r.getString(1))))
     map(pairs.toIndexedSeq: _*)

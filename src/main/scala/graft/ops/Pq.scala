@@ -36,11 +36,27 @@ import graft.functions.PqFunctions.{pq_adc_cosine, pq_encode}
   */
 object Pq {
 
-  /** Queries are the driver-built-LUT side; bound it like every other
-    * bounded collect in this engine (ops/Dict contract). Shared with
-    * [[VectorIndex.queryIvfPq]] so the PQ and IVF-PQ paths can't drift
-    * to different caps. */
-  private[ops] val MaxQueries = 1024
+  /** The query side of a driver-built LUT, shared by [[pqTopK]] and
+    * [[VectorIndex.queryIvfPq]]: ids, vectors (exact widenings of the
+    * float embeddings) and L2 norms, ordered by vec_id. */
+  private[ops] final case class QueryVecs(ids: Array[Long],
+      vecs: Array[Array[Double]], norms: Array[Double])
+
+  /** The queries' (vec_id, embedding) rows as one bounded driver read
+    * under the shared [[Bm25.MaxBatchQueries]] cap; an over-cap set is
+    * refused loudly, tagged with `what`. */
+  private[ops] def collectQueryVecs(queries: DataFrame,
+      what: String): QueryVecs = {
+    val rows = graft.scale.Staging.boundedCollect(
+        queries.select(col("vec_id"), col("embedding"))
+          .orderBy(col("vec_id")), Bm25.MaxBatchQueries)
+      .getOrElse(throw new IllegalArgumentException(s"$what: query set " +
+        s"exceeds the ${Bm25.MaxBatchQueries} bounded-collect cap — " +
+        "pass the corpus as the corpus, not as queries"))
+    val vecs = rows.map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    QueryVecs(rows.map(_.getLong(0)), vecs,
+      vecs.map(v => math.sqrt(v.map(x => x * x).sum)))
+  }
 
   private val bookCache =
     new java.util.concurrent.ConcurrentHashMap[String, PqCodebooks]()
@@ -156,15 +172,9 @@ object Pq {
     import spark.implicits._
     val cb = codebooks(corpus, m, k, iters)
     val bcCb = spark.sparkContext.broadcast(cb)
-    val qrows = queries.select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(MaxQueries + 1).collect()
-    require(qrows.length <= MaxQueries,
-      s"pq_topk: query set exceeds the $MaxQueries bounded-collect cap — " +
-        "pass the corpus as the corpus, not as queries")
-    val qids = qrows.map(_.getLong(0))
-    val qvecs = qrows.map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    val qnorms = qvecs.map(v => math.sqrt(v.map(x => x * x).sum))
-    val lut = Array.tabulate(qrows.length) { qi =>
+    val QueryVecs(qids, qvecs, qnorms) =
+      collectQueryVecs(queries, "pq_topk")
+    val lut = Array.tabulate(qids.length) { qi =>
       val qv = qvecs(qi)
       Array.tabulate(cb.m) { s =>
         val base = s * cb.subDim

@@ -257,36 +257,27 @@ object Sampling {
   def dsirSelect(docs: DataFrame, id: Column, text: Column,
       isTarget: Column, buckets: Int, k: Int,
       driverLmMaxBuckets: Int = DsirDriverLmMaxBuckets): DataFrame = {
-    require(buckets > 0 && (buckets & (buckets - 1)) == 0,
-      "dsir: buckets must be a power of two (pmod == low bits on both " +
-        "engines only when the modulus is a power of two)")
     if (buckets > driverLmMaxBuckets)
       return dsirSelectJoin(docs, id, text, isTarget, buckets, k)
     // Driver-LM path (round 16, session 2; guide §2.3 "decide with
     // small rows" / §2.4 remove shuffles): the bucket LM is <=
     // `buckets` rows BY CONSTRUCTION (the hashing trick's whole
     // point), so under the bound it is a BOUNDED collect — and with
-    // the LLR table on the driver, per-doc scoring is a pure
-    // codegen'd projection (vec_gather_sum over the doc's bucket
-    // array against the table literal). Versus the join shape
-    // ([[dsirSelectJoin]]) this removes the gram-row stage (per-doc
-    // ARRAYS stage instead: same bytes, ~2 orders of magnitude fewer
-    // rows), the scoring broadcast join over every gram occurrence,
-    // and the per-doc aggregation exchange. Bit-identical weights:
+    // the LLR table on the driver, per-doc scoring is a codegen'd
+    // vec_gather_sum over the doc's bucket array against the table
+    // literal. Versus the join shape ([[dsirSelectJoin]]) this
+    // removes the gram-row stage (per-doc ARRAYS stage instead: same
+    // bytes, ~2 orders of magnitude fewer rows) and the scoring
+    // broadcast join over every gram occurrence; the per-doc
+    // aggregate sums one value per doc row, not one per gram
+    // occurrence. Bit-identical weights:
     // gram_hashes replays pmod(xxhash64(gram), buckets) exactly, the
     // gather-sum accumulates per-gram LLR terms in the same order the
     // exploded avg did (array order), and the driver composes
     // log/round through the same double arithmetic — pinned by
-    // GramHashParitySpec (driver-LM == forced-join equality) and the
-    // DsirSpec store-vs-select parity.
-    val toks = docs.select(id.as("doc_id"),
-      isTarget.cast("long").as("tgt"),
-      filter(split(lower(text), "[^a-z]+"), w => w =!= "").as("ws"))
-    val ba = concat(
-      graft.functions.GramHashFunctions
-        .gram_hashes(col("ws"), 1, buckets.toLong),
-      graft.functions.GramHashFunctions
-        .gram_hashes(col("ws"), 2, buckets.toLong))
+    // GramHashParitySpec (driver-LM == forced-join equality), the
+    // DsirSpec store-vs-select parity and DualPathProps.
+    //
     // filter AFTER the stage: pushed below the projection, the
     // deterministic size(concat(...)) predicate would re-inline the
     // gram pipeline and hash every doc twice (the SimHash64
@@ -294,7 +285,7 @@ object Sampling {
     // column read. Gramless docs drop out exactly as the exploded
     // shape dropped them (no rows from an empty array).
     val barr = graft.scale.Staging.materialize(
-      toks.select(col("doc_id"), col("tgt"), ba.as("ba")),
+      dsirBucketArrays(docs, id, text, isTarget, buckets),
       "dsir-gram-buckets")
       .filter(size(col("ba")) > 0)
     // bounded collect: <= `buckets` <= driverLmMaxBuckets rows (pmod
@@ -322,14 +313,18 @@ object Sampling {
       math.log((tTot + buckets).toDouble)
     val llrLit = typedLit(llr.toSeq)
     // staged: both the winners top-k and the output join consume the
-    // per-doc scores (doc-count-sized frame, the narrow-stage rule)
+    // per-doc scores (doc-count-sized frame, the narrow-stage rule).
+    // Rows sharing a doc_id pool their grams into one weight, as the
+    // join path's per-doc aggregate does; for a unique doc_id the sum
+    // of one gather-sum is that value, so weights stay bit-identical.
     val perDoc = graft.scale.Staging.materialize(
-      barr.select(col("doc_id"),
-        size(col("ba")).cast("long").as("n_grams"),
-        round(graft.functions.VectorFunctions
-            .vec_gather_sum(col("ba"), llrLit)
-          / size(col("ba")).cast("double") + lit(constTerm), 3)
-          .as("dsir_weight")),
+      barr.groupBy(col("doc_id"))
+        .agg(sum(size(col("ba"))).cast("long").as("n_grams"),
+          sum(graft.functions.VectorFunctions
+            .vec_gather_sum(col("ba"), llrLit)).as("llr_sum"))
+        .select(col("doc_id"), col("n_grams"),
+          round(col("llr_sum") / col("n_grams").cast("double")
+            + lit(constTerm), 3).as("dsir_weight")),
       "dsir-perdoc")
     dsirPickTopK(perDoc, k)
   }
@@ -375,26 +370,33 @@ object Sampling {
         coalesce(col("selected"), lit(0)).as("selected"))
   }
 
-  /** The DSIR featurization, shared by [[dsirSelect]] and the
-    * persisted-LM scorer: (doc_id, tgt, b) gram-bucket OCCURRENCES —
-    * unigrams ++ bigrams in ONE explode (Curation.wordNgrams emits
-    * empty for size<n, so short docs degrade correctly: a 1-word doc
-    * contributes its unigram only), bucket =
-    * pmod(xxhash64(gram), buckets). */
-  private[ops] def dsirGramBuckets(docs: DataFrame, id: Column,
+  /** The one DSIR featurization, shared by both [[dsirSelect]] paths
+    * and the persisted-LM fit and scorer: (doc_id, tgt, ba) with `ba`
+    * the doc's unigram ++ bigram buckets in array order (a 1-word doc
+    * contributes its unigram only), bucket = pmod(xxhash64(gram),
+    * buckets) for any positive `buckets` ([[graft.functions.GramHashes]]),
+    * and `tgt` 1 for a target doc, else 0 — a NULL `isTarget` counts
+    * as non-target, so every bucket LM count is a non-null long. */
+  private def dsirBucketArrays(docs: DataFrame, id: Column,
       text: Column, isTarget: Column, buckets: Int): DataFrame = {
-    require(buckets > 0 && (buckets & (buckets - 1)) == 0,
-      "dsir: buckets must be a power of two (pmod == low bits on both " +
-        "engines only when the modulus is a power of two)")
-    val toks = docs.select(id.as("doc_id"),
-      isTarget.cast("long").as("tgt"),
-      filter(split(lower(text), "[^a-z]+"), w => w =!= "").as("ws"))
-    toks.select(col("doc_id"), col("tgt"),
-      explode(concat(Curation.wordNgrams(col("ws"), 1),
-        Curation.wordNgrams(col("ws"), 2))).as("g"))
+    require(buckets > 0, s"dsir: buckets must be positive, got $buckets")
+    val ws = col("ws")
+    docs.select(id.as("doc_id"),
+        coalesce(isTarget.cast("long"), lit(0L)).as("tgt"),
+        filter(split(lower(text), "[^a-z]+"), w => w =!= "").as("ws"))
       .select(col("doc_id"), col("tgt"),
-        pmod(xxhash64(col("g")), lit(buckets.toLong)).as("b"))
+        concat(graft.functions.GramHashFunctions.gram_hashes(ws, 1,
+            buckets.toLong),
+          graft.functions.GramHashFunctions.gram_hashes(ws, 2,
+            buckets.toLong)).as("ba"))
   }
+
+  /** [[dsirBucketArrays]] as (doc_id, tgt, b) gram-bucket OCCURRENCES,
+    * the join path's and the persisted LM's row shape. */
+  private[ops] def dsirGramBuckets(docs: DataFrame, id: Column,
+      text: Column, isTarget: Column, buckets: Int): DataFrame =
+    dsirBucketArrays(docs, id, text, isTarget, buckets)
+      .select(col("doc_id"), col("tgt"), explode(col("ba")).as("b"))
 
   /** The DSIR per-doc weighing, shared by [[dsirSelect]] and the
     * persisted-LM scorer: LEFT join so a gram bucket the LM never saw

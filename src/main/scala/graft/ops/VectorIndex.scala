@@ -533,14 +533,8 @@ object VectorIndex {
         }
       }
     }
-    val qrows = queries.select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(Pq.MaxQueries + 1).collect()
-    require(qrows.length <= Pq.MaxQueries,
-      s"ivfpq: query set exceeds the ${Pq.MaxQueries} bounded-collect " +
-        "cap — pass the corpus as the corpus, not as queries")
-    val qids = qrows.map(_.getLong(0))
-    val qvecs = qrows.map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    val qnorms = qvecs.map(v => math.sqrt(v.map(x => x * x).sum))
+    val Pq.QueryVecs(qids, qvecs, qnorms) =
+      Pq.collectQueryVecs(queries, "ivfpq")
     val qdotcell = qvecs.map(qv => cents.map { c =>
       var acc = 0.0
       var d = 0
@@ -631,9 +625,9 @@ object VectorIndex {
     // one more scan + job per call. qnorms came from the same
     // ascending-index double accumulation vec_norm runs, so every
     // downstream sim is bit-identical.
-    val qside = qrows.toSeq.zipWithIndex.map { case (r, i) =>
-      (qids(i), r.getSeq[Float](1), qnorms(i))
-    }.toDF("query_id", "q_emb", "q_norm")
+    val qside = qids.indices
+      .map(i => (qids(i), qvecs(i).map(_.toFloat).toSeq, qnorms(i)))
+      .toDF("query_id", "q_emb", "q_norm")
     val shortRows = graft.scale.Staging.guardedBroadcast(shortlist)
       .join(rerankFloats, Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("c_emb"),
@@ -709,17 +703,17 @@ object VectorIndex {
     // order), so cell choice, q_norm, and every downstream sim are
     // bit-identical. Larger or null-carrying query sets keep the
     // distributed assignment.
-    val qhead = queries.select(col("vec_id"), col("embedding"))
-      .limit(Bm25.MaxBatchQueries + 1).collect()
-    val bounded = qhead.length <= Bm25.MaxBatchQueries &&
-      qhead.forall(r => !r.isNullAt(0) && !r.isNullAt(1))
-    val (q, probedCells): (DataFrame, Seq[Int]) = if (bounded) {
+    val qhead = graft.scale.Staging.boundedCollect(
+        queries.select(col("vec_id"), col("embedding")),
+        Bm25.MaxBatchQueries)
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    val (q, probedCells): (DataFrame, Seq[Int]) = if (qhead.isDefined) {
       import spark.implicits._
       val assigner = graft.functions.CentroidTopCells(
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           null, org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType)), bc, nProbe)
-      val rows = qhead.toSeq.flatMap { r =>
+      val rows = qhead.get.toSeq.flatMap { r =>
         val id = r.getLong(0)
         val e = r.getSeq[Float](1)
         val arr = e.toArray

@@ -156,11 +156,11 @@ object RetrievalPipeline {
   def denseHalf(spark: SparkSession, ivfPath: String,
       queries: DataFrame, perList: Int, nProbe: Int): DataFrame = {
     import spark.implicits._
-    val qrows = queries.select(col("query_id"), col("embedding"))
-      .limit(Bm25.MaxBatchQueries + 1).collect()
-    require(qrows.length <= Bm25.MaxBatchQueries,
-      s"hybrid batch: query set exceeds the ${Bm25.MaxBatchQueries} " +
-        "bounded-collect cap")
+    val qrows = graft.scale.Staging.boundedCollect(
+        queries.select(col("query_id"), col("embedding")),
+        Bm25.MaxBatchQueries)
+      .getOrElse(throw new IllegalArgumentException("hybrid batch: " +
+        s"query set exceeds the ${Bm25.MaxBatchQueries} bounded-collect cap"))
     // synthetic probe ids: SyntheticBase + position. queryIvf excludes
     // neighbor == query id (self-exclusion), so probe ids must be
     // DISJOINT from corpus vec_ids — a collision would silently hide

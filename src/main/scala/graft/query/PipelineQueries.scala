@@ -162,8 +162,8 @@ object PipelineQueries {
     // Same anchor cap as embedding_neardup_oracle (no-op at sf0.01).
     // pointerDoubling OFF (round-15 optimization): the near-dup pair
     // graph is a union of small cliques, where the jump join saves no
-    // rounds and costs one join per round (measured by graft.CompExp:
-    // 5 rounds either way at sf0.1, ~25% cheaper per round without).
+    // rounds and costs one join per round (measured at sf0.1: 5
+    // rounds either way, ~25% cheaper per round without).
     // The converged labels are the same unique fixpoint either way —
     // and since round 16, OFF means "start linear, switch to doubling
     // adaptively" (Components.AdaptiveDoublingAfter), so a deep

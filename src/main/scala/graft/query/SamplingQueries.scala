@@ -176,7 +176,13 @@ object SamplingQueries {
   )
 
   private val DsirTargets = Seq("src0", "src1")
+  /** The oracle replays the bucket as `xh.h % DsirBuckets` over the
+    * UBIGINT hash, which equals Spark's signed pmod only when the
+    * modulus is a power of two; Sampling itself takes any positive
+    * bucket count. */
   private val DsirBuckets = 4096
+  require((DsirBuckets & (DsirBuckets - 1)) == 0,
+    "DsirBuckets must be a power of two for the oracle's UBIGINT modulo")
   private val DsirK = 50
   private val TargetedCapN = 15   // per-source cap before selection
   private val TargetedK = 100     // DSIR winners that get packed

@@ -1,12 +1,12 @@
 package graft.scale
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.broadcast
 
 /** Scale-safety primitives for composed pipelines: shared-scan
-  * materialization and size-guarded broadcasts.
+  * materialization, bounded driver reads and size-guarded broadcasts.
   *
-  * Both exist because a plan that is fine at test scale can be the
+  * They exist because a plan that is fine at test scale can be the
   * wrong plan at corpus scale: an eager `localCheckpoint` pins blocks
   * to specific executors (an executor loss makes them unrecoverable —
   * the lineage was truncated, so the job dies), and an unconditional
@@ -104,6 +104,17 @@ object Staging {
     val fbF = Future(fb)
     val a = fa
     (a, Await.result(fbF, Duration.Inf))
+  }
+
+  /** The bounded driver read behind every "small rows on the driver,
+    * the distributed plan at scale" shortcut: at most `cap` rows of
+    * `df`, or None when `df` holds more. The `limit(cap + 1)` probe
+    * short-circuits, so a corpus-scale input reads cap + 1 rows, never
+    * the whole frame. Callers decide what "over the cap" means: fall
+    * back to the distributed plan, or refuse the input. */
+  def boundedCollect(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length <= cap) Some(rows) else None
   }
 
   /** Broadcast `side` only while its row count is at or under

@@ -17,7 +17,9 @@ import graft.ops.{Curation, Sampling}
   *    ([[Sampling.dsirSelectJoin]] via `driverLmMaxBuckets = 0`) on a
   *    mixed corpus — the end-to-end equality the oracle hash gate
   *    relies on, and the coverage that keeps the 100 TB wide-LM shape
-  *    exercised.
+  *    exercised — plus two regression inputs: a bucket whose every
+  *    occurrence has a NULL `isTarget` (non-target on both paths), and
+  *    a bucket count that is not a power of two.
   */
 class GramHashParitySpec extends SparkSpec {
   import spark.implicits._
@@ -95,17 +97,29 @@ class GramHashParitySpec extends SparkSpec {
     Seq((30L, "tq tw te tw tq te tw", "r"), (31L, "", "r"))
   ).toDF("doc_id", "text", "source")
 
+  // "zz" and "zz yy" occur only in docs whose source is NULL, so
+  // their buckets' every occurrence carries a NULL isTarget
+  private lazy val nullTargetCorpus = corpus.union(
+    Seq((40L, "zz yy zz"), (41L, "zz tq"), (42L, ""))
+      .toDF("doc_id", "text").withColumn("source", lit(null).cast("string")))
+
   test("dsirSelect driver-LM path == forced join path, bit-identical") {
-    def rows(driverMax: Int) =
-      Sampling.dsirSelect(corpus, col("doc_id"), col("text"),
-          col("source") === "t", 4096, 5, driverLmMaxBuckets = driverMax)
+    def rows(docs: org.apache.spark.sql.DataFrame, buckets: Int,
+        driverMax: Int) =
+      Sampling.dsirSelect(docs, col("doc_id"), col("text"),
+          col("source") === "t", buckets, 5,
+          driverLmMaxBuckets = driverMax)
         .orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1),
           java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
         .toSeq
-    val fast = rows(Sampling.DsirDriverLmMaxBuckets)
-    val join = rows(0) // forces dsirSelectJoin
-    assert(fast == join)
-    assert(fast.nonEmpty)
+    for ((docs, buckets, what) <- Seq((corpus, 4096, "mixed corpus"),
+        (nullTargetCorpus, 4096, "all-NULL-isTarget bucket"),
+        (corpus, 3000, "non-power-of-two buckets"))) {
+      val fast = rows(docs, buckets, Sampling.DsirDriverLmMaxBuckets)
+      val join = rows(docs, buckets, 0) // forces dsirSelectJoin
+      assert(fast == join, what)
+      assert(fast.nonEmpty, what)
+    }
   }
 }

@@ -42,4 +42,25 @@ class DictSpec extends SparkSpec {
       Dict.fromTable(big, "k", "v", maxEntries = 10)
     }
   }
+
+  test("the size guard reads at most maxEntries + 1 rows") {
+    def table(n: Int) = spark.range(0, n).selectExpr("id AS k", "id AS v")
+    // exactly at the bound still builds; one past it is refused
+    assert(Seq(9L).toDF("k").select(Dict.get(
+      Dict.fromTable(table(10), "k", "v", maxEntries = 10), col("k")))
+      .head().getString(0) == "9")
+    val err = intercept[IllegalArgumentException] {
+      Dict.fromTable(table(11), "k", "v", maxEntries = 10)
+    }
+    assert(err.getMessage.contains(
+      "use a broadcast join for tables this large"), err.getMessage)
+    // a large table's refused collect is limited, not a full-table read
+    val plans = plansDuring {
+      intercept[IllegalArgumentException] {
+        Dict.fromTable(table(5000), "k", "v", maxEntries = 10)
+      }
+    }
+    assert(plans.exists(_.contains("CollectLimit 11")),
+      plans.mkString("\n---\n"))
+  }
 }
