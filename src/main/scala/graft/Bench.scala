@@ -1,562 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+import graft.obs.Health
 
 /** Benchmark main. Publishes one JSON line (driver contract) plus a
   * richer BENCH_QUERIES.json artifact.
   *
-  * Round-10 measurement protocol (the round-9 verdict's #1): the
-  * official driver window recorded 85.4 s where the committed
-  * same-code record was 55.1 s, with a sustained additive
-  * ~+0.5 s/query tail on 15 unchanged queries at low loadavg —
-  * neither a spike nor visible CPU contention, so the artifact could
-  * not distinguish "code regressed" from "environment degraded".
-  * This run now measures the environment alongside the queries:
+  * Every registered query is timed on its WHOLE result:
+  * [[materialize]] collects every output column after the final ORDER
+  * BY, the shape a dashboard read serves. A `count()` would let
+  * Catalyst prune the sort, the unused columns and the unused
+  * aggregates, and time a different plan (1.1-4.2x faster on the
+  * perfbench surface entries, `perfbench/NOTES.md`).
   *
-  *  - a fixed CANARY query (`window_running_sum`, historically
-  *    stable, committed median 0.121 s) is timed before every bench
-  *    entry; its series is an environment-health time-axis across the
-  *    run. An elevated canary with unchanged code = degraded window.
-  *  - every timed pass snapshots the JVM GC-time delta and the
-  *    process's actual-disk read bytes (/proc/self/io read_bytes —
-  *    zero when parquet comes from page cache, large when the cache
-  *    is cold/evicted), the two candidate causes of an additive
-  *    per-pass cost that loadavg cannot see.
-  *  - three committed-median PINS (replacing_latest, mv_daily_rollup,
-  *    topk_limit — the cheapest, most scan-shaped of the degraded 15)
-  *    gate the published medians at 3x; a violation triggers one
-  *    bounded re-measure round at end-of-run (canary-suspect entries
-  *    are re-measured too, when the canary itself has recovered), and
-  *    whatever still violates is published with `degraded:true` and
-  *    its telemetry instead of silently inflating the record.
-  *
-  * Round-11 additions (the round-10 verdict's #1: the r10 driver
-  * window inflated 2-5x on five unchanged tokenize-heavy queries
-  * while the shuffle-shaped canary read BELOW baseline and every pin
-  * held — the protocol instrumented the wrong phase):
-  *
-  *  - a second, CPU/string-bound CANARY ([[cpuCanaryOnce]]): a pure-
-  *    JVM fixed-work microbench (regex word split + XXH64 token and
-  *    gram hashing over a seeded corpus — the Dedup/TextAnalysis/
-  *    Curation hot loop in miniature), timed before every entry
-  *    beside the Spark canary. It sees exactly the phase the shuffle
-  *    canary is blind to.
-  *  - an ABSOLUTE suspects rule ([[Committed]]): the five round-10
-  *    movers are gated against their committed same-code medians —
-  *    2x over committed = re-measure at end-of-run even when no
-  *    intra-run rule fired, and `elevated` in the artifact (with CPU-
-  *    canary telemetry) when the re-measure doesn't re-land them.
-  *  - failed passes are recorded but excluded from every statistic
-  *    ([[Pass.failed]], round-10 ADVICE — a crashed pass published
-  *    its near-zero failure time, and publishedOf could prefer it).
-  *  - `store_build_s` (round-10 verdict #6): each pre-built store's
-  *    ensure cost is timed into the artifact with a store→queries
-  *    map, so an ensure-backed query's inflation is attributable to
-  *    build vs probe without a bisect.
-  *
-  * Round-12 additions (the round-11 verdict's #1/#4: three weak marks
-  * evaded the absolute rule — two had no committed median, one sat at
-  * 1.74x under the 2x gate — and the two high-variance entries had no
-  * in-artifact attribution):
-  *
-  *  - [[Committed]] extended to the ENTIRE expensive tail (40
-  *    entries, seeded from the 69.9 s healthy-window record) and
-  *    [[AbsoluteFactor]] tightened to 1.5x.
-  *  - per-pass PHASE attribution ([[graft.query.PipelineQueries
-  *    .phaseProbes]]): each published pass of
-  *    `retrieval_service_cap` / `dedup_components_lsh` is followed by
-  *    one timed run of each sub-phase (the query's own halves); the
-  *    seconds land in the artifact's `phases` field and are never
-  *    added to the published time or total.
-  *
-  * Round-14 additions (the round-13 verdict's #1/#3: four >=3x driver
-  * movers — curation_seq_packing 19.4x among them — escaped the
-  * absolute rule because only the expensive tail carried committed
-  * medians, and the r13 driver artifact's in-run canary baseline was
-  * measured in a degraded moment at 1.264 s, 10x committed, defanging
-  * the per-entry 2x rule for the whole window):
-  *
-  *  - [[Committed]] now covers EVERY registered query (seeded from
-  *    the 84.3 s zero-elevated r13 closing artifact; pre-existing
-  *    entries keep their earlier, lower values), and the absolute
-  *    gate is `max(AbsoluteFactor x, + AbsoluteSlackSec)` so full
-  *    coverage doesn't turn sub-0.3 s host wobbles into flag churn.
-  *  - the operative canary baselines are the COMMITTED constants
-  *    ([[CanaryBaselineCommitted]]/[[CpuCanaryBaselineCommitted]]);
-  *    the start-of-run measurement is a bounded startup delay gate
-  *    (a run whose fresh baseline reads >2x committed waits, up to
-  *    [[MaxRecoveryAttempts]] x [[RecoveryWaitMs]], before starting)
-  *    plus `baseline_measured`/`startup_waits` telemetry.
+  * Each query is the median of 3 timed passes; a pass that threw is
+  * recorded and excluded from every statistic. The run judges its own
+  * health: a [[graft.obs.Health.Monitor]] records task CPU, task run,
+  * steal and iowait over every timed pass, and
+  * [[graft.obs.Health.degraded]] over the summed record sets the
+  * published `degraded` flag. Per-pass loadavg, GC seconds, disk-read
+  * MB and the health record stay in the artifact file, so a slow entry
+  * is attributable to host, heap or page cache without a re-run.
   */
 object Bench {
 
-  /** Committed same-code medians (sf0.1, git 437c372 closing window)
-    * for the pin queries — the reference the artifact is gated
-    * against. 3x is far above same-code run-to-run spread (<1.3x
-    * across the round-9 51.7-61.0 s windows) and far below the
-    * 5-12x driver-window inflation this protocol exists to catch. */
-  val Pins: Map[String, Double] = Map(
-    "replacing_latest" -> 0.271,
-    "mv_daily_rollup" -> 0.142,
-    "topk_limit" -> 0.091)
-  val PinFactor = 3.0
-
-  val CanaryName = "window_running_sum"
-  /** Cross-run committed canary baselines — the OPERATIVE health
-    * references (round-13 VERDICT #3: the r13 driver artifact carried
-    * an in-run baseline of 1.264 s, 10x every committed value, because
-    * a start-of-run measurement taken in a degraded moment became the
-    * whole run's reference and defanged the 2x suspect rule for the
-    * entire window). The in-run measurement is now only (a) a startup
-    * sanity gate — a run whose fresh baseline exceeds 2x committed
-    * DELAYS, bounded, instead of starting degraded — and (b)
-    * telemetry (`baseline_measured` in the artifact). Re-seed these
-    * constants ONLY through the committed-medians path: a value from
-    * a healthy zero-elevated closing window, never mid-run. */
-  val CanaryBaselineCommitted = 0.121
-  /** Committed steady-state CPU-canary seconds (min across the r12/13
-    * healthy closing artifacts: 0.009-0.011). Same provenance rule as
-    * [[CanaryBaselineCommitted]]. */
-  val CpuCanaryBaselineCommitted = 0.010
-
-  /** Host-calibration escape hatch (round-14 ADVICE): the committed
-    * canary constants are reference-machine values; on a uniformly
-    * slower host the startup gate would burn its full bounded wait and
-    * every entry would read canary-suspect (bounded by the ranked
-    * re-measure cap, but the whole artifact reads degraded). Setting
-    * `SPARK_GRAFT_CANARY_BASELINE` / `SPARK_GRAFT_CPU_CANARY_BASELINE`
-    * (seconds) re-seeds the operative baselines for THAT host — the
-    * artifact still publishes whatever baseline was used, so a reader
-    * can tell a re-calibrated run from a reference one. The committed
-    * constants in code only ever change through the healthy
-    * zero-elevated-closing-window rule above; the env override exists
-    * so the harness stays usable off the reference machine without
-    * touching them. Unparseable values are ignored (never let a typo
-    * silently zero the gate). */
-  private def envBaseline(name: String, committed: Double): Double =
-    sys.env.get(name).flatMap(_.toDoubleOption).filter(_ > 0)
-      .getOrElse(committed)
-  def canaryBaselineOperative: Double =
-    envBaseline("SPARK_GRAFT_CANARY_BASELINE", CanaryBaselineCommitted)
-  def cpuCanaryBaselineOperative: Double =
-    envBaseline("SPARK_GRAFT_CPU_CANARY_BASELINE",
-      CpuCanaryBaselineCommitted)
-
-  /** Committed same-code sf0.1 medians for the tokenize/CPU-heavy
-    * family the round-10 driver window inflated 2-5x on while the
-    * shuffle-shaped canary read BELOW baseline and every pin held —
-    * the CPU-phase blind spot (round-10 VERDICT #1). Values are the
-    * round-9/10 committed records the judge marked these `weak`
-    * against. Used by the ABSOLUTE suspects rule: a first-pass median
-    * over [[AbsoluteFactor]]x its committed value is re-measured at
-    * end-of-run even when no canary or pin fired (the round-10 movers
-    * evaded the intra-run rules entirely), and whatever is still
-    * elevated after the re-measure is published in `elevated` with
-    * its CPU-canary telemetry instead of silently standing. */
-  val Committed: Map[String, Double] = Map(
-    // round-10/11 movers (original absolute-rule members)
-    // re-seeded r16 session 2: per-doc hash-array stage (0.822
-    // zero-elevated closing window, widened toward the 1.10 Scratch
-    // median on a loaded host)
-    "curation_repeated_spans" -> 0.95,
-    "dedup_ngram_jaccard" -> 0.84,
-    "dedup_simhash" -> 0.99,
-    "agg_cms_state_rollup" -> 0.14,
-    "dict_get_nation" -> 0.20,
-    // round-12 extension (round-11 VERDICT #1): the ENTIRE expensive
-    // tail — every query whose healthy-window median exceeded ~0.55 s
-    // — now carries a committed median, seeded from the 69.9 s / 163
-    // round-11 closing record (git fee0a5a, canary 0.096/0.104, CPU
-    // canary 0.010/0.012). The three r11 weak marks evaded the rule
-    // for lack of a committed value or because 1.74x < the old 2x
-    // gate; with the tail covered and the gate at 1.5x, an elevation
-    // like any of them is re-measured and surfaced with telemetry.
-    // re-seeded r16: mask-pivot tail + concurrent halves shape.
-    // 67.2 s zero-elevated closing window value 1.632, inflated by
-    // that window's 0.089/0.121 canary-fast ratio (the same
-    // canary-relative adjustment the r13-window seeds used in the
-    // other direction) = 2.2, then widened to the same-code
-    // cross-window spread this entry showed within round 16
-    // (1.63-3.34 across four windows at canaries 0.089-0.151): the
-    // seed is the spread's center, not its floor, so a mediocre but
-    // healthy window doesn't false-flag the new shape. Still 48%
-    // tighter than the old 4.81.
-    "retrieval_service_cap" -> 2.5,
-    // re-seeded r16 session 2: one-text-scan gram-array fuse (1.515
-    // closing window / 2.09 loaded-host Scratch median)
-    "pipeline_pretraining_corpus" -> 1.80,
-    "pipeline_corpus_curation" -> 1.75,
-    "dedup_components_lsh" -> 0.64, // re-seeded r16: bounded driver union-find (0.472 closing x canary ratio)
-    // re-seeded r16 session 2: local gram dedup, no distinct state
-    // (1.039 closing window / 1.06 Scratch median)
-    "curation_boilerplate" -> 1.05,
-    "retrieval_hybrid_rrf_batch" -> 1.28,
-    "dedup_components_oracle" -> 0.48, // re-seeded r16: bounded driver union-find (0.355 closing x canary ratio)
-    "sim_cosine_ivfpq" -> 1.21,
-    "q21_waiting_supplier" -> 1.21,
-    "retrieval_hybrid_indexed_batch" -> 1.18,
-    "curation_decontaminate" -> 1.13,
-    "q2_min_cost_supplier" -> 1.08,
-    "q10_returned_items" -> 0.96,
-    "retrieval_bm25_batch" -> 0.95,
-    "retrieval_hybrid_rrf" -> 0.94,
-    "dedup_edit_sim_oracle" -> 0.90,
-    "dedup_drop_neardups" -> 0.90,
-    "topk_weighted_parts" -> 0.86,
-    "q8_market_share" -> 0.85,
-    "dedup_incoming_store" -> 0.84,
-    "q7_nation_volume" -> 0.83,
-    "q9_product_profit" -> 0.80,
-    "q18_large_orders" -> 0.79,
-    "sample_quality_buckets" -> 0.72,
-    "retrieval_bm25" -> 0.70,
-    "q4_priority_checking" -> 0.64,
-    "q5_regional_revenue" -> 0.64,
-    "dedup_semantic_cells" -> 0.63,
-    "retrieval_bm25_indexed_batch" -> 0.62,
-    "sim_cosine_ivf_indexed" -> 0.61,
-    "text_unigram_loglik" -> 0.58,
-    "retrieval_bm25_pruned" -> 0.58,
-    "curation_cut_spans" -> 0.57,
-    "q20_excess_supplier" -> 0.56,
-    "text_token_skip_search" -> 0.56,
-    // round-12 additions, seeded from the 68.9 s / 172 closing window
-    // (canary 0.087/0.096, CPU canary 0.010/0.011, zero suspects)
-    "retrieval_service_cap_cached" -> 1.46,
-    "dedup_image_phash" -> 0.55,
-    "multimodal_png_resize" -> 0.55,
-    "dedup_image_phash_near" -> 0.74,
-    // round-13 extension (round-12 VERDICT #3): every query that has
-    // moved >= 3x between any two driver windows now carries a
-    // committed median REGARDLESS of absolute cost — setop_intersect
-    // (0.28 -> 1.59 on unchanged code) and q19_bundle_revenue
-    // (0.25 -> 1.12) evaded the absolute rule for lack of a baseline
-    // because they sit under the old ~0.55 s tail threshold. Values
-    // from the same 68.9 s zero-suspect closing window; movers list
-    // from the BENCH_r*.json history (r9-r12 stable-code windows)
-    // plus the r12 driver suspects that had no medians.
-    "setop_intersect" -> 0.276,
-    "setop_except" -> 0.25,
-    "q19_bundle_revenue" -> 0.245,
-    "json_props_extract" -> 0.312,
-    "vocab_topk" -> 0.249,
-    "vocab_topk_bpe" -> 0.177,
-    "q11_important_parts" -> 0.454,
-    "retention_cohort" -> 0.233,
-    "text_ngram_skip_search" -> 0.291,
-    "sample_stratified_lang" -> 0.29, // re-seeded r14: heap+semi-join shape (old window 0.137)
-    "sample_split_8020" -> 0.138,
-    "sample_epoch_order" -> 0.17, // re-seeded r14: heap-head shape (old window 0.135)
-    "window_rank_family" -> 0.331,
-    "sim_cosine_lsh" -> 0.285,
-    // round-13's own >0.55 s addition, seeded from the 68.6 s / 174
-    // healthy window (canary 0.089/0.094, CPU 0.010/0.011, the
-    // round's one suspect auto-remeasured and re-landed)
-    "multimodal_jpeg_stats" -> 0.59,
-    // round-13 second session: the two new entries above the tail
-    // threshold — DSIR seeded from the better of its two first armed
-    // windows (1.515 at loadavg 0.94 / 1.917 at 1.84; both
-    // zero-elevated), the targeted capstone from its first
-    // zero-elevated window (84.3 s / 185, json_props_extract
-    // re-landed in the same window)
-    // re-seeded r16 session 2: driver-LM gather-sum scoring (0.523
-    // closing window / 0.64 Scratch median; seed between)
-    "sample_dsir_select" -> 0.60,
-    // re-seeded r16 session 2: rides the DSIR driver-LM path (0.845
-    // closing window / 1.18 loaded-host Scratch median)
-    "pipeline_targeted_corpus" -> 1.00,
-    // round-14 extension (round-13 VERDICT #1): EVERY query now
-    // carries a committed median — curation_seq_packing's 19.4x
-    // driver-window step (0.134 -> 2.605 s, tight low-load passes,
-    // builder same-code window 0.144) plus doc_fingerprint (4.9x),
-    // agg_quantile_deterministic (3.6x) and multimodal_frames (3.3x)
-    // all escaped the absolute rule because only the expensive tail
-    // was covered. Entries below are seeded from the 84.3 s / 185
-    // zero-elevated round-13 closing artifact (git 2b229c0, canary
-    // 0.107/0.110/0.124, loadavg healthy); queries already covered
-    // above KEEP their earlier-era (lower) values — a slower week
-    // must not ratchet the gate. With full coverage the gate needs
-    // the +[[AbsoluteSlackSec]] small-entry guard: sub-0.3 s entries
-    // trade ±80 ms wobbles window to window, and a pure 1.5x factor
-    // on a 0.1 s median would flag plain host noise.
-    // the two post-artifact window additions were seeded from the r13
-    // driver window's 0.362/0.421 deflated by that window's 1.28x
-    // canary slowness; the first healthy round-14 window (93.5 s /
-    // 187, canary median 0.122 = committed, zero elevated) measured
-    // 0.316/0.355 — consistent, and the stricter synthetic seeds keep
-    // the gate at max(1.5x, +0.3 s) = 0.58/0.63 with healthy margin
-    "window_ratio_to_report" -> 0.283,
-    "window_sliding_uniques" -> 0.329,
-    "agg_approx_sketches" -> 0.17,
-    "agg_argmax" -> 0.136,
-    "agg_conditional_if" -> 0.174,
-    "agg_cube_distinct" -> 0.409,
-    "agg_delta_sum" -> 0.159,
-    "agg_entropy_linreg" -> 0.201,
-    "agg_exact_median" -> 0.164,
-    "agg_grouping_sets" -> 0.175,
-    "agg_histogram" -> 0.257,
-    "agg_hll_state_rollup" -> 0.145,
-    "agg_minmax_having" -> 0.464,
-    "agg_quantile_deterministic" -> 0.166,
-    "agg_quantile_state_rollup" -> 0.185,
-    "agg_quantiles_multi" -> 0.48, // re-seeded r14: rank-locate shape, two pruned scans (old window 0.176)
-    "agg_rollup_time" -> 0.355,
-    "agg_stats_funcs" -> 0.164,
-    "agg_string_concat" -> 0.155,
-    "agg_sum_map" -> 0.421,
-    "agg_uniq_upto" -> 0.31,
-    "corpus_profile" -> 0.152,
-    "curation_boilerplate_frac" -> 0.123,
-    "curation_chunk_overlap" -> 0.127,
-    "curation_doc_repetition" -> 0.116,
-    "curation_fim_split" -> 0.112,
-    "curation_pack_bpe" -> 0.256, // re-seeded r14: two-phase packing shape (old-shape 0.116)
-    "curation_seq_packing" -> 0.335, // re-seeded r14: two-phase packing shape (old-shape 0.144)
-    "curation_source_cap" -> 0.146,
-    "curation_span_corruption" -> 0.15,
-    "dedup_audio_fp" -> 0.257,
-    "dedup_audio_fp_near" -> 0.75,
-    "dedup_exact" -> 0.206,
-    "dedup_video_near" -> 0.602,
-    "doc_fingerprint" -> 0.116,
-    "emb_label_centroids" -> 0.23,
-    "embedding_neardup_lsh" -> 0.409,
-    "embedding_neardup_oracle" -> 0.331,
-    "enum_name_to_code" -> 0.149,
-    "events_bloom_skip_lookup" -> 0.227,
-    "events_point_lookup" -> 0.116,
-    "events_point_lookup_sql" -> 0.146,
-    "funnel_step_durations" -> 0.165,
-    "funnel_steps" -> 0.432,
-    "funnel_steps_fold" -> 0.37,
-    "funnel_steps_strict" -> 0.379,
-    "hopping_rollup" -> 0.199,
-    "hourly_rollup" -> 0.26,
-    "interval_concurrency" -> 0.71, // re-seeded r14: two-phase sweep (staged bounds; old window 0.456)
-    "join_anti_not_exists" -> 0.287,
-    "join_asof_prev_click" -> 0.185,
-    "join_bloom_prune" -> 0.592,
-    "join_cross_dims" -> 0.255,
-    "join_full_outer" -> 0.235,
-    "join_left_outer" -> 0.23,
-    "join_semi_exists" -> 0.278,
-    "multimodal_audio_fp" -> 0.225,
-    "multimodal_bmp_resize" -> 0.124,
-    "multimodal_bmp_stats" -> 0.133,
-    "multimodal_bytes" -> 0.098,
-    "multimodal_features" -> 0.255,
-    "multimodal_frames" -> 0.155,
-    "multimodal_jpeg_resize" -> 0.915,
-    "multimodal_phash" -> 0.352,
-    "multimodal_png_stats" -> 0.391,
-    "multimodal_quality_gate" -> 0.472,
-    "multimodal_wav_stats" -> 0.117,
-    "mv_daily_rollup" -> 0.221,
-    "mv_level_totals" -> 0.128,
-    "partition_key_yyyymmdd" -> 0.27,
-    "pivot_status_counts" -> 0.148,
-    "pred_in_like_range" -> 0.231,
-    "q12_late_priority" -> 0.564,
-    "q13_custdist" -> 0.496,
-    "q14_promo_effect" -> 0.298,
-    "q15_top_supplier" -> 0.343,
-    "q16_supplier_spec_count" -> 0.354,
-    "q17_small_qty_revenue" -> 0.404,
-    "q1_pricing_summary" -> 0.164,
-    "q22_dormant_customers" -> 0.49,
-    "q3_shipping_priority" -> 0.534,
-    "q6_forecast_revenue" -> 0.122,
-    "quality_outliers_mad" -> 0.295,
-    "range_join_price_bands" -> 0.179,
-    "replacing_latest" -> 0.251,
-    "retrieval_bm25_cached_batch" -> 0.342,
-    "retrieval_bm25_indexed" -> 0.436,
-    "retrieval_bm25_phrase" -> 0.558,
-    "sample_clause_estimate" -> 0.258,
-    "sample_mixture_bpe" -> 0.339,
-    "sample_mixture_lang" -> 0.22,
-    "sample_temperature_lang" -> 0.245,
-    "scalar_array_hofs" -> 0.166,
-    "scalar_date_parts" -> 0.189,
-    "scalar_string_funcs" -> 0.115,
-    "sequence_count_chains" -> 0.142,
-    "sequence_match_users" -> 0.145,
-    "session_gap" -> 0.304,
-    "session_window_native" -> 0.336,
-    "setop_union" -> 0.205,
-    "sim_cosine_ivf" -> 0.249,
-    "sim_cosine_ivf_full" -> 0.552,
-    "sim_cosine_lsh_exhaustive" -> 0.439,
-    "sim_cosine_pq" -> 0.442,
-    "sim_cosine_topk" -> 0.33,
-    "sim_cosine_topk_int8" -> 0.321,
-    "subquery_scalar_correlated" -> 0.579,
-    "text_compression_ratio" -> 0.12,
-    "text_hashing_features" -> 0.556,
-    "text_lang_id" -> 0.101,
-    "text_linear_score" -> 0.205,
-    "text_pii_scrub" -> 0.117,
-    "text_quality" -> 0.132,
-    "text_token_count" -> 0.105,
-    "text_token_count_bpe" -> 0.106,
-    "timeseries_fill_hours" -> 0.215,
-    "topk_limit" -> 0.104,
-    "unpivot_lineitem_measures" -> 0.135,
-    "vocab_topk_approx" -> 0.242,
-    "window_gap_fill" -> 0.325,
-    "window_interpolate" -> 0.284,
-    "window_lag_lead" -> 0.11,
-    "window_range_frame" -> 0.091,
-    "window_rank_topn" -> 0.384,
-    "window_running_sum" -> 0.107,
-    "window_value_family" -> 0.124)
-  /** 1.5x (was 2.0x, round-11 VERDICT #1: curation_repeated_spans at
-    * 1.74x over its committed median with BOTH canaries healthy slid
-    * under the 2x gate three rounds running). Same-code run-to-run
-    * spread at healthy canaries is <1.3x; 1.5x leaves margin over
-    * that while catching the sub-2x drift the old gate missed. */
-  val AbsoluteFactor = 1.5
-
-  /** Small-entry guard for the full-coverage gate (round-13 VERDICT
-    * #1: "flag any driver value > max(1.5x, +0.3 s)"): with a
-    * committed median for every query, a pure factor rule would flag
-    * every ±80 ms wobble on the sub-0.3 s entries (the
-    * json_props_extract/agg_cms churn NOTES round 13 documents), so
-    * an entry is suspect only past BOTH the factor and an absolute
-    * +0.3 s step. For the expensive tail the factor dominates and the
-    * gate is unchanged; for a 0.1 s query the threshold is 0.4 s —
-    * still far below any real mover (doc_fingerprint's unflagged r13
-    * step was 0.088 -> 0.432). */
-  val AbsoluteSlackSec = 0.3
-
-  /** Armed at the committed scale only, like [[Pins]]. */
-  def isAbsoluteSuspect(name: String, median: Double,
-      armed: Boolean): Boolean =
-    armed && Committed.get(name).exists(c =>
-      median > math.max(c * AbsoluteFactor, c + AbsoluteSlackSec))
-
-  // ---- CPU canary: a pure-JVM, Spark-free, fixed-work microbench in
-  // the exact phase the Spark canary is blind to. window_running_sum
-  // is shuffle/scan-shaped; the round-10 driver window degraded ONLY
-  // in the CPU-bound string-tokenization phase (regex split + per-
-  // token/gram hashing) and the canary read healthy throughout. This
-  // loop is that phase in miniature: regex word split + XXH64 over
-  // tokens + a per-character rolling-hash pass (one hashLong per
-  // position, chained through the previous hash; the j+4 bound only
-  // skips the last 3 chars — round-11 ADVICE: this is NOT a 4-char-
-  // window hash, and as a fixed canary it doesn't need to be) — the
-  // Dedup/TextAnalysis/Curation hot loop — over a fixed seeded
-  // corpus. Its seconds track
-  // the host's effective CPU speed for string work; an elevated CPU
-  // canary with a healthy Spark canary = CPU-phase host contention.
-
-  @volatile private var cpuBlackhole: Long = 0L
-
-  private lazy val cpuCanaryDocs: Array[String] = {
-    val rnd = new scala.util.Random(42)
-    val words = Array("alpha", "bravo", "charlie", "delta", "echo",
-      "foxtrot", "golf", "hotel", "india", "juliet", "kilo", "lima",
-      "mike", "november", "oscar", "papa", "quebec", "romeo")
-    Array.fill(4000)(
-      Seq.fill(12)(words(rnd.nextInt(words.length))).mkString(" "))
-  }
-
-  /** One CPU-canary run: seconds for the fixed string workload. */
-  def cpuCanaryOnce(): Double = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
-    val t0 = System.nanoTime()
-    var black = 0L
-    var d = 0
-    while (d < cpuCanaryDocs.length) {
-      val s = cpuCanaryDocs(d)
-      val toks = s.split("\\W+")
-      var i = 0
-      while (i < toks.length) {
-        black ^= XXH64.hashUTF8String(UTF8String.fromString(toks(i)), 42L)
-        i += 1
-      }
-      var j = 0
-      while (j + 4 <= s.length) {
-        black = XXH64.hashLong(s.charAt(j).toLong ^ (black << 1), black)
-        j += 1
-      }
-      d += 1
-    }
-    cpuBlackhole = black
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  // ---- protocol decision table (pure; spec-pinned in
-  // BenchProtocolSpec so the measurement policy can't drift silently)
-
-  /** Pins arm only at the EXACT scale they were recorded at — a
-    * basename match, not a substring: ".../sf0.12" or ".../sf0.1_old"
-    * must not arm sf0.1 pins (review-caught). */
-  def pinsArmedFor(sfDir: String): Boolean =
-    new java.io.File(sfDir.stripSuffix("/")).getName == "sf0.1"
-
-  /** A pinned query published over [[PinFactor]]x its committed
-    * median (while armed) is a protocol violation. */
-  def isPinViolation(name: String, median: Double,
-      armed: Boolean): Boolean =
-    armed && Pins.get(name).exists(p => median > p * PinFactor)
-
-  /** An entry whose pre-entry canary ran >= 2x the in-run baseline
-    * was timed inside a degraded window — re-measure candidate. */
-  def isCanarySuspect(canarySec: Double, baseline: Double): Boolean =
-    canarySec >= baseline * 2.0
-
-  /** Re-measuring only makes sense once the environment has settled
-    * back near the baseline; inside a still-degraded window it would
-    * re-measure the same bad environment. */
-  def canaryRecoveredAt(canaryNow: Double, baseline: Double): Boolean =
-    canaryNow <= baseline * 1.5
-
-  /** Bounded wait-for-recovery before the suspects re-measure
-    * (round-12 VERDICT #1): up to 5 x 45 s of sleep-and-re-probe when
-    * suspects exist but a canary is still elevated at end-of-run —
-    * one reading gave up on transient contention (r12: 7 suspects, 0
-    * remeasured off a single 1.7x CPU-canary blip). ~4 min worst case,
-    * paid only on degraded-window runs; the attempt count is published
-    * as `recovery_attempts` so an unremeasured artifact carries proof
-    * the window never recovered. */
-  val MaxRecoveryAttempts = 5
-  val RecoveryWaitMs = 45000L
-
-  /** Round-16 (round-15 VERDICT #1): the artifact must self-defend
-    * against MID-RUN contamination. The r15 driver window published
-    * `degraded: false` while its own telemetry read canary max 28x /
-    * end 6.1x baseline with zero suspects re-measured — the old flag
-    * keyed only on pin violations. A window is now degraded when:
-    *  - a pin still violates after the re-measure (unchanged), or
-    *  - EITHER canary's end-of-run reading is >= 2x its operative
-    *    baseline (the bounded recovery wait already ran by then, so
-    *    an elevated end means the window never recovered), or
-    *  - the Spark canary's in-run MAX hit >= [[MaxContaminationRatio]]
-    *    AND suspects exist that were never re-measured (elevated
-    *    medians from the contaminated stretch stand unrepaired).
-    * The max rule uses the SPARK canary only and a 4x bar: healthy
-    * windows show one-off max blips near 2x on both canaries (the
-    * 106.4 s round-16 open window: spark max 2.2x, cpu max 6.8x, all
-    * suspects re-measured) — an end reading or an unrepaired-suspect
-    * max is evidence, a lone blip is not. */
-  val MaxContaminationRatio = 4.0
-  def windowDegraded(pinViolations: Boolean, canaryMaxRatio: Double,
-      canaryEndRatio: Double, cpuCanaryEndRatio: Double,
-      unremeasuredSuspects: Boolean): Boolean =
-    pinViolations || canaryEndRatio >= 2.0 || cpuCanaryEndRatio >= 2.0 ||
-      (canaryMaxRatio >= MaxContaminationRatio && unremeasuredSuspects)
-
-  /** Of two same-bits measurements, publish the lower median — the
-    * one not paying the transient environment cost. An all-failed
-    * re-measure never replaces a valid first reading (its sentinel
-    * median would otherwise always win — round-10 ADVICE: a crashed
-    * pass published its near-zero failure time as a valid sample),
-    * and a valid re-measure always replaces an all-failed first. */
-  def publishedOf(first: Entry, remeasured: Option[Entry]): Entry =
-    remeasured.filter(r => !r.allFailed &&
-      (first.allFailed || r.median < first.median)).getOrElse(first)
+  /** The timed operation: the entry's full result on the driver. The
+    * sf0.1 inputs total about 18 MB, so every result fits. */
+  def materialize(df: DataFrame): Array[Row] = df.collect()
 
   /** Actual block-device bytes read by this process so far (Linux
     * /proc/self/io read_bytes). -1 where unavailable. Distinguishes
@@ -581,23 +52,20 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
-  /** One timed pass: (wall sec, loadavg, gc sec delta, disk MB delta,
-    * failed). A pass that threw is recorded but EXCLUDED from every
-    * published statistic — its near-zero wall time is a failure
-    * artifact, not a measurement (round-10 ADVICE). */
+  /** One timed pass: wall sec, loadavg, gc sec delta, disk MB delta,
+    * its health record. A pass that threw is recorded but EXCLUDED
+    * from every published statistic — its near-zero wall time is a
+    * failure artifact, not a measurement. */
   case class Pass(sec: Double, load: Double, gcSec: Double, ioMb: Double,
-      failed: Boolean = false)
+      failed: Boolean = false, health: Health.Record = Health.Record.empty)
 
-  private def timedPass(body: => Unit): Pass = {
+  private def timedPass(monitor: Health.Monitor)(body: => Unit): Pass = {
     val gc0 = gcMillis; val io0 = diskReadBytes
-    val t0 = System.nanoTime()
-    val failed =
-      try { body; false } catch { case _: Throwable => true }
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (out, rec) = monitor.measure(body)
     val io1 = diskReadBytes
-    Pass(sec, loadNow, (gcMillis - gc0) / 1e3,
+    Pass(rec.wallSec, loadNow, (gcMillis - gc0) / 1e3,
       if (io0 < 0 || io1 < 0) -1.0 else (io1 - io0) / 1048576.0,
-      failed)
+      out.isFailure, rec)
   }
 
   /** Drop state a query leaked into the shared session (staged frames
@@ -611,9 +79,7 @@ object Bench {
       .foreach(_.unpersist(blocking = true))
   }
 
-  case class Entry(samples: Seq[Pass], canarySec: Double,
-      cpuCanarySec: Double = 0.0,
-      phases: Map[String, Seq[Double]] = Map.empty) {
+  case class Entry(samples: Seq[Pass]) {
     /** Passes that completed — the only ones statistics come from. */
     def valid: Seq[Pass] = samples.filterNot(_.failed)
     def allFailed: Boolean = valid.isEmpty
@@ -624,25 +90,21 @@ object Bench {
       if (allFailed) -1.0 else valid.map(_.sec).sorted.apply(valid.size / 2)
     def min: Double = if (allFailed) -1.0 else valid.map(_.sec).min
     def max: Double = if (allFailed) -1.0 else valid.map(_.sec).max
+    def health: Health.Record =
+      valid.map(_.health).foldLeft(Health.Record.empty)(_ + _)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup pass at the smallest scale factor: triggers whole-stage
-    // codegen compilation + JIT for every query plan once, so the timed
-    // pass measures steady-state execution rather than first-plan
+    val spark = SparkEntry.localSession()
+    // Warmup pass at the smallest scale factor, through the same
+    // materialization the timed passes use: compiles whole-stage
+    // codegen and JITs every plan that is later timed, so the timed
+    // passes measure steady-state execution rather than first-plan
     // compilation (which dominated small queries by 5-10x).
     val warmDir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
     }
     // ONE list of the prebuilt per-SF store locations, shared by the
     // ensure* block below and the page-cache warm sweep after it — a
@@ -797,227 +259,28 @@ object Bench {
     System.err.println(
       f"[bench] page-cache warm: ${warmed / 1048576.0}%.0f MB pre-read")
 
-    val canaryFn = SparkEntry.queries(CanaryName)
-    def runCanary(): Double = {
-      val t0 = System.nanoTime()
-      try canaryFn(spark, sfDir).count() catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Start-of-run canary measurement: min of 3 back-to-back runs
-    // right after warmup (CPU canary: min of 5 after 8 JIT-warm
-    // discards). Since round 14 this is a startup SANITY GATE plus
-    // telemetry, no longer the operative baseline — the r13 driver
-    // run measured its baseline in a degraded moment (1.264 s vs
-    // committed 0.121) and that one reading defanged the 2x suspect
-    // rule for the whole window (round-13 VERDICT #3). Per-entry
-    // suspect checks now compare against the COMMITTED baselines; a
-    // run that starts degraded waits (bounded) for the host to clear.
-    def measureCanaryBaseline(): Double =
-      (0 until 3).map(_ => runCanary()).min
-    def measureCpuCanaryBaseline(): Double = {
-      (0 until 8).foreach(_ => cpuCanaryOnce())
-      (0 until 5).map(_ => cpuCanaryOnce()).min
-    }
-    var canaryBaselineMeasured = measureCanaryBaseline()
-    var cpuCanaryBaselineMeasured = measureCpuCanaryBaseline()
-    var startupWaits = 0
-    while ((canaryBaselineMeasured > canaryBaselineOperative * 2 ||
-          cpuCanaryBaselineMeasured > cpuCanaryBaselineOperative * 2) &&
-        startupWaits < MaxRecoveryAttempts) {
-      startupWaits += 1
-      System.err.println(
-        s"[bench] startup canary degraded (spark " +
-          f"$canaryBaselineMeasured%.3f" + "s vs committed " +
-          f"$CanaryBaselineCommitted%.3f" + "s, cpu " +
-          f"$cpuCanaryBaselineMeasured%.3f" + "s vs " +
-          f"$CpuCanaryBaselineCommitted%.3f" + "s); delaying " +
-          s"${RecoveryWaitMs / 1000}s " +
-          s"(attempt $startupWaits/$MaxRecoveryAttempts)")
-      Thread.sleep(RecoveryWaitMs)
-      canaryBaselineMeasured = measureCanaryBaseline()
-      cpuCanaryBaselineMeasured = measureCpuCanaryBaseline()
-    }
-    val canaryBaseline = canaryBaselineOperative
-    val cpuCanaryBaseline = cpuCanaryBaselineOperative
-
     // Median of 3 timed passes per query: single-pass timing published
-    // five phantom >=2x "regressions" in round 4 (host-noise spikes on
-    // individual queries, disproved by a third sample) — the median of
-    // three is robust to one bad sample, so a >=2x move in the artifact
-    // is now evidence, not noise. Min/max are kept in the artifact file
+    // phantom >=2x "regressions" (host-noise spikes on individual
+    // queries, disproved by a third sample) — the median of three is
+    // robust to one bad sample. Min/max are kept in the artifact file
     // so a reader can see each query's spread.
     val passes = 3
-    // Per-pass phase attribution (round-11 verdict #1/#4): for the two
-    // high-variance entries, each published pass is followed by one
-    // timed run of each sub-phase (the query's own halves), so a
-    // same-window spread like r11's 3.8-9.2 s on retrieval_service_cap
-    // decomposes into the phase that moved. Phase seconds ride the
-    // artifact's `phases` field; they are NEVER added to the query's
-    // published time or the total.
-    val phaseProbes = graft.query.PipelineQueries.phaseProbes
-    def measure(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Entry = {
-      val canary = runCanary()
-      val cpuCanary = cpuCanaryOnce()
-      val probes = phaseProbes.getOrElse(name, Seq.empty)
-      val phaseTimes = scala.collection.mutable.LinkedHashMap[
-        String, Vector[Double]]()
+    val monitor = Health.attach(spark)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val samples = (0 until passes).map { _ =>
-        val p = timedPass { fn(spark, sfDir).count(); () }
-        probes.foreach { case (pname, pfn) =>
-          val t0 = System.nanoTime()
-          // a crashed phase probe records -1 and never fails the entry
-          val ok = try { pfn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-          val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-          phaseTimes(pname) =
-            phaseTimes.getOrElse(pname, Vector.empty) :+ sec
-        }
-        p
+        timedPass(monitor) { materialize(fn(spark, sfDir)); () }
       }
       clearSessionState(spark)
-      Entry(samples, canary, cpuCanary, phaseTimes.toMap)
+      name -> Entry(samples)
     }
-
-    val firstPass = scala.collection.mutable.LinkedHashMap[String, Entry]()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      firstPass(name) = measure(name, fn)
-    }
-
-    // Re-measure protocol (decision table above): pin violators and
-    // canary-suspect entries get ONE more 3-pass round at end-of-run,
-    // only once the canary has recovered. Bounded at 40 entries.
-    val pinsArmed = pinsArmedFor(sfDir)
-    val pinViolation = (e: (String, Entry)) =>
-      isPinViolation(e._1, e._2.median, pinsArmed)
-    // suspects = pin violators, entries timed inside a degraded window
-    // (EITHER canary >= 2x its baseline — the CPU canary catches the
-    // string-phase contention the shuffle canary is blind to), and
-    // entries absolutely elevated vs their committed medians (the
-    // round-10 movers fired none of the intra-run rules)
-    // Ranked by elevation over committed before the 40-entry cap:
-    // with full Committed coverage a whole-run degraded window makes
-    // EVERY entry canary-suspect, and a registration-order take(40)
-    // would re-measure 40 healthy early entries while a genuinely
-    // regressed late one is dropped (review-caught). The worst movers
-    // re-measure first; the artifact records how many were cut.
-    val allSuspects = firstPass.toSeq
-      .filter(e => pinViolation(e) ||
-        isCanarySuspect(e._2.canarySec, canaryBaseline) ||
-        isCanarySuspect(e._2.cpuCanarySec, cpuCanaryBaseline) ||
-        isAbsoluteSuspect(e._1, e._2.median, pinsArmed))
-      .sortBy { case (n, e) =>
-        -Committed.get(n).map(c => e.median / c).getOrElse(1.0)
-      }
-      .map(_._1)
-    val suspects = allSuspects.take(40)
-    val suspectsTruncated = allSuspects.size - suspects.size
-    // ALWAYS measured (one ~0.1 s run): the artifact's canary.end is
-    // the end-of-run health reading a reader compares against the
-    // baseline — publishing the baseline as "end" on suspect-free
-    // runs would fabricate exactly the signal the field exists for
-    // (review-caught)
-    var canaryNow = runCanary()
-    var cpuCanaryNow = cpuCanaryOnce()
-    // re-measuring inside a window that is still degraded in EITHER
-    // phase would re-measure the same bad environment — but ONE
-    // end-of-run reading is not a verdict on the window (round-12:
-    // 7 suspects, 0 remeasured, because a transient 1.7x CPU-canary
-    // blip at exactly the end-of-run probe closed the gate for good).
-    // Bounded wait-for-recovery (round-12 VERDICT #1): when suspects
-    // exist and either canary is elevated, sleep and re-probe up to
-    // [[MaxRecoveryAttempts]] times; publish the attempt count so an
-    // unremeasured artifact PROVES the window never recovered instead
-    // of leaving it ambiguous.
-    def recoveredNow(): Boolean =
-      canaryRecoveredAt(canaryNow, canaryBaseline) &&
-        canaryRecoveredAt(cpuCanaryNow, cpuCanaryBaseline)
-    var recoveryAttempts = 0
-    while (suspects.nonEmpty && !recoveredNow() &&
-        recoveryAttempts < MaxRecoveryAttempts) {
-      recoveryAttempts += 1
-      System.err.println(
-        s"[bench] canary degraded (spark ${f"$canaryNow%.3f"}s vs " +
-          s"${f"$canaryBaseline%.3f"}s, cpu ${f"$cpuCanaryNow%.3f"}s " +
-          s"vs ${f"$cpuCanaryBaseline%.3f"}s); waiting " +
-          s"${RecoveryWaitMs / 1000}s for recovery " +
-          s"(attempt $recoveryAttempts/$MaxRecoveryAttempts)")
-      Thread.sleep(RecoveryWaitMs)
-      canaryNow = runCanary()
-      cpuCanaryNow = cpuCanaryOnce()
-    }
-    val canaryRecovered = recoveredNow()
-    val remeasured =
-      if (suspects.nonEmpty && canaryRecovered) {
-        System.gc(); Thread.sleep(2000)
-        suspects.map { name =>
-          name -> measure(name, SparkEntry.queries(name))
-        }.toMap
-      } else Map.empty[String, Entry]
-    val results = firstPass.map { case (name, first) =>
-      name -> publishedOf(first, remeasured.get(name))
-    }
-
-    val stillViolating = results.toSeq.filter(pinViolation).map(_._1)
-    // committed-median entries still elevated after the re-measure:
-    // published as `elevated` with CPU-canary telemetry — either the
-    // new canary confirms a degraded window (reconcile, don't trust
-    // the absolute time) or the code genuinely regressed (bisect)
-    val elevated = results.toSeq
-      .filter(e => isAbsoluteSuspect(e._1, e._2.median, pinsArmed))
-      .map(_._1)
-    // failures are judged over EVERY measurement taken, not just the
-    // published entry — a clean re-measure must not erase the record
-    // of a first-pass crash (review-caught)
-    val failedQueries = (firstPass.toSeq ++ remeasured.toSeq)
+    val failedQueries = results
       .filter(_._2.samples.exists(_.failed)).map(_._1)
-      .distinct.sorted
-    // In-run contamination telemetry over EVERY measurement taken
-    // (first pass and re-measures) — see [[windowDegraded]].
-    val canaryMaxRatio = (firstPass.values ++ remeasured.values)
-      .map(_.canarySec).max / canaryBaseline
-    val canaryEndRatio = canaryNow / canaryBaseline
-    val cpuCanaryEndRatio = cpuCanaryNow / cpuCanaryBaseline
-    val unremeasuredSuspects =
-      suspects.exists(n => !remeasured.contains(n)) ||
-        suspectsTruncated > 0
-    val degraded = windowDegraded(stillViolating.nonEmpty,
-      canaryMaxRatio, canaryEndRatio, cpuCanaryEndRatio,
-      unremeasuredSuspects)
-    if (degraded || suspects.nonEmpty || failedQueries.nonEmpty) {
-      System.err.println(
-        s"[bench] canary baseline=${f"$canaryBaseline%.3f"}s " +
-          s"end=${f"$canaryNow%.3f"}s cpu baseline=" +
-          s"${f"$cpuCanaryBaseline%.3f"}s end=${f"$cpuCanaryNow%.3f"}s " +
-          s"recovered=$canaryRecovered " +
-          s"recovery_attempts=$recoveryAttempts; " +
-          s"suspects=${suspects.size} remeasured=${remeasured.size} " +
-          s"pin_violations=${stillViolating.mkString(",")} " +
-          s"elevated=${elevated.mkString(",")} " +
-          s"failed=${failedQueries.mkString(",")}")
-      (stillViolating ++ elevated).distinct.foreach { n =>
-        val e = results(n)
-        // -1 sentinels (telemetry unavailable) are excluded from the
-        // sum, matching io_mb_total's convention
-        val ioKnown = e.samples.map(_.ioMb).filter(_ >= 0)
-        val ioStr = if (ioKnown.isEmpty) "unavailable"
-          else f"${ioKnown.sum}%.1f"
-        val committedStr = Pins.get(n).map(p => s"pin ${p}s x$PinFactor")
-          .orElse(Committed.get(n).map(c =>
-            s"committed ${c}s x$AbsoluteFactor")).getOrElse("?")
-        System.err.println(
-          s"[bench] ELEVATED $n median=${f"${e.median}%.3f"}s " +
-            s"($committedStr) " +
-            s"gcSec=${f"${e.valid.map(_.gcSec).sum}%.2f"} " +
-            s"ioMB=$ioStr " +
-            s"canary=${f"${e.canarySec}%.3f"}s " +
-            s"cpuCanary=${f"${e.cpuCanarySec}%.3f"}s " +
-            s"(cpu baseline ${f"$cpuCanaryBaseline%.3f"}s) — " +
-            "publishing telemetry; reconcile canary-relative before " +
-            "treating the absolute time as a regression")
-      }
-    }
+    val health = results.map(_._2.health)
+      .foldLeft(Health.Record.empty)(_ + _)
+    val degraded = Health.degraded(health)
+    if (degraded || failedQueries.nonEmpty)
+      System.err.println(s"[bench] degraded=$degraded health=${health.json} " +
+        s"failed=${failedQueries.mkString(",")}")
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -1026,85 +289,39 @@ object Bench {
     // Compact per-query map (3-decimal secs keeps the stdout line well
     // under capture-truncation limits) + the same map as its own
     // artifact file so per-query timings survive any line truncation.
-    def jsonMap(pick: Entry => Double): String =
-      results.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + fmt(pick(v)) }
+    def jsonOf[A](pick: Entry => A, f: A => String): String =
+      results.map { case (k, v) => "\"" + k + "\":" + f(pick(v)) }
         .mkString("{", ",", "}")
+    def jsonMap(pick: Entry => Double): String = jsonOf(pick, fmt)
     def jsonArrMap(pick: Entry => Seq[Double], f: Double => String)
-        : String =
-      results.toSeq.sortBy(_._1)
-        .map { case (k, v) =>
-          "\"" + k + "\":[" + pick(v).map(f).mkString(",") + "]"
-        }.mkString("{", ",", "}")
+        : String = jsonOf[Seq[Double]](pick, _.map(f).mkString("[", ",", "]"))
+    def strArr(xs: Seq[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = jsonMap(_.median)
     // all-failed entries carry a -1.0 sentinel median — excluded from
     // the total (never subtract a failure artifact from the record)
-    val total = if (results.nonEmpty)
-      results.values.map(_.median).filter(_ >= 0).sum else 0.0
-    // 1-min load average at end of run: totals inflate uniformly ~25-30%
-    // under background host load (see NOTES round 3) — this field lets a
-    // reader tell a noisy run from a regression; the per-pass snapshots
-    // in queries_load localize WHICH pass was noisy.
+    val total = results.map(_._2.median).filter(_ >= 0).sum
+    // 1-min load average at end of run; the per-pass snapshots in
+    // queries_load localize WHICH pass was noisy.
     val load = fmt2(loadNow)
-    val canarySeries = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v.canarySec) }
-      .mkString("{", ",", "}")
-    val cpuCanarySeries = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v.cpuCanarySec) }
-      .mkString("{", ",", "}")
-    val gcTotal = results.values.flatMap(_.valid.map(_.gcSec)).sum
-    val ioTotal = results.values
-      .flatMap(_.valid.map(_.ioMb)).filter(_ >= 0).sum
-    // `baseline` is the COMMITTED cross-run reference the suspect
-    // rules gate against; `baseline_measured` is the start-of-run
-    // reading (post startup-gate), kept as telemetry so a reader can
-    // still see what the host looked like when the run began
-    // (round-13 VERDICT #3).
-    def canaryStatsOf(name: String, baseline: Double, measured: Double,
-        end: Double, pick: Entry => Double): String =
-      s"""{"name":"$name","baseline":${fmt(baseline)},""" +
-        s""""baseline_measured":${fmt(measured)},""" +
-        s""""median":${fmt(results.values.map(pick).toSeq
-          .sorted.apply(results.size / 2))},""" +
-        s""""max":${fmt(results.values.map(pick).max)},""" +
-        s""""end":${fmt(end)}}"""
-    val canaryStats = canaryStatsOf(CanaryName, canaryBaseline,
-      canaryBaselineMeasured, canaryNow, _.canarySec)
-    val cpuCanaryStats = canaryStatsOf("cpu_tokenize_hash",
-      cpuCanaryBaseline, cpuCanaryBaselineMeasured, cpuCanaryNow,
-      _.cpuCanarySec)
-    def strArr(xs: Seq[String]): String =
-      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // per-pass phase attribution for the probed entries (round-11
-    // verdict #1/#4): {"<query>":{"<phase>":[s1,s2,s3],...},...}
-    val phasesJson = results.toSeq.sortBy(_._1)
-      .filter(_._2.phases.nonEmpty)
-      .map { case (k, v) =>
-        "\"" + k + "\":" + v.phases.toSeq
-          .map { case (p, xs) =>
-            "\"" + p + "\":[" + xs.map(fmt).mkString(",") + "]"
-          }.mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
+    val gcTotal = results.flatMap(_._2.valid.map(_.gcSec)).sum
+    val ioTotal = results.flatMap(_._2.valid.map(_.ioMb)).filter(_ >= 0).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"loadavg":$load,"degraded":$degraded,"canary_max_ratio":${fmt2(canaryMaxRatio)},"canary_end_ratio":${fmt2(canaryEndRatio)},"canary":$canaryStats,"cpu_canary":$cpuCanaryStats,"elevated":${strArr(elevated)},"failed_queries":${strArr(failedQueries)},"remeasured":${remeasured.size},"recovery_attempts":$recoveryAttempts,"startup_waits":$startupWaits,"suspects_truncated":$suspectsTruncated,"sf":"$sfDir"}"""
-    // Artifact file carries the per-query spread (min/max over the 3
-    // passes, chronological per-pass loadavg), per-pass GC seconds and
-    // actual-disk-read MB, the per-entry canary series, and the pin /
-    // re-measure outcome alongside the medians the stdout line
-    // publishes — enough to attribute any future degraded window to
-    // page cache (ioMB high), heap (gc high), or host load (loadavg)
-    // without a re-run.
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"loadavg":$load,"degraded":$degraded,"health":${health.json},"failed_queries":${strArr(failedQueries)},"sf":"$sfDir"}"""
+    // Artifact file: the per-query spread (min/max over the 3 passes,
+    // chronological per-pass loadavg), per-pass GC seconds and
+    // disk-read MB, each entry's health record, and the store builds — enough to attribute a slow entry to host load,
+    // heap or page cache without a re-run.
     val fileLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":${jsonMap(_.min)},"queries_max":${jsonMap(_.max)},"queries_load":${jsonArrMap(_.samples.map(_.load), fmt2)},"queries_gc_sec":${jsonArrMap(_.samples.map(_.gcSec), fmt)},"queries_io_mb":${jsonArrMap(_.samples.map(_.ioMb), fmt)},"canary_series":$canarySeries,"canary":$canaryStats,"cpu_canary_series":$cpuCanarySeries,"cpu_canary":$cpuCanaryStats,"gc_sec_total":${fmt(gcTotal)},"io_mb_total":${fmt(ioTotal)},"store_build_s":${storeBuilds.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")},"store_build_failed":${strArr(storeBuildFailed.toSeq)},"store_queries":${storeQueries.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + strArr(v) }.mkString("{", ",", "}")},"failed_passes":${results.toSeq.sortBy(_._1).filter(_._2.samples.exists(_.failed)).map { case (k, v) => "\"" + k + "\":[" + v.samples.zipWithIndex.filter(_._1.failed).map(_._2).mkString(",") + "]" }.mkString("{", ",", "}")},"phases":$phasesJson,"pins":${Pins.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},"committed":${Committed.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},"pin_violations":${strArr(stillViolating)},"elevated":${strArr(elevated)},"failed_queries":${strArr(failedQueries)},"suspects":${strArr(suspects)},"remeasured":${strArr(remeasured.keys.toSeq.sorted)},"recovery_attempts":$recoveryAttempts,"startup_waits":$startupWaits,"suspects_truncated":$suspectsTruncated,"degraded":$degraded,"canary_max_ratio":${fmt2(canaryMaxRatio)},"canary_end_ratio":${fmt2(canaryEndRatio)},"cpu_canary_end_ratio":${fmt2(cpuCanaryEndRatio)},"passes":$passes,"loadavg":$load,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","materialization":"collect","queries":$qs,"queries_min":${jsonMap(_.min)},"queries_max":${jsonMap(_.max)},"queries_load":${jsonArrMap(_.samples.map(_.load), fmt2)},"queries_gc_sec":${jsonArrMap(_.samples.map(_.gcSec), fmt)},"queries_io_mb":${jsonArrMap(_.samples.map(_.ioMb), fmt)},"queries_health":${jsonOf[Health.Record](_.health, _.json)},"gc_sec_total":${fmt(gcTotal)},"io_mb_total":${fmt(ioTotal)},"store_build_s":${storeBuilds.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")},"store_build_failed":${strArr(storeBuildFailed.toSeq)},"store_queries":${storeQueries.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + strArr(v) }.mkString("{", ",", "}")},"failed_passes":${results.filter(_._2.samples.exists(_.failed)).map { case (k, v) => "\"" + k + "\":[" + v.samples.zipWithIndex.filter(_._1.failed).map(_._2).mkString(",") + "]" }.mkString("{", ",", "}")},"health":${health.json},"degraded":$degraded,"failed_queries":${strArr(failedQueries)},"passes":$passes,"loadavg":$load,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_QUERIES.json"), fileLine + "\n")
-    // The one-line JSON is the ABSOLUTE LAST stdout of this program
-    // (round-15 VERDICT #3/#4: the r14 line was clipped by the
-    // driver's tail-capture budget, destroying a whole round's
-    // baseline): stop Spark FIRST so no shutdown logging can follow
-    // it, then print and flush. build.sbt additionally suppresses
-    // sbt's trailing "[success] Total time" line (Global/showSuccess)
-    // so nothing at all follows the JSON in captured output.
+    // The one-line JSON is the ABSOLUTE LAST stdout of this program (a
+    // clipped line once destroyed a whole baseline): stop Spark FIRST
+    // so no shutdown logging can follow it, then print and flush.
+    // build.sbt additionally suppresses sbt's trailing "[success] Total
+    // time" line (Global/showSuccess) so nothing at all follows the
+    // JSON in captured output.
     spark.stop()
     println(line)
     System.out.flush()

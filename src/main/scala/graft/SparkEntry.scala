@@ -17,6 +17,21 @@ object SparkEntry {
       DailyRollup.fromEvents(
         Tables.events(spark, "/root/testdata/sf0.001")))
 
+  /** The local session every main runs on: `local[N]` with N from
+    * `SPARK_GRAFT_CPUS` (default 4) and as many shuffle partitions, a
+    * UTC session time zone, no UI. */
+  def localSession(logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ReferenceQueries.queries ++ StarSchemaQueries.queries ++

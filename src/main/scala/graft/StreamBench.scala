@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.config.PipelineConfig
@@ -13,76 +12,22 @@ import graft.pipeline.{DirectPipeline, MaterializedPipeline}
   * MV rollup), and prints one JSON line with events/sec each.
   * Not part of the driver contract; numbers recorded in BASELINE.md.
   *
-  * Round-15 trust protocol (round-14 VERDICT #2 — the batch bench's
-  * discipline applied here, because the r14 funnel dip 22.6k -> 15.7k
-  * ev/s and the three-tier 1229 -> 725 docs/s delta were both
-  * unreadable without it):
-  *
-  *  - a STREAM CANARY (the direct-insert path over a fixed 20k-event
-  *    corpus — the cheapest full start-a-query-run-batches-commit
-  *    cycle) is timed at start AND end of the run against a committed
-  *    constant, so a degraded window is visible in the artifact;
-  *  - every metric row carries its COMMITTED median (best healthy
-  *    r13/r14 closing value), the value/committed ratio, and the
-  *    loadavg when the row was measured — a rate below
-  *    committed/[[StreamDegradedFactor]] lands in the summary row's
-  *    `elevated` list;
-  *  - the three curation rows carry per-TIER phase seconds
-  *    ([[graft.pipeline.CurationPipeline.PhaseRecorder]]), so the
-  *    tier-3 delta decomposes into dsir_gate / exact_dedup /
-  *    near_dup / writes instead of one opaque number.
+  * Every metric row carries the [[graft.obs.Health]] record of its own
+  * timed region (task CPU ÷ task run, steal, iowait), and the closing
+  * `stream_health` row judges the summed record with
+  * [[graft.obs.Health.degraded]] — the same rule the batch bench uses.
+  * The three curation rows carry per-tier phase seconds
+  * ([[graft.pipeline.CurationPipeline.PhaseRecorder]]), so a tier's
+  * cost decomposes into dsir_gate / exact_dedup / near_dup / writes.
   */
 object StreamBench {
-
-  /** Committed per-metric medians — best healthy closing values
-    * (r13 artifact for mv/direct/funnel/curation1/topk, r14 for the
-    * rest; postings from the round-10 BASELINE record 7.3k). Re-seed
-    * only from a healthy window, the batch-bench rule. */
-  val Committed: Map[String, Double] = Map(
-    // mv + direct re-seeded r15: the canary warm runs now absorb the
-    // process's first-streaming-query init that the old first-metric
-    // readings paid (old values 15949 / 40589 — protocol change, not
-    // a code speedup; both measured in the first full protocol run)
-    "stream_mv_events_per_sec" -> 31726.0,
-    "stream_direct_events_per_sec" -> 54589.0,
-    "stream_session_events_per_sec" -> 23551.0,
-    "stream_funnel_events_per_sec" -> 26413.0,
-    "stream_curation_docs_per_sec" -> 1989.0,
-    "stream_curation2_docs_per_sec" -> 1229.0,
-    // re-seeded r15: the dsir tier stages the gated batch once
-    // (old shape evaluated json+gates twice per batch; 725 -> 831
-    // in a loadavg-3.3 window, 1107 in the quieter validation run —
-    // seeded from the better healthy reading)
-    "stream_curation3_docs_per_sec" -> 1107.0,
-    "stream_postings_docs_per_sec" -> 7300.0,
-    // r14 value — the only measurement of the current shape (the
-    // round-9 7.2k predates the PQ code-delta write this path gained)
-    "stream_retrieval_docs_per_sec" -> 3966.0,
-    "stream_vector_pq_docs_per_sec" -> 12792.0,
-    "stream_topk_terms_per_sec" -> 78344.0,
-    "stream_media_docs_per_sec" -> 9705.0,
-    "stream_media_dedup_docs_per_sec" -> 4070.0)
-
-  /** A rate below committed/this factor is elevated — mirrors the
-    * batch bench's 1.5x gate on the inverted (throughput) axis. */
-  val StreamDegradedFactor = 1.5
-
-  /** Committed canary seconds for the fixed 20k-event direct-insert
-    * cycle (seeded from the first round-15 protocol run; same
-    * healthy-window re-seed rule as the batch bench's canary). */
-  val StreamCanaryCommitted = 1.45
 
   def main(args: Array[String]): Unit = {
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS",
       "200000").toInt
     val nFiles = 20
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession("ERROR")
+    val monitor = graft.obs.Health.attach(spark)
 
     val root = Files.createTempDirectory("streambench").toString
     val cfg = PipelineConfig(topicsRoot = s"$root/topics",
@@ -106,8 +51,15 @@ object StreamBench {
       Files.writeString(dir.resolve(f"part-$f%04d.json"), sb.toString)
     }
 
+    // every timed region's health record: the last one rides its
+    // metric row, the sum the closing stream_health row
+    var lastHealth = graft.obs.Health.Record.empty
+    var runHealth = graft.obs.Health.Record.empty
     def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+      val (out, rec) = monitor.measure(f)
+      out.get
+      lastHealth = rec; runHealth = runHealth + rec
+      rec.wallSec
     }
     // Each metric line is printed AND collected into STREAM_BENCH.json,
     // so streaming throughput is a diffable round-over-round artifact
@@ -117,19 +69,12 @@ object StreamBench {
     def loadNow: Double = math.rint(java.lang.management
       .ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage * 100) / 100.0
-    // metric row with the trust fields: committed median, ratio,
+    // metric row with its timed region's health record and the
     // loadavg-at-measurement. `tail` carries the metric's own fields
     // (leading comma included).
-    val elevated = scala.collection.mutable.ArrayBuffer.empty[String]
-    def emitMetric(metric: String, value: Double, tail: String): Unit = {
-      val extra = Committed.get(metric).map { c =>
-        if (value * StreamDegradedFactor < c) elevated += metric
-        val r = math.rint(value / c * 1000) / 1000.0
-        s""","committed":$c,"ratio":$r"""
-      }.getOrElse("")
-      emit(s"""{"metric":"$metric","value":$value$extra,""" +
-        s""""loadavg":$loadNow$tail}""")
-    }
+    def emitMetric(metric: String, value: Double, tail: String): Unit =
+      emit(s"""{"metric":"$metric","value":$value,""" +
+        s""""loadavg":$loadNow,"health":${lastHealth.json}$tail}""")
 
     // per-tier seconds of a curation run as a JSON object (summed
     // over every micro-batch by the recorder)
@@ -140,20 +85,19 @@ object StreamBench {
           "\"" + k + "\":" + (math.rint(v * 1000) / 1000.0)
         }.mkString("{", ",", "}")
 
-    // STREAM CANARY: the direct-insert cycle over a FIXED 20k-event
-    // corpus — cheapest full query-start/run/commit loop; timed at
-    // start and end against the committed constant so a degraded
-    // window is visible in the artifact (the batch bench's canary
-    // discipline; round-14 VERDICT #2).
-    val canaryEvents = 20000
+    // Untimed warm-up: one direct-insert cycle over a fixed 20k-event
+    // corpus. The FIRST streaming query in a process pays
+    // state-store/codegen/commit-log init; this cycle absorbs it so
+    // the first timed metric does not.
     locally {
-      val ccfg = PipelineConfig(topicsRoot = s"$root/topics",
-        topics = Map("event_tracking" -> "canary.topic"),
-        warehouseRoot = s"$root/wh_canary_seed")
-      val cdir = Paths.get(ccfg.topicDir("event_tracking"))
-      Files.createDirectories(cdir)
-      val sb = new StringBuilder(canaryEvents * 160)
-      (0 until canaryEvents).foreach { i =>
+      val warmEvents = 20000
+      val wcfg = PipelineConfig(topicsRoot = s"$root/topics",
+        topics = Map("event_tracking" -> "warmup.topic"),
+        warehouseRoot = s"$root/wh_warmup")
+      val wdir = Paths.get(wcfg.topicDir("event_tracking"))
+      Files.createDirectories(wdir)
+      val sb = new StringBuilder(warmEvents * 160)
+      (0 until warmEvents).foreach { i =>
         val sec = i % 86400
         val t = f"2026-08-10T${sec / 3600}%02d:" +
           f"${(sec / 60) % 60}%02d:${sec % 60}%02d"
@@ -162,28 +106,11 @@ object StreamBench {
           .append(s""" "event_type": "delivered", "event_time": "$t",""")
           .append(s""" "metadata": {"k": "$i"}}""").append('\n')
       }
-      Files.writeString(cdir.resolve("part-0000.json"), sb.toString)
+      Files.writeString(wdir.resolve("part-0000.json"), sb.toString)
+      DirectPipeline.start(spark, wcfg).awaitTermination()
+      require(DirectPipeline.emailEvents(spark, wcfg).count() == warmEvents,
+        "warm-up lost events")
     }
-    var canaryRuns = 0
-    def streamCanary(): Double = {
-      canaryRuns += 1
-      val ccfg = PipelineConfig(topicsRoot = s"$root/topics",
-        topics = Map("event_tracking" -> "canary.topic"),
-        warehouseRoot = s"$root/wh_canary_$canaryRuns")
-      val sec = timed {
-        DirectPipeline.start(spark, ccfg).awaitTermination()
-      }
-      require(DirectPipeline.emailEvents(spark, ccfg)
-        .count() == canaryEvents, "stream canary lost events")
-      sec
-    }
-    // two discarded warm runs (the FIRST streaming query in a process
-    // pays state-store/codegen/commit-log init — the first protocol
-    // run measured 4.4 s warm-discarded vs 1.44 steady; one discard
-    // left half that init in the start reading), then min-of-2 as the
-    // start reading — the same min-robustness the batch canary uses
-    streamCanary(); streamCanary()
-    val canaryStart = math.min(streamCanary(), streamCanary())
     // Part 2: MV rollup into the summing store (kafka+clickhouse Part 2)
     val mvSec = timed {
       MaterializedPipeline.start(spark, cfg,
@@ -748,14 +675,10 @@ object StreamBench {
     emitMetric("stream_media_dedup_docs_per_sec", media2Rate,
       s""","unit":"docs/sec","docs":$nMedia,"seconds":$media2Sec,""" +
       s""""kept":$media2Kept,"dups":$media2Dups""")
-    // end-of-run canary + summary (the artifact's health verdict):
-    // canary start/end vs committed, the elevated metrics, loadavg
-    val canaryEnd = streamCanary()
-    emit(s"""{"metric":"stream_canary_sec","start":$canaryStart,""" +
-      s""""end":$canaryEnd,"committed":$StreamCanaryCommitted,""" +
-      s""""events":$canaryEvents,"elevated":[${
-        elevated.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""loadavg":$loadNow}""")
+    // closing row: the run's health verdict over every timed region
+    emit(s"""{"metric":"stream_health",""" +
+      s""""degraded":${graft.obs.Health.degraded(runHealth)},""" +
+      s""""health":${runHealth.json},"loadavg":$loadNow}""")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("STREAM_BENCH.json"),
       emitted.mkString("[", ",\n ", "]") + "\n")

@@ -70,9 +70,7 @@ object Bm25ResultCache {
 
   /** The canonicalized batch: per-query termsets, one representative
     * per distinct termset, and each representative's memo key under
-    * the CURRENT index stamp — shared by the cached scoring path and
-    * the bench's memo-probe phase so the probe can never drift from
-    * what the query actually probes. */
+    * the CURRENT index stamp. */
   private[graft] case class CanonBatch(
       canon: Seq[(String, Seq[String])],
       repOf: Map[Seq[String], String],
@@ -100,21 +98,6 @@ object Bm25ResultCache {
     val keyOf: Map[String, String] = repOf
       .map { case (ts, rid) => (rid, tsKey(ts, k, stamp)) }
     CanonBatch(canon, repOf, keyOf)
-  }
-
-  /** The memo-PROBE phase alone (round-14 VERDICT #1: the cached cap
-    * entry elevated 2.05x with no phase attribution): the exact frame
-    * whose collect decides hit/miss inside [[scoreTopKCachedBatch]] —
-    * canonicalize, key under the current stamp, filter the memo to
-    * wanted keys, distinct. Counting it times the full memo scan +
-    * key filter and nothing else; built from the SAME canonicalize
-    * helper the scoring path calls, so the probe can't drift. */
-  def probeOnly(spark: SparkSession, path: String, memoPath: String,
-      queries: DataFrame, k: Int): DataFrame = {
-    val cb = canonicalize(spark, path, queries, k)
-    readMemo(spark, memoPath)
-      .filter(col("ts_key").isin(cb.keyOf.values.toSeq: _*))
-      .select(col("ts_key")).distinct()
   }
 
   /** The cached batch path: same contract, columns, and VALUES as

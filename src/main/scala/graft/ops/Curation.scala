@@ -337,10 +337,8 @@ object Curation {
     packTokenCounts(wordTokenCounts(docs, shardCol, orderCol),
       budget, shardCol, orderCol)
 
-  /** The whitespace-token-count projection [[packChunks]] packs under
-    * — shared with the bench phase probe so the probe times exactly
-    * the query's tokenize expression (a probe that re-inlines the
-    * split would silently drift when the tokenizer changes). */
+  /** The whitespace-token-count projection [[packChunks]] packs
+    * under. */
   def wordTokenCounts(docs: DataFrame, shardCol: String = "lang",
       orderCol: String = "doc_id"): DataFrame =
     docs.select(col(shardCol), col(orderCol),
@@ -396,9 +394,14 @@ object Curation {
     // text column, breaking the reads-text-at-most-twice capstone
     // contract. Four narrow columns, never text.
     val bucketed = graft.scale.Staging.materialize(
-      packBucketed(counted, shardCol, orderCol, bucketShift),
+      counted
+        .select(col(shardCol), col(orderCol), col("n_tok"))
+        .withColumn("pack_bucket",
+          shiftright(col(orderCol).cast("long"), bucketShift)),
       "pack-buckets")
-    val subtotals = packSubtotalsOf(bucketed, shardCol)
+    val subtotals = bucketed
+      .groupBy(col(shardCol), col("pack_bucket"))
+      .agg(sum(col("n_tok")).as("bucket_tok"))
     // exclusive prefix over the bounded subtotal frame; coalesce
     // covers each shard's first bucket (empty frame -> null sum)
     val wOff = Window.partitionBy(col(shardCol))
@@ -425,33 +428,6 @@ object Curation {
       .withColumn("first_chunk", expr(s"tok_start DIV $budget"))
       .withColumn("last_chunk", expr(s"(tok_end - 1) DIV $budget"))
   }
-
-  /** The bucketed narrow frame both phases of [[packTokenCounts]]
-    * read: (shard, order, n_tok, pack_bucket = order >> bucketShift).
-    * Public so the bench phase probe composes the REAL first phase
-    * ([[packBucketSubtotals]]) instead of re-inlining it. */
-  def packBucketed(counted: DataFrame, shardCol: String,
-      orderCol: String, bucketShift: Int): DataFrame =
-    counted
-      .select(col(shardCol), col(orderCol), col("n_tok"))
-      .withColumn("pack_bucket",
-        shiftright(col(orderCol).cast("long"), bucketShift))
-
-  private def packSubtotalsOf(bucketed: DataFrame,
-      shardCol: String): DataFrame =
-    bucketed
-      .groupBy(col(shardCol), col("pack_bucket"))
-      .agg(sum(col("n_tok")).as("bucket_tok"))
-
-  /** [[packTokenCounts]]' first phase on its own — the tokenize +
-    * bucket + subtotal stage the bench probe times (round-13 VERDICT
-    * #1 attribution). Built from the same helpers the real query
-    * runs, so probe and query cannot drift. */
-  def packBucketSubtotals(counted: DataFrame,
-      shardCol: String = "lang", orderCol: String = "doc_id",
-      bucketShift: Int = 12): DataFrame =
-    packSubtotalsOf(
-      packBucketed(counted, shardCol, orderCol, bucketShift), shardCol)
 
   /** Sliding-window document chunking with overlap — the
     * retrieval/embedding prep step (RAG indexing, long-doc embedding)

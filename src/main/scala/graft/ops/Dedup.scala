@@ -270,9 +270,7 @@ object Dedup {
 
   /** The banding half of [[simHashPairs]] — chunk-equality candidate
     * pairs with their hamming distance, BEFORE the distinct+threshold
-    * verify. Exposed so the bench's phase probes can decompose an
-    * elevated pass into fingerprint vs band-join vs verify cost
-    * (round-12 verdict #2). */
+    * verify. */
   def simHashCandidates(docs: DataFrame, maxDist: Int = 7): DataFrame = {
     val chunks = maxDist + 1
     val width = 64 / chunks

@@ -141,11 +141,7 @@ object RetrievalPipeline {
     Rrf.fuseBatch(Seq(lex, dense), k)
   }
 
-  /** The batch's lexical half alone — exposed (beside [[denseHalf]])
-    * so the bench can time each phase of `retrieval_service_cap` per
-    * pass and publish the split in the artifact (round-11 verdict #4:
-    * a 2.4x same-window spread on the most expensive entry was
-    * unattributable without a bisect). */
+  /** The batch's lexical half alone (beside [[denseHalf]]). */
   def lexicalHalf(spark: SparkSession, bmPath: String,
       queries: DataFrame, perList: Int): DataFrame =
     Bm25.scoreTopKIndexedBatch(spark, bmPath,

@@ -1472,9 +1472,7 @@ object PipelineQueries {
     * embedding under the MaxBatchQueries cap (bounded collect,
     * <= 1024 x 64 floats), terms rotating over mid-frequency corpus
     * vocabulary so the lexical probe exercises many postings buckets.
-    * Ensures both persisted layouts (stamped no-ops when current).
-    * Shared by the registered query and the bench's phase probes so
-    * all three time the identical batch. */
+    * Ensures both persisted layouts (stamped no-ops when current). */
   /** The cap batch's term pool — shared by [[serviceCapBatch]] and
     * the DuckDB replay ([[serviceCapOracle]]) so the two term
     * generators cannot drift. */
@@ -1505,9 +1503,7 @@ object PipelineQueries {
       }.toSeq.toDF("query_id", "terms", "embedding")
   }
 
-  /** The 3-query hybrid batch shared by the registered
-    * `retrieval_hybrid_indexed_batch` query and its phase probes, so
-    * both time the identical input. */
+  /** The 3-query hybrid batch of `retrieval_hybrid_indexed_batch`. */
   private def hybridBatchQs(s: SparkSession): DataFrame = {
     import s.implicits._
     Seq(
@@ -1515,114 +1511,6 @@ object PipelineQueries {
       ("sp", Seq("spark", "part")),
       ("wm", Seq("window", "merge"))).toDF("query_id", "terms")
   }
-
-  /** Per-pass phase probes for the bench's attribution telemetry
-    * (round-11 verdict #1/#4; extended to the two round-12 elevated
-    * entries per round-12 verdict #2): each entry maps a registered
-    * high-variance query to its sub-phase frames, timed once per
-    * published pass and emitted as the artifact's `phases` field — so
-    * an inflated or high-spread pass decomposes into the phase that
-    * moved without a bisect. The probes are the query's OWN halves
-    * (same helpers, same batch), not approximations. */
-  def phaseProbes: Map[String,
-      Seq[(String, (SparkSession, String) => DataFrame)]] = Map(
-    // r12's biggest unexplained number (1.07-7.13 same-window spread):
-    // decompose into the stamped ensure re-checks (store staleness
-    // probes landing inside a timed pass were the prime suspect), the
-    // bucket-pruned postings probe, and the IVF probe
-    "retrieval_hybrid_indexed_batch" -> Seq(
-      "ensure_check" -> ((s, d) => {
-        Bm25.ensurePostings(Tables.documents(s, d), Bm25.defaultPath(d))
-        VectorIndex.ensureIvf(Tables.embeddings(s, d),
-          VectorIndex.defaultPath(d))
-        s.range(1).toDF()
-      }),
-      "lexical" -> ((s, d) => Bm25.scoreTopKIndexedBatch(s,
-        Bm25.defaultPath(d), hybridBatchQs(s), 20)),
-      "dense" -> ((s, d) => VectorIndex.queryIvf(s,
-        VectorIndex.defaultPath(d),
-        Tables.embeddings(s, d).filter(col("vec_id").isin(0L, 1L, 2L)),
-        20, nProbe = 16))),
-    // third round on the weak list: split the narrow CPU-bound
-    // fingerprint pass from the banded candidate join (the verify
-    // remainder = published - candidates)
-    "dedup_simhash" -> Seq(
-      "fingerprint" -> ((s, d) => Dedup.simHash(Tables.documents(s, d))),
-      "band_candidates" -> ((s, d) =>
-        Dedup.simHashCandidates(Tables.documents(s, d)))),
-    "retrieval_service_cap" -> Seq(
-      "lexical" -> ((s, d) => graft.pipeline.RetrievalPipeline
-        .lexicalHalf(s, Bm25.defaultPath(d), serviceCapBatch(s, d), 20)),
-      "dense" -> ((s, d) => graft.pipeline.RetrievalPipeline
-        .denseHalf(s, VectorIndex.defaultPath(d), serviceCapBatch(s, d),
-          20, nProbe = 4))),
-    // r14's one changed-plan elevation (1.46 -> 3.00 committed-vs-
-    // driver with NO phase attribution — round-14 VERDICT #1): the
-    // cached cap decomposes into the memo PROBE (read every committed
-    // memo batch, key-filter, distinct — the phase that would grow if
-    // stale batches accumulated), the full cached lexical half (probe
-    // + hit fan-back + miss scoring when the stamp moved), and the
-    // shared dense IVF half (also under the r14 heap rework — the
-    // uncached twin elevated by the SAME absolute +1.55 s, so if the
-    // dense phase carries it, the repricing is the shared tail, not
-    // the cache)
-    "retrieval_service_cap_cached" -> Seq(
-      "memo_probe" -> ((s, d) => graft.ops.Bm25ResultCache.probeOnly(
-        s, Bm25.defaultPath(d), bm25MemoPath(d),
-        serviceCapBatch(s, d), 20)),
-      "lexical_cached" -> ((s, d) => graft.ops.Bm25ResultCache
-        .scoreTopKCachedBatch(s, Bm25.defaultPath(d), bm25MemoPath(d),
-          serviceCapBatch(s, d).select(col("query_id"), col("terms")),
-          20)),
-      "dense" -> ((s, d) => graft.pipeline.RetrievalPipeline
-        .denseHalf(s, VectorIndex.defaultPath(d), serviceCapBatch(s, d),
-          20, nProbe = 4))),
-    // r14 driver: 0.552 -> 0.902 stable at per-pass loadavg ~1.1 (the
-    // low-load-elevation signature); prime suspect is page-cache state
-    // on the persisted cells layout. "cells_scan" forces actual bytes
-    // of the embedding column through the scan (a bare count() reads
-    // only footers) — elevated scan + healthy remainder = cold cache;
-    // flat scan + elevated query = the score/rank compute moved.
-    "sim_cosine_ivf_full" -> Seq(
-      "ensure_check" -> ((s, d) => {
-        VectorIndex.ensureIvf(Tables.embeddings(s, d),
-          VectorIndex.defaultPath(d))
-        s.range(1).toDF()
-      }),
-      "cells_scan" -> ((s, d) => s.read
-        .parquet(VectorIndex.defaultPath(d) + "/cells")
-        .agg(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.size(col("embedding")))
-          .as("probe_bytes")))),
-    // r14 driver: 0.74 -> 1.168, same low-load signature. No persisted
-    // store here — the query is synth + decode + dHash (CPU) then the
-    // banded self-join (shuffle). "synth_hash" is the CPU half; the
-    // remainder is the band join + popcount verify.
-    "dedup_image_phash_near" -> Seq(
-      "synth_hash" -> ((s, d) => Multimodal.perceptualHashWords(s,
-          Multimodal.synthPhashNearTable(s, Tables.documents(s, d)))
-        .toDF())),
-    "dedup_components_lsh" -> Seq(
-      // candidate scan + exact verify; the registered query's
-      // remainder is the pointer-doubling closure
-      "verify" -> ((s, d) => Similarity.verifyCandidates(
-        Similarity.ensureLshCandidates(Tables.embeddings(s, d),
-          lshCandPath(d)),
-        Tables.embeddings(s, d), cosineT))),
-    // r13's biggest unexplained number (0.134 -> 2.605 in the driver
-    // window on unchanged code, unflagged for lack of a committed
-    // median): the round-14 two-phase rework changed the plan, so the
-    // probe decomposes its NEW halves — the tokenize+bucket+subtotal
-    // stage (text split is the CPU phase the r10 blind spot lived in)
-    // vs the staged frame's prefix-sum remainder
-    "curation_seq_packing" -> Seq(
-      // composed from the query's OWN helpers (wordTokenCounts +
-      // packBucketSubtotals) — a re-inlined copy would silently keep
-      // timing the old phase shape when the tokenizer or bucket shift
-      // changes (review-caught)
-      "tokenize_subtotals" -> ((s, d) =>
-        graft.ops.Curation.packBucketSubtotals(
-          graft.ops.Curation.wordTokenCounts(Tables.documents(s, d))))))
 
   /** Session-dynamic oracles (round-11 verdict #2): once the BPE
     * queries have trained their merge table for `sfDir`, export it

@@ -2,65 +2,26 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench measurement protocol's decision table (round 10):
-  * the published artifact's trustworthiness rests on these rules, so
-  * they must not drift silently with a refactor. No SparkSession —
-  * the decisions are pure.
+import graft.obs.Health
+
+/** Pins the bench measurement protocol: the per-entry statistics and
+  * the one host-health rule the published `degraded` flag comes from.
+  * No SparkSession — the decisions are pure.
   */
 class BenchProtocolSpec extends AnyFunSuite {
 
   private def entry(medians: Double*): Bench.Entry =
-    Bench.Entry(medians.map(s => Bench.Pass(s, 1.0, 0.0, 0.0)), 0.1)
+    Bench.Entry(medians.map(s => Bench.Pass(s, 1.0, 0.0, 0.0)))
 
-  test("pins arm on the exact sf0.1 basename only") {
-    assert(Bench.pinsArmedFor("/root/testdata/sf0.1"))
-    assert(Bench.pinsArmedFor("/root/testdata/sf0.1/"))
-    assert(!Bench.pinsArmedFor("/root/testdata/sf0.12"))
-    assert(!Bench.pinsArmedFor("/root/testdata/sf0.1_old"))
-    assert(!Bench.pinsArmedFor("/root/testdata/sf0.01"))
-    // location-independent: an sf0.1 dataset elsewhere still arms
-    assert(Bench.pinsArmedFor("/elsewhere/sf0.1"))
-  }
-
-  test("pin violation = armed AND pinned AND median > 3x committed") {
-    val pin = Bench.Pins("replacing_latest")
-    assert(Bench.isPinViolation("replacing_latest", pin * 3.01, true))
-    assert(!Bench.isPinViolation("replacing_latest", pin * 2.9, true))
-    // disarmed (wrong scale factor): never a violation
-    assert(!Bench.isPinViolation("replacing_latest", pin * 100, false))
-    // unpinned queries can't violate regardless of time
-    assert(!Bench.isPinViolation("q1_pricing_summary", 999.0, true))
-  }
-
-  test("canary thresholds: suspect at >= 2x baseline, recovered at " +
-      "<= 1.5x") {
-    assert(Bench.isCanarySuspect(0.20, 0.10))
-    assert(!Bench.isCanarySuspect(0.19, 0.10))
-    assert(Bench.canaryRecoveredAt(0.15, 0.10))
-    assert(!Bench.canaryRecoveredAt(0.16, 0.10))
-  }
-
-  test("publishedOf takes the lower median; a worse re-measure never " +
-      "replaces the first reading") {
-    val first = entry(1.0, 1.1, 1.2) // median 1.1
-    val better = entry(0.4, 0.5, 0.6) // median 0.5
-    val worse = entry(2.0, 2.1, 2.2)
-    assert(Bench.publishedOf(first, Some(better)) eq better)
-    assert(Bench.publishedOf(first, Some(worse)) eq first)
-    assert(Bench.publishedOf(first, None) eq first)
-  }
+  private def entryWithFails(medians: (Double, Boolean)*): Bench.Entry =
+    Bench.Entry(medians.map { case (s, f) =>
+      Bench.Pass(s, 1.0, 0.0, 0.0, failed = f) })
 
   test("Entry stats: median is the middle of 3 sorted passes, min/max " +
       "bound the spread") {
     val e = entry(1.2, 1.0, 1.1)
     assert(e.median == 1.1 && e.min == 1.0 && e.max == 1.2)
   }
-
-  // ---- round-11 additions
-
-  private def entryWithFails(medians: (Double, Boolean)*): Bench.Entry =
-    Bench.Entry(medians.map { case (s, f) =>
-      Bench.Pass(s, 1.0, 0.0, 0.0, failed = f) }, 0.1)
 
   test("failed passes are excluded from median/min/max; all-failed " +
       "entries publish -1 sentinels") {
@@ -72,170 +33,51 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(dead.allFailed && dead.median == -1.0 && dead.min == -1.0)
   }
 
-  test("publishedOf never publishes an all-failed re-measure over a " +
-      "valid first reading, and always prefers a valid re-measure " +
-      "over an all-failed first") {
-    val first = entry(1.0, 1.1, 1.2)
-    val crashed = entryWithFails((0.01, true), (0.02, true), (0.01, true))
-    assert(Bench.publishedOf(first, Some(crashed)) eq first)
-    val deadFirst = entryWithFails((0.01, true), (0.02, true))
-    val valid = entry(2.0, 2.1, 2.2)
-    assert(Bench.publishedOf(deadFirst, Some(valid)) eq valid)
+  // A record of `wall` seconds on 4 CPUs at 100 ticks/s: task CPU and
+  // run seconds as given, steal and iowait as shares of all ticks.
+  private def rec(cpu: Double, run: Double, steal: Double = 0.0,
+      iowait: Double = 0.0, wall: Double = 10.0): Health.Record = {
+    val total = (wall * 4 * 100).toLong
+    Health.Record(wall, cpu, run, (steal * total).toLong,
+      (iowait * total).toLong, total)
   }
 
-  test("absolute suspects rule: armed AND committed AND median > " +
-      "AbsoluteFactor x committed — the round-10/11 movers' escape " +
-      "paths are both closed") {
-    assert(Bench.AbsoluteFactor == 1.5) // round-11 VERDICT #1 pin
-    val c = Bench.Committed("dedup_simhash")
-    assert(Bench.isAbsoluteSuspect("dedup_simhash", c * 1.51, true))
-    assert(!Bench.isAbsoluteSuspect("dedup_simhash", c * 1.4, true))
-    assert(!Bench.isAbsoluteSuspect("dedup_simhash", c * 100, false))
-    // since round 14 EVERY registered query carries a committed
-    // median, so only a genuinely unknown name escapes the rule
-    assert(!Bench.isAbsoluteSuspect("no_such_query", 999.0, true))
-    // the five round-10 inflation victims are all gated
-    assert(Seq("curation_repeated_spans", "dedup_ngram_jaccard",
-      "dedup_simhash", "agg_cms_state_rollup", "dict_get_nation")
-      .forall(Bench.Committed.contains))
-    // round-11 escapees: the three weak marks + the one unattributed
-    // spread all carry committed medians now
-    assert(Seq("curation_repeated_spans", "text_unigram_loglik",
-      "retrieval_service_cap", "dedup_components_lsh")
-      .forall(Bench.Committed.contains))
-    // curation_repeated_spans' exact round-11 escape: 1.774 vs 1.02
-    // committed = 1.74x slid under the old 2x gate — caught at 1.5x
-    assert(Bench.isAbsoluteSuspect("curation_repeated_spans", 1.774,
-      true))
+  test("health: a quiet record is not degraded") {
+    // the quiet sf0.1 window's shape: tasks on CPU most of their run,
+    // a few percent steal, no iowait
+    assert(!Health.degraded(rec(cpu = 17.0, run = 20.0, steal = 0.03)))
+    // a driver-only window (no task ran) shows no stall
+    assert(!Health.degraded(rec(cpu = 0.0, run = 0.0)))
+    assert(!Health.degraded(Health.Record.empty))
   }
 
-  test("phase probes cover the four high-variance entries, and every " +
-      "probed name is a registered query") {
-    val probes = graft.query.PipelineQueries.phaseProbes
-    assert(probes.contains("retrieval_service_cap"))
-    assert(probes("retrieval_service_cap").map(_._1) ==
-      Seq("lexical", "dense"))
-    assert(probes.contains("dedup_components_lsh"))
-    // round-12 verdict #2: the two r12 elevated entries carry probes
-    assert(probes("retrieval_hybrid_indexed_batch").map(_._1) ==
-      Seq("ensure_check", "lexical", "dense"))
-    assert(probes("dedup_simhash").map(_._1) ==
-      Seq("fingerprint", "band_candidates"))
-    // a probe on an unregistered name would silently never run
-    assert(probes.keySet.subsetOf(graft.SparkEntry.queries.keySet))
-    // probed entries must also carry committed medians — the probe
-    // exists to attribute an absolute-rule firing
-    assert(probes.keySet.forall(Bench.Committed.contains))
+  test("health: high steal degrades the window") {
+    val quiet = rec(cpu = 17.0, run = 20.0)
+    assert(!Health.degraded(quiet.copy(
+      stealTicks = (quiet.totalTicks * Health.MaxStealShare).toLong)))
+    assert(Health.degraded(quiet.copy(
+      stealTicks = (quiet.totalTicks * Health.MaxStealShare).toLong + 1)))
+    assert(Health.degraded(quiet.copy(
+      iowaitTicks = (quiet.totalTicks * Health.MaxIowaitShare).toLong + 1)))
   }
 
-  // ---- round-13 additions
-
-  test("recovery wait is bounded and real: <= ~4 min worst case, and " +
-      "the sub-0.55s movers all carry committed medians now") {
-    assert(Bench.MaxRecoveryAttempts == 5)
-    assert(Bench.RecoveryWaitMs >= 30000L && Bench.RecoveryWaitMs <= 60000L)
-    // round-12 VERDICT #3: the proven >=3x movers below the old tail
-    // threshold are gated regardless of absolute cost
-    assert(Seq("setop_intersect", "q19_bundle_revenue",
-      "json_props_extract", "vocab_topk", "vocab_topk_bpe",
-      "q11_important_parts", "setop_except", "retention_cohort",
-      "text_ngram_skip_search", "sample_stratified_lang",
-      "sample_split_8020", "sample_epoch_order", "window_rank_family",
-      "sim_cosine_lsh").forall(Bench.Committed.contains))
-    // every committed name must be a registered query — a typo'd
-    // entry would silently never gate
-    assert(Bench.Committed.keySet.subsetOf(
-      graft.SparkEntry.queries.keySet))
-    assert(Bench.Pins.keySet.subsetOf(graft.SparkEntry.queries.keySet))
+  test("health: low task CPU per task run degrades the window") {
+    // runnable task threads that do not get a core: run time keeps
+    // counting while CPU time does not
+    val run = 20.0
+    assert(Health.degraded(rec(cpu = run * Health.MinCpuPerRun * 0.99,
+      run = run)))
+    assert(!Health.degraded(rec(cpu = run * Health.MinCpuPerRun * 1.01,
+      run = run)))
   }
 
-  // ---- round-14 additions (round-13 VERDICT #1/#3)
-
-  test("full coverage: EVERY registered query carries a committed " +
-      "median — the r13 movers' escape hole (only the expensive tail " +
-      "was covered) is closed") {
-    val uncovered = graft.SparkEntry.queries.keySet -- Bench.Committed.keySet
-    assert(uncovered.isEmpty,
-      s"queries with no committed median: ${uncovered.toSeq.sorted}")
-    // the four r13 movers that slipped through specifically
-    assert(Seq("curation_seq_packing", "doc_fingerprint",
-      "agg_quantile_deterministic", "multimodal_frames")
-      .forall(Bench.Committed.contains))
-  }
-
-  test("absolute gate = max(1.5x, +0.3s): the slack term keeps " +
-      "sub-0.3s wobbles unflagged while real movers still fire") {
-    assert(Bench.AbsoluteSlackSec == 0.3)
-    // a 0.1s-committed entry wobbling +80ms (the json_props/cms churn)
-    // stays quiet: 0.18 < max(0.15, 0.4) = 0.4
-    assert(!Bench.isAbsoluteSuspect("doc_fingerprint",
-      Bench.Committed("doc_fingerprint") + 0.08, true))
-    // but doc_fingerprint's actual unflagged r13 step (0.088 -> 0.432)
-    // fires
-    assert(Bench.isAbsoluteSuspect("doc_fingerprint", 0.432, true))
-    // for the expensive tail the factor dominates and is unchanged
-    val c = Bench.Committed("retrieval_service_cap")
-    assert(Bench.isAbsoluteSuspect("retrieval_service_cap",
-      c * 1.51, true))
-    assert(!Bench.isAbsoluteSuspect("retrieval_service_cap",
-      c * 1.49, true))
-  }
-
-  test("canary baseline provenance: committed constants exist and sit " +
-      "in the healthy-window range — the operative baseline can never " +
-      "again be a degraded start-of-run reading") {
-    // r13 driver artifact carried baseline 1.264 vs committed
-    // 0.107-0.122; these constants ARE the operative baseline now
-    assert(Bench.CanaryBaselineCommitted == 0.121)
-    assert(Bench.CpuCanaryBaselineCommitted == 0.010)
-    // the startup gate threshold: a fresh baseline over 2x committed
-    // delays the run (same suspect arithmetic)
-    assert(Bench.isCanarySuspect(Bench.CanaryBaselineCommitted * 2.0,
-      Bench.CanaryBaselineCommitted))
-  }
-
-  test("cpu canary: deterministic fixed work, strictly positive time") {
-    // two runs of the fixed workload both complete and time > 0; the
-    // blackhole prevents DCE so the loop really runs
-    val a = Bench.cpuCanaryOnce()
-    val b = Bench.cpuCanaryOnce()
-    assert(a > 0.0 && b > 0.0)
-  }
-
-  // ---- round-16 additions (round-15 VERDICT #1: the r15 driver
-  // window published degraded:false at canary max 28x / end 6.1x with
-  // zero suspects re-measured)
-
-  test("windowDegraded: the replayed r15 contaminated window marks " +
-      "itself degraded") {
-    // spark canary max 3.419/0.121 = 28.3x, end 0.740/0.121 = 6.1x,
-    // cpu end 0.109/0.010 = 10.9x, 29 suspects, 0 remeasured
-    assert(Bench.windowDegraded(pinViolations = false,
-      canaryMaxRatio = 28.3, canaryEndRatio = 6.1,
-      cpuCanaryEndRatio = 10.9, unremeasuredSuspects = true))
-    // the end rule fires alone, even had every suspect re-measured
-    assert(Bench.windowDegraded(false, 1.0, 6.1, 1.0, false))
-    assert(Bench.windowDegraded(false, 1.0, 1.0, 10.9, false))
-  }
-
-  test("windowDegraded: a healthy window with one-off canary blips " +
-      "and all suspects re-measured publishes non-degraded") {
-    // the round-16 open window: spark max 2.16x, end 1.09x, cpu end
-    // 1.4x, every suspect re-measured
-    assert(!Bench.windowDegraded(false, 2.16, 1.09, 1.4, false))
-    // even a 28x mid-run spike is repaired evidence once every
-    // suspect was re-measured in a recovered window and the end
-    // reading is healthy
-    assert(!Bench.windowDegraded(false, 28.3, 1.09, 1.4, false))
-  }
-
-  test("windowDegraded: an in-run max spike >= 4x with unrepaired " +
-      "suspects degrades; pins still degrade unconditionally") {
-    assert(Bench.windowDegraded(false, Bench.MaxContaminationRatio,
-      1.0, 1.0, unremeasuredSuspects = true))
-    assert(!Bench.windowDegraded(false, Bench.MaxContaminationRatio,
-      1.0, 1.0, unremeasuredSuspects = false))
-    assert(!Bench.windowDegraded(false, 3.9, 1.0, 1.0, true))
-    assert(Bench.windowDegraded(true, 1.0, 1.0, 1.0, false))
+  test("health: records sum, so a run is judged over every pass") {
+    val a = rec(cpu = 9.0, run = 10.0, steal = 0.02)
+    val b = rec(cpu = 2.0, run = 10.0, steal = 0.10)
+    val sum = a + b
+    assert(sum.taskCpuSec == 11.0 && sum.taskRunSec == 20.0)
+    assert(math.abs(sum.cpuPerRun - 0.55) < 1e-9)
+    assert(math.abs(sum.stealShare - 0.06) < 1e-9)
+    assert(Seq(a, b).foldLeft(Health.Record.empty)(_ + _) == sum)
   }
 }
