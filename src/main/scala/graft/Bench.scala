@@ -16,7 +16,7 @@ import graft.obs.Health
   *
   * Each query is the median of 3 timed passes; a pass that threw is
   * recorded and excluded from every statistic. The run judges its own
-  * health: a [[graft.obs.Health.Monitor]] records task CPU, task run,
+  * health: [[graft.obs.Health.measure]] records run-queue wait,
   * steal and iowait over every timed pass, and
   * [[graft.obs.Health.degraded]] over the summed record sets the
   * published `degraded` flag. Per-pass loadavg, GC seconds, disk-read
@@ -59,9 +59,9 @@ object Bench {
   case class Pass(sec: Double, load: Double, gcSec: Double, ioMb: Double,
       failed: Boolean = false, health: Health.Record = Health.Record.empty)
 
-  private def timedPass(monitor: Health.Monitor)(body: => Unit): Pass = {
+  private def timedPass(body: => Unit): Pass = {
     val gc0 = gcMillis; val io0 = diskReadBytes
-    val (out, rec) = monitor.measure(body)
+    val (out, rec) = Health.measure(body)
     val io1 = diskReadBytes
     Pass(rec.wallSec, loadNow, (gcMillis - gc0) / 1e3,
       if (io0 < 0 || io1 < 0) -1.0 else (io1 - io0) / 1048576.0,
@@ -265,10 +265,9 @@ object Bench {
     // robust to one bad sample. Min/max are kept in the artifact file
     // so a reader can see each query's spread.
     val passes = 3
-    val monitor = Health.attach(spark)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val samples = (0 until passes).map { _ =>
-        timedPass(monitor) { materialize(fn(spark, sfDir)); () }
+        timedPass { materialize(fn(spark, sfDir)); () }
       }
       clearSessionState(spark)
       name -> Entry(samples)

@@ -13,7 +13,7 @@ import graft.pipeline.{DirectPipeline, MaterializedPipeline}
   * Not part of the driver contract; numbers recorded in BASELINE.md.
   *
   * Every metric row carries the [[graft.obs.Health]] record of its own
-  * timed region (task CPU ÷ task run, steal, iowait), and the closing
+  * timed region (run-queue wait share, steal, iowait), and the closing
   * `stream_health` row judges the summed record with
   * [[graft.obs.Health.degraded]] — the same rule the batch bench uses.
   * The three curation rows carry per-tier phase seconds
@@ -27,7 +27,6 @@ object StreamBench {
       "200000").toInt
     val nFiles = 20
     val spark = SparkEntry.localSession("ERROR")
-    val monitor = graft.obs.Health.attach(spark)
 
     val root = Files.createTempDirectory("streambench").toString
     val cfg = PipelineConfig(topicsRoot = s"$root/topics",
@@ -56,7 +55,7 @@ object StreamBench {
     var lastHealth = graft.obs.Health.Record.empty
     var runHealth = graft.obs.Health.Record.empty
     def timed(f: => Unit): Double = {
-      val (out, rec) = monitor.measure(f)
+      val (out, rec) = graft.obs.Health.measure(f)
       out.get
       lastHealth = rec; runHealth = runHealth + rec
       rec.wallSec

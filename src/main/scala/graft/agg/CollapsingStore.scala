@@ -1,6 +1,6 @@
 package graft.agg
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sign-collapsing append store — the CollapsingMergeTree analog, the
@@ -21,65 +21,23 @@ import org.apache.spark.sql.functions._
   *     (deleted entities). Correct with ANY interleaving of appends
   *     and compactions, exactly like the reference engine's
   *     `sum(sign)`-style queries.
-  *   - [[compact]] — the background-merge analog: physically cancels
-  *     matched pairs by folding to the net rows. Optional; bounds
-  *     read amplification only.
+  *   - [[compact]] — the background-merge analog: its merge nets every
+  *     key and drops the keys whose net sign is 0, which physically
+  *     cancels matched pairs. Optional; bounds read amplification only.
   *
   * Scale note: store size is bounded by (#changes), not raw event
   * volume, and the read is one map-side-combined aggregate on the
   * key — the same single-shuffle shape as [[SummingStore.read]].
   */
 final class CollapsingStore(path: String, keyCols: Seq[String],
-    valCols: Seq[String], signCol: String = "sign") {
+    valCols: Seq[String], signCol: String = "sign")
+    extends PartStore(path) {
 
-  /** Append one block of signed rows; `batchId` keys the write so a
-    * replayed micro-batch overwrites itself (exactly-once, same
-    * contract as [[SummingStore.append]]). Batch ids at or below the
-    * [[compact]] watermark are refused — those rows are already folded
-    * into `batch=compacted`, and re-appending them would double-count. */
-  def append(signed: DataFrame, batchId: Long): Unit = {
-    require(batchId > StoreCompaction.compactedThrough(
-        signed.sparkSession, path),
-      s"batch $batchId was already folded by compact(); replaying it " +
-        "would double-count")
-    // single-writer discipline, enforced loudly: never overwrite a dir
-    // an anonymous batch-mode append owns (StoreCompaction.markAnon)
-    StoreCompaction.assertNotAnon(
-      graft.scale.Hdfs.of(signed.sparkSession, path), path, batchId)
-    signed.write.mode(SaveMode.Overwrite).parquet(s"$path/batch=$batchId")
-  }
-
-  /** Append without batch identity (batch-mode callers) — lands just
-    * above BOTH the compaction watermark and every batch dir on disk
-    * (max(on-disk id, watermark)+1), so the rows stay visible under
-    * the generation manifest AND cannot land inside a streamed dir a
-    * concurrent compact is mid-fold on (the SummingStore.append fix —
-    * watermark+1 alone collides with not-yet-folded streamed ids). */
-  def append(signed: DataFrame): Unit = {
-    val spark = signed.sparkSession
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val next = math.max(StoreCompaction.maxBatchId(fs, path),
-      StoreCompaction.compactedThrough(spark, path)) + 1
-    // claim BEFORE the rows land (crash-window fix — see
-    // SummingStore.append)
-    StoreCompaction.markAnon(fs, path, next)
-    signed.write.mode(SaveMode.Append).parquet(s"$path/batch=$next")
-  }
-
-  private def netted(spark: SparkSession): DataFrame = {
-    // manifest-filtered listing, not a raw batch=* glob — the retired
-    // generation stays on disk one fold post-compact (reader grace)
-    // and a glob would double-count it against its folded block
-    val fs = graft.scale.Hdfs.of(spark, path)
-    nettedFrom(spark, StoreCompaction.visibleBatchDirs(fs, path))
-  }
-
-  private def nettedFrom(spark: SparkSession,
-      dirs: Seq[String]): DataFrame = {
-    val raw = spark.read.option("basePath", path).parquet(dirs: _*)
+  protected def merge(parts: DataFrame): DataFrame = {
     val aggs = sum(col(signCol)).as(signCol) +:
       valCols.map(c => sum(col(c) * col(signCol)).as(c))
-    raw.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    parts.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      .filter(col(signCol) =!= 0)
   }
 
   /** Sign-weighted merged view: keys whose net sign is <= 0 (fully
@@ -87,42 +45,7 @@ final class CollapsingStore(path: String, keyCols: Seq[String],
     * values. The net sign is kept as a column — a consumer asserting
     * exactly-one-live-row-per-key checks `sign === 1`. */
   def read(spark: SparkSession): DataFrame =
-    netted(spark)
+    merge(parts(spark))
       .filter(col(signCol) > 0)
       .select((keyCols ++ Seq(signCol) ++ valCols).map(col): _*)
-
-  /** Physically collapse cancelled pairs (background-merge analog):
-    * fold every batch into the net rows, DROPPING fully-cancelled
-    * keys. [[read]] is correct before, after, AND concurrently with a
-    * compact — the fold publishes atomically via the generation
-    * manifest and retires absorbed dirs one fold later (see
-    * [[StoreCompaction]]'s protocol), so a racing reader always sees
-    * one complete view. Replays of already-folded batches are refused
-    * by [[append]]'s watermark check rather than double-counted. */
-  def compact(spark: SparkSession): Unit = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_compact_tmp")
-    // one snapshot drives schema probe, fold input, and watermark —
-    // see SummingStore.compact
-    val dirs = StoreCompaction.visibleBatchDirs(fs, path)
-    if (dirs.isEmpty) {
-      // empty store, or a legacy-scheme crash left folded rows in the
-      // temp dir with no visible batch dirs — publish them, don't
-      // throw on the schema probe below
-      StoreCompaction.recoverOrNoop(fs, path, tmp)
-      return
-    }
-    // cast the folded block back to the RAW batch schema (sums widen
-    // int sign/value columns to long) so post-compact appends — which
-    // write original-width rows — still union cleanly at read time;
-    // the helper raises on any net value the narrower type cannot
-    // hold instead of silently wrapping it
-    val rawSchema = spark.read.option("basePath", path)
-      .parquet(dirs: _*).schema
-    StoreCompaction
-      .castToRawSchema(
-        nettedFrom(spark, dirs).filter(col(signCol) =!= 0), rawSchema)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    StoreCompaction.foldBatches(fs, path, tmp, dirs)
-  }
 }

@@ -48,7 +48,8 @@ object DailyRollup {
   /** The read-side final aggregation (kafka+clickhouse.md:240-243):
     * `SELECT level, sum(total) AS total_count FROM daily GROUP BY level`.
     * Mandatory re-sum — correctness never depends on compaction having
-    * run (SummingMergeTree contract, kafka+clickhouse.md:396-401).
+    * run (SummingMergeTree contract, kafka+clickhouse.md:396-401), so
+    * `daily` may be the store's unmerged parts.
     */
   def levelTotals(daily: DataFrame): DataFrame =
     daily

@@ -1,7 +1,6 @@
 package graft.agg
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Append-only store of mergeable AGGREGATE STATES — the
@@ -21,7 +20,7 @@ import org.apache.spark.sql.functions._
   * key, from state O(lgK) per key instead of O(distinct values).
   */
 final class SketchStore(path: String, keyCols: Seq[String],
-    lgConfigK: Int = 12) {
+    lgConfigK: Int = 12) extends PartStore(path) {
 
   /** Partial states for one block: one HLL sketch of `valueCol` per
     * key. Call inside `foreachBatch` with the batch's rows. */
@@ -29,23 +28,11 @@ final class SketchStore(path: String, keyCols: Seq[String],
     block.groupBy(keyCols.map(col): _*)
       .agg(hll_sketch_agg(valueCol, lit(lgConfigK)).as("state"))
 
-  /** Idempotent append (exactly-once per epoch, same discipline as
-    * [[SummingStore.append]], including the refusal of batch ids the
-    * compaction watermark has already absorbed). */
-  def append(states: DataFrame, batchId: Long): Unit = {
-    require(batchId > StoreCompaction.compactedThrough(
-        states.sparkSession, path),
-      s"batch $batchId was already folded by compact(); replaying it " +
-        "would double-count")
-    states.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/batch=$batchId")
-  }
+  private def union(parts: DataFrame, by: Seq[String]): DataFrame =
+    parts.groupBy(by.map(col): _*)
+      .agg(hll_union_agg(col("state"), lit(false)).as("state"))
 
-  private def raw(spark: SparkSession): DataFrame = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    spark.read.option("basePath", path)
-      .parquet(StoreCompaction.visibleBatchDirs(fs, path): _*)
-  }
+  protected def merge(parts: DataFrame): DataFrame = union(parts, keyCols)
 
   /** Merged estimate per stored key: union states across batches, then
     * finalize. The mandatory read-side merge of the Aggregating
@@ -58,35 +45,9 @@ final class SketchStore(path: String, keyCols: Seq[String],
     * distinct counts roll up by unioning states, never by adding
     * estimates. */
   def readGrouped(spark: SparkSession, groupCols: Seq[String]): DataFrame =
-    raw(spark)
-      .groupBy(groupCols.map(col): _*)
-      .agg(hll_sketch_estimate(hll_union_agg(col("state"), lit(false)))
-        .as("distinct_estimate"))
-      .select((groupCols :+ "distinct_estimate").map(col): _*)
-
-  /** Background-merge analog: collapse per-batch states into one block
-    * of unioned states per key. [[read]] is correct without it, and
-    * correct RACING it — the fold publishes atomically via
-    * [[StoreCompaction]]'s generation manifest. */
-  def compact(spark: SparkSession): Unit = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val tmp = new Path(s"$path/_compact_tmp")
-    // one snapshot drives fold input AND watermark (see
-    // SummingStore.compact); legacy-crash temp state recovers instead
-    // of stranding (review-caught: Summing/Collapsing had the
-    // recovery, the sketch stores didn't)
-    val dirs = StoreCompaction.visibleBatchDirs(fs, path)
-    if (dirs.isEmpty) {
-      StoreCompaction.recoverOrNoop(fs, path, tmp)
-      return
-    }
-    spark.read.option("basePath", path).parquet(dirs: _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(hll_union_agg(col("state"), lit(false)).as("state"))
-      .select((keyCols :+ "state").map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    StoreCompaction.foldBatches(fs, path, tmp, dirs)
-  }
+    union(parts(spark), groupCols)
+      .select(groupCols.map(col) :+
+        hll_sketch_estimate(col("state")).as("distinct_estimate"): _*)
 }
 
 /** Append-only store of mergeable QUANTILE states — the second
@@ -103,7 +64,7 @@ final class SketchStore(path: String, keyCols: Seq[String],
   * bounds read amplification.
   */
 final class QuantileStore(path: String, keyCols: Seq[String],
-    relativeError: Double = 0.001) {
+    relativeError: Double = 0.001) extends PartStore(path) {
 
   /** Partial states for one block: one quantile state of `valueCol`
     * per key. Call inside `foreachBatch` with the batch's rows. */
@@ -111,22 +72,11 @@ final class QuantileStore(path: String, keyCols: Seq[String],
     block.groupBy(keyCols.map(col): _*)
       .agg(QuantileState.stateAgg(valueCol, relativeError).as("qstate"))
 
-  /** Idempotent append (exactly-once per epoch, same discipline as
-    * [[SummingStore.append]], including the watermark refusal). */
-  def append(states: DataFrame, batchId: Long): Unit = {
-    require(batchId > StoreCompaction.compactedThrough(
-        states.sparkSession, path),
-      s"batch $batchId was already folded by compact(); replaying it " +
-        "would double-count")
-    states.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/batch=$batchId")
-  }
+  private def union(parts: DataFrame, by: Seq[String]): DataFrame =
+    parts.groupBy(by.map(col): _*)
+      .agg(QuantileState.mergeAgg(col("qstate")).as("qstate"))
 
-  private def raw(spark: SparkSession): DataFrame = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    spark.read.option("basePath", path)
-      .parquet(StoreCompaction.visibleBatchDirs(fs, path): _*)
-  }
+  protected def merge(parts: DataFrame): DataFrame = union(parts, keyCols)
 
   /** Column name for probability `p`: p50, p99, p99_9. */
   private def probName(p: Double): String =
@@ -141,37 +91,10 @@ final class QuantileStore(path: String, keyCols: Seq[String],
     * states union under the sketch merge, then finalize each
     * requested quantile. */
   def readGrouped(spark: SparkSession, groupCols: Seq[String],
-      probs: Seq[Double]): DataFrame = {
-    val merged = raw(spark)
-      .groupBy(groupCols.map(col): _*)
-      .agg(QuantileState.mergeAgg(col("qstate")).as("qstate"))
-    merged.select(groupCols.map(col) ++
+      probs: Seq[Double]): DataFrame =
+    union(parts(spark), groupCols).select(groupCols.map(col) ++
       probs.map(p =>
         QuantileState.value(col("qstate"), p).as(probName(p))): _*)
-  }
-
-  /** Background-merge analog: collapse per-batch states into one
-    * unioned state per key. [[read]] is correct without it, and
-    * correct RACING it (reader-safe fold via [[StoreCompaction]]). */
-  def compact(spark: SparkSession): Unit = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val tmp = new Path(s"$path/_compact_tmp")
-    // one snapshot drives fold input AND watermark (see
-    // SummingStore.compact); legacy-crash temp state recovers instead
-    // of stranding (review-caught: Summing/Collapsing had the
-    // recovery, the sketch stores didn't)
-    val dirs = StoreCompaction.visibleBatchDirs(fs, path)
-    if (dirs.isEmpty) {
-      StoreCompaction.recoverOrNoop(fs, path, tmp)
-      return
-    }
-    spark.read.option("basePath", path).parquet(dirs: _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(QuantileState.mergeAgg(col("qstate")).as("qstate"))
-      .select((keyCols :+ "qstate").map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    StoreCompaction.foldBatches(fs, path, tmp, dirs)
-  }
 }
 
 /** Append-only store of mergeable COUNT-MIN states — the
@@ -190,7 +113,7 @@ final class QuantileStore(path: String, keyCols: Seq[String],
   * read amplification.
   */
 final class CountMinStore(path: String, keyCols: Seq[String],
-    depth: Int = 4, width: Int = 1024) {
+    depth: Int = 4, width: Int = 1024) extends PartStore(path) {
 
   /** Partial states for one block: one CMS of `valueCol` per key.
     * Call inside `foreachBatch` with the batch's rows. */
@@ -198,22 +121,11 @@ final class CountMinStore(path: String, keyCols: Seq[String],
     block.groupBy(keyCols.map(col): _*)
       .agg(CountMinState.stateAgg(valueCol, depth, width).as("cms"))
 
-  /** Idempotent append (exactly-once per epoch, same discipline as
-    * [[SummingStore.append]], including the watermark refusal). */
-  def append(states: DataFrame, batchId: Long): Unit = {
-    require(batchId > StoreCompaction.compactedThrough(
-        states.sparkSession, path),
-      s"batch $batchId was already folded by compact(); replaying it " +
-        "would double-count")
-    states.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/batch=$batchId")
-  }
+  private def union(parts: DataFrame, by: Seq[String]): DataFrame =
+    parts.groupBy(by.map(col): _*)
+      .agg(CountMinState.mergeAgg(col("cms")).as("cms"))
 
-  private def raw(spark: SparkSession): DataFrame = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    spark.read.option("basePath", path)
-      .parquet(StoreCompaction.visibleBatchDirs(fs, path): _*)
-  }
+  protected def merge(parts: DataFrame): DataFrame = union(parts, keyCols)
 
   /** Merged state per stored key. */
   def read(spark: SparkSession): DataFrame = readGrouped(spark, keyCols)
@@ -224,31 +136,5 @@ final class CountMinStore(path: String, keyCols: Seq[String],
     * any key set. */
   def readGrouped(spark: SparkSession,
       groupCols: Seq[String]): DataFrame =
-    raw(spark)
-      .groupBy(groupCols.map(col): _*)
-      .agg(CountMinState.mergeAgg(col("cms")).as("cms"))
-      .select((groupCols :+ "cms").map(col): _*)
-
-  /** Background-merge analog: collapse per-batch states into one
-    * unioned state per key. [[read]] is correct without it, and
-    * correct RACING it (reader-safe fold via [[StoreCompaction]]). */
-  def compact(spark: SparkSession): Unit = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val tmp = new Path(s"$path/_compact_tmp")
-    // one snapshot drives fold input AND watermark (see
-    // SummingStore.compact); legacy-crash temp state recovers instead
-    // of stranding (review-caught: Summing/Collapsing had the
-    // recovery, the sketch stores didn't)
-    val dirs = StoreCompaction.visibleBatchDirs(fs, path)
-    if (dirs.isEmpty) {
-      StoreCompaction.recoverOrNoop(fs, path, tmp)
-      return
-    }
-    spark.read.option("basePath", path).parquet(dirs: _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(CountMinState.mergeAgg(col("cms")).as("cms"))
-      .select((keyCols :+ "cms").map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    StoreCompaction.foldBatches(fs, path, tmp, dirs)
-  }
+    union(parts(spark), groupCols)
 }

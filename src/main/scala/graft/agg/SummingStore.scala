@@ -1,7 +1,6 @@
 package graft.agg
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Append-only store of partial aggregates with read-side re-summing —
@@ -12,7 +11,8 @@ import org.apache.spark.sql.functions._
   * an optional [[compact]] job or, always and sufficiently, by the
   * mandatory read-side `groupBy(key).sum` in [[read]]. Correctness never
   * depends on compaction; compaction only bounds the number of partial
-  * rows scanned at read time.
+  * rows scanned at read time. Parts, visibility and the fold are
+  * [[graft.scale.PartLog]]'s.
   *
   * This design (append partials, re-sum on read) is deliberately chosen
   * over a stateful streaming aggregation: it reproduces the reference's
@@ -25,135 +25,16 @@ import org.apache.spark.sql.functions._
   * periodic [[compact]] keeps read amplification bounded over long runs.
   */
 final class SummingStore(path: String, keyCols: Seq[String],
-    sumCols: Seq[String]) {
+    sumCols: Seq[String]) extends PartStore(path) {
 
-  /** Append one block of partial aggregates. `batchId` makes the write
-    * idempotent under streaming restarts (exactly-once per epoch): each
-    * micro-batch writes to its own `batch=<id>` subdir and a replayed
-    * batch simply overwrites the same subdir with identical content.
-    * Refuses batch ids at or below the compaction watermark: those
-    * rows are already folded into `batch=compacted`, so re-appending
-    * them would double-count — the one replay [[compact]] cannot make
-    * idempotent. New (higher-id) batches keep appending normally after
-    * a compact.
-    */
-  def append(partials: DataFrame, batchId: Long): Unit = {
-    val spark = partials.sparkSession
-    require(batchId > StoreCompaction.compactedThrough(spark, path),
-      s"batch $batchId was already folded by compact(); replaying it " +
-        "would double-count")
-    // refuse to clobber an anonymously-appended dir: a keyed overwrite
-    // is only idempotent against ITS OWN prior write, and a store fed
-    // by both writer kinds can collide forward (single-writer
-    // discipline, enforced loudly — see StoreCompaction.markAnon)
-    StoreCompaction.assertNotAnon(
-      graft.scale.Hdfs.of(spark, path), path, batchId)
-    partials.write.mode(SaveMode.Overwrite).parquet(s"$path/batch=$batchId")
-  }
-
-  /** Append without batch identity (batch-mode callers). Lands just
-    * above BOTH the compaction watermark and every batch dir on disk —
-    * a fixed `batch=0` would fall below the watermark (invisible) once
-    * a fold has absorbed id 0, and watermark+1 alone can equal a
-    * streamed batch id above the watermark that a concurrent compact
-    * is mid-fold on: rows appended into that dir during the fold go
-    * invisible at publish and are deleted next fold (review-caught).
-    * Taking max(on-disk id, watermark)+1 lands in a FRESH dir no
-    * in-flight fold snapshot can contain. */
-  def append(partials: DataFrame): Unit = {
-    val spark = partials.sparkSession
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val next = math.max(StoreCompaction.maxBatchId(fs, path),
-      StoreCompaction.compactedThrough(spark, path)) + 1
-    // claim the dir BEFORE the rows land: marker-after-write left a
-    // crash window where committed anonymous rows sat unprotected
-    // from exactly the stream clobber the marker prevents
-    // (review-caught). A crash after the claim leaves an empty marked
-    // dir — a streamed append at that id then refuses loudly, which
-    // is safe (the crashed anonymous append never reported success).
-    StoreCompaction.markAnon(fs, path, next)
-    partials.write.mode(SaveMode.Append).parquet(s"$path/batch=$next")
-  }
-
-  private def merged(spark: SparkSession): DataFrame = {
-    // manifest-filtered listing, not a raw batch=* glob: after a
-    // compact the just-retired generation stays on disk one fold as
-    // the in-flight readers' grace window, and a glob would count its
-    // rows AND the block that absorbed them
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val raw = spark.read.option("basePath", path)
-      .parquet(StoreCompaction.visibleBatchDirs(fs, path): _*)
+  protected def merge(parts: DataFrame): DataFrame = {
     val aggs = sumCols.map(c => sum(col(c)).as(c))
-    raw
+    parts
       .groupBy(keyCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .select((keyCols ++ sumCols).map(col): _*)
   }
 
   /** Merged view: the mandatory read-side re-sum. */
-  def read(spark: SparkSession): DataFrame = merged(spark)
-
-  /** Totals as of batch `maxBatchId` inclusive — time travel over the
-    * append log, free because partials are batch-keyed (the audit
-    * answer to "what did the dashboard say after epoch N?"). Only valid
-    * while per-batch history exists: [[compact]] folds partials into
-    * one block and deliberately trades this capability for bounded read
-    * amplification (the same trade a ClickHouse merge makes), so the
-    * read refuses loudly after compaction rather than silently
-    * returning folded totals.
-    */
-  def readAsOf(spark: SparkSession, maxBatchId: Long): DataFrame = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    require(StoreCompaction.compactedThrough(spark, path) < 0 &&
-      !fs.exists(new Path(s"$path/batch=compacted")),
-      "as-of read unavailable: compact() has folded per-batch history")
-    val raw = spark.read.option("basePath", path)
-      .parquet(StoreCompaction.visibleBatchDirs(fs, path): _*)
-    val aggs = sumCols.map(c => sum(col(c)).as(c))
-    raw
-      .filter(col("batch").cast("long") <= maxBatchId)
-      .groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select((keyCols ++ sumCols).map(col): _*)
-  }
-
-  /** Background-merge analog: collapse all partials into one block.
-    * Optional; [[read]] is correct with or without it — INCLUDING a
-    * read racing this compact: the folded block lands under a
-    * not-yet-published generation name, the manifest flips atomically,
-    * and the dirs it absorbed survive one more fold as the in-flight
-    * readers' grace window (see [[StoreCompaction]]'s protocol). A
-    * reader therefore always observes one complete view, the same
-    * guarantee ClickHouse readers get across a background merge.
-    */
-  def compact(spark: SparkSession): Unit = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val tmp = new Path(s"$path/_compact_tmp")
-    // ONE snapshot of the visible view drives the schema probe, the
-    // fold input, AND the published watermark — a re-listing anywhere
-    // in between could absorb a just-appended batch the folded block
-    // does not contain (review-caught; also one listing instead of
-    // four round-trips)
-    val dirs = StoreCompaction.visibleBatchDirs(fs, path)
-    if (dirs.isEmpty) {
-      // empty store, or a legacy-scheme crash left folded rows in the
-      // temp dir with no visible batch dirs — publish them, don't
-      // throw on the schema probe below
-      StoreCompaction.recoverOrNoop(fs, path, tmp)
-      return
-    }
-    // cast the folded block back to the RAW batch schema (sum widens
-    // int columns to long) so post-compact appends — which write
-    // original-width rows — still union cleanly at read time; the
-    // helper raises on any total the narrower type cannot hold
-    // instead of silently wrapping it
-    val raw = spark.read.option("basePath", path).parquet(dirs: _*)
-    val aggs = sumCols.map(c => sum(col(c)).as(c))
-    val folded = raw.groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select((keyCols ++ sumCols).map(col): _*)
-    StoreCompaction.castToRawSchema(folded, raw.schema)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    StoreCompaction.foldBatches(fs, path, tmp, dirs)
-  }
+  def read(spark: SparkSession): DataFrame = merge(parts(spark))
 }

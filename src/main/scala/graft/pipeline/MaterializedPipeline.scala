@@ -53,7 +53,10 @@ object MaterializedPipeline {
       .start()
   }
 
-  /** The dashboard read (kafka+clickhouse.md:240-243, 464-468). */
+  /** The dashboard read (kafka+clickhouse.md:240-243, 464-468), as the
+    * reference writes it: one `sum(total) GROUP BY level` over the
+    * visible parts. The sum re-sums across parts, so no (day, level)
+    * merge is needed first. */
   def levelTotals(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    DailyRollup.levelTotals(dailyStore(cfg).read(spark))
+    DailyRollup.levelTotals(dailyStore(cfg).parts(spark))
 }

@@ -259,7 +259,7 @@ object MediaPipeline {
       excludeBatch: Option[Long] = None): DataFrame = {
     val fs = graft.scale.Hdfs.of(spark, dir)
     // ONE glob for the committed markers — an exists() per batch dir
-    // is an N+1 on object stores (the visibleDirs lesson;
+    // is an N+1 on object stores (the PartLog view lesson;
     // review-caught here too)
     val marks = fs.globStatus(
       new org.apache.hadoop.fs.Path(dir, "batch=*/_SUCCESS"))

@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.agg.DailyRollup
 import graft.config.PipelineConfig
 import graft.pipeline.{DirectPipeline, MaterializedPipeline}
 
@@ -58,8 +57,7 @@ object Retrieval {
     val fromRaw = DirectPipeline.emailEvents(spark, cfg)
       .groupBy(col("event_type").as("level"))
       .agg(count(lit(1)).as("total_count"))
-    val fromAgg = DailyRollup.levelTotals(
-      MaterializedPipeline.dailyStore(cfg).read(spark))
+    val fromAgg = MaterializedPipeline.levelTotals(spark, cfg)
     fromRaw.join(fromAgg, Seq("level"), "full_outer")
       .filter(!(fromRaw("total_count") <=> fromAgg("total_count")))
   }

@@ -2,11 +2,11 @@ package graft.scale
 
 /** The ordering rules of every multi-step store mutation, expressed
   * ONCE (round-10 verdict #5: five batchId-keyed delta stores had
-  * grown three commit idioms — StoreCompaction's MVCC-with-grace,
-  * TextSkipIndex's sidecar-retract-first, and the postings/IVF marker
-  * commits — each individually spec-verified, but every new store
-  * cloned a fresh variant and re-derived its crash-window analysis by
-  * hand).
+  * grown three commit idioms — the part-log MVCC-with-grace (now
+  * [[PartLog]]'s one fold), TextSkipIndex's sidecar-retract-first, and
+  * the postings/IVF marker commits — each individually spec-verified,
+  * but every new store cloned a fresh variant and re-derived its
+  * crash-window analysis by hand).
   *
   * A commit is an ordered list of NAMED steps executed through
   * [[run]]. In production this is a plain sequential executor — zero
@@ -17,8 +17,8 @@ package graft.scale
   * and asserts each store's documented crash contract in every
   * window:
   *
-  *  - reader-safe stores (the agg append stores, SampleLayout,
-  *    TextSkipIndex): every window reads a complete consistent view —
+  *  - reader-safe stores ([[PartLog]], which the agg append stores
+  *    and SampleLayout share, and TextSkipIndex): every window reads a complete consistent view —
   *    old or new, never partial, never dangling.
   *  - maintenance folds (BM25 postings, IVF cell deltas — documented
   *    "no reader/replay in flight" contract): every window is either

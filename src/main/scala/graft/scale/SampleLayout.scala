@@ -1,7 +1,7 @@
 package graft.scale
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Sampling
@@ -29,32 +29,16 @@ import graft.ops.Sampling
   * the id (a caller-supplied `sample_key` column is dropped) —
   * membership stays a pure function of the id by construction.
   *
-  * Layout = a generation-named base `base_g<g>/` plus batchId-keyed
-  * delta dirs `b_<id>/` (the delta discipline every store in this
-  * engine follows — and exactly how ClickHouse itself ingests: each
-  * new part is internally sorted by the PK, sampling key included).
-  * Each delta batch is range-partitioned + key-sorted like the base,
-  * so slab pruning applies per delta file (and per row group within)
-  * at the batch's grain until [[compact]] folds it in.
-  *
-  * Reader-safety protocol (the [[graft.agg.StoreCompaction]]
-  * manifest-with-grace scheme, reduced to this layout): the visible
-  * view is `_manifest` = "gen through" — readers scan
-  * `base_g<gen>` + committed deltas with id > through, resolved in
-  * ONE glob. [[compact]] and [[write]] land their new base as the
-  * INVISIBLE next generation, atomically flip the manifest (complete
-  * view -> complete view; a crash before the flip changes nothing, a
-  * crash after it leaves superseded dirs invisible — never
-  * double-counted), and delete only dirs a PREVIOUS publish already
-  * superseded (the grace window for in-flight readers — one
-  * fold/rebuild cycle). A reader that out-sleeps the grace window
-  * fails LOUDLY (missing base -> error), never silently partially. A
-  * crashed append's markerless delta dir is invisible; replay
-  * Overwrites it idempotently, and a replay whose id the watermark
-  * already covers is REFUSED (its rows are in the folded base; a
-  * wiped checkpoint restarting ids at 0 must error, not silently
-  * land forever-invisible dirs). Single writer per store (stream OR
-  * batch owner), readers unrestricted.
+  * The layout is a [[PartLog]]: a folded base plus one part per
+  * appended batch (the delta discipline every store in this engine
+  * follows, and exactly how ClickHouse itself ingests: each new part is
+  * internally sorted by the PK, sampling key included). Each part is
+  * range-partitioned and key-sorted like the base, so slab pruning
+  * applies per part file (and per row group within) at the batch's
+  * grain until [[compact]] folds it in. Visibility, the replay
+  * watermark and the reader-safe fold are PartLog's; this object adds
+  * the sorted write and the slab scan. Single writer per store (stream
+  * OR batch owner), readers unrestricted.
   */
 object SampleLayout {
 
@@ -75,45 +59,13 @@ object SampleLayout {
     sys.props("java.io.tmpdir") + "/graft_sampleidx_" +
       sfDir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  private def baseDir(path: String, gen: Long) = s"$path/base_g$gen"
-  private def deltaDir(path: String, id: Long) = s"$path/b_$id"
-  private def manifestPath(path: String) = new Path(s"$path/_manifest")
-
-  /** The published view: base generation + the delta-id watermark at
-    * its publish time (deltas at or below it are folded/superseded). */
-  private[scale] final case class Manifest(gen: Long, through: Long)
-
-  private def readManifest(fs: FileSystem,
-      path: String): Option[Manifest] = {
-    val m = manifestPath(path)
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      txt.split(' ') match {
-        case Array(g, t) if g.toLongOption.isDefined &&
-            t.toLongOption.isDefined =>
-          Some(Manifest(g.toLong, t.toLong))
-        case _ => throw new IllegalStateException(
-          s"torn/malformed manifest at $m: '$txt' — on a filesystem " +
-            "without atomic rename (see Hdfs.atomicWrite) retry; " +
-            "otherwise restore or rebuild the layout")
-      }
-    }
-  }
-
-  private def publish(fs: FileSystem, path: String, m: Manifest): Unit =
-    Hdfs.atomicWrite(fs, manifestPath(path), s"${m.gen} ${m.through}")
-
-  /** Key-sorted write of one frame into one dir. `id` = Some(col):
-    * recompute `sample_key` from it, dropping any caller-supplied
-    * column (the public paths — membership must derive from the id);
-    * None: the frame already carries the layout's own key (the
-    * compact fold rewriting its own rows). */
-  private def writeSorted(df: DataFrame, dir: String,
-      id: Option[Column], sortCols: Seq[String], files: Int): Unit = {
+  /** Range-partition and sort `df` on the sample key, then `sortCols`.
+    * `id` = Some(col): recompute `sample_key` from it, dropping any
+    * caller-supplied column (the public paths — membership must derive
+    * from the id); None: the frame already carries the layout's own key
+    * (the compact fold rewriting its own rows). */
+  private def sorted(df: DataFrame, id: Option[Column],
+      sortCols: Seq[String], files: Int): DataFrame = {
     val keyed = id match {
       case Some(c) =>
         df.drop("sample_key").withColumn("sample_key", sampleKey(c))
@@ -123,167 +75,29 @@ object SampleLayout {
         df
     }
     val keys = col("sample_key") +: sortCols.map(col)
-    keyed.repartitionByRange(files, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode(SaveMode.Overwrite).parquet(dir)
+    keyed.repartitionByRange(files, keys: _*).sortWithinPartitions(keys: _*)
   }
 
-  /** Store dirs this layout ever owns under `path`. */
-  private def ownedDirs(fs: FileSystem, path: String): Seq[Path] = {
-    val root = new Path(path)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && {
-        val n = st.getPath.getName
-        n.startsWith("base_g") || n.startsWith("b_")
-      })
-      .map(_.getPath)
-  }
-
-  /** Grace GC: delete owned dirs invisible under `m` — everything a
-    * PREVIOUS publish superseded. Dirs superseded by the publish that
-    * follows this call survive one more cycle as the in-flight
-    * readers' grace window. Base generations delete FIRST: a reader
-    * whose glob lands mid-GC then fails the base-presence check
-    * loudly, instead of finding its base intact alongside a
-    * partially-deleted delta set — a silent undercount
-    * (review-caught ordering race; b_* sorts before base_g* in a raw
-    * listing). */
-  private def gcSuperseded(fs: FileSystem, path: String,
-      m: Manifest): Unit = {
-    val (bases, deltas) = ownedDirs(fs, path)
-      .partition(_.getName.startsWith("base_g"))
-    (bases ++ deltas).foreach { p =>
-      val n = p.getName
-      val visible = n == s"base_g${m.gen}" ||
-        (n.startsWith("b_") &&
-          n.stripPrefix("b_").toLongOption.exists(_ > m.through))
-      if (!visible) fs.delete(p, true)
-    }
-  }
-
-  /** (Re)build the layout from `df` — reader-safe like [[compact]]:
-    * the fresh base lands as the INVISIBLE next generation, the
-    * manifest flips atomically (superseding every delta on disk —
-    * after a source refresh they are stale by definition), and only
-    * dirs a previous publish already superseded are deleted, so
-    * in-flight readers keep a complete view through the rebuild.
-    * Legacy pre-manifest loose files under `path` (never visible
-    * through any manifest) are removed immediately. Disk holds at
-    * most two generations: the base THIS publish supersedes lingers
-    * as grace until the next write/compact — a bounded 2x footprint
-    * on rebuild-only stores, the deliberate price of never yanking a
-    * reader's files. Batch-owner entrypoint — never run it against a
-    * store a stream is maintaining (single-writer discipline). */
+  /** (Re)build the layout from `df` as the next base. The fold
+    * supersedes every part committed before it starts (after a source
+    * refresh they are stale by definition) and keeps in-flight readers
+    * whole through the rebuild. Disk holds at most two generations: the
+    * base this rebuild supersedes lingers as grace until the next write
+    * or compact. Batch-owner entrypoint — never run it against a store
+    * a stream is maintaining (single-writer discipline). */
   def write(df: DataFrame, path: String, id: Column,
-      sortCols: Seq[String] = Nil, files: Int = 16): Unit = {
-    val fs = Hdfs.of(df.sparkSession, path)
-    val cur = readManifest(fs, path)
-    val newGen = cur.map(_.gen + 1).getOrElse(0L)
-    // Snapshot the committed-delta watermark BEFORE the (long) base
-    // write: an append that commits while write-next-base is running
-    // is NOT in `df`, so folding its id into `through` would hide the
-    // batch and refuse its replay (round-11 ADVICE — the glob had
-    // drifted into the publish step). A crash-replay of this run
-    // recomputes the snapshot, so the invariant "ids folded <= ids
-    // present in the base written after the snapshot" holds per
-    // attempt. Under the strict single-writer discipline the snapshot
-    // equals the publish-time view; under a racing appender it is
-    // conservative — the mid-write batch stays visible + replayable.
-    val throughSnap = {
-      val marks = fs.globStatus(new Path(path, "b_*/_SUCCESS"))
-      (if (marks == null) Seq.empty[Long]
-       else marks.toSeq.flatMap(
-         _.getPath.getParent.getName.stripPrefix("b_").toLongOption))
-        .foldLeft(cur.map(_.through).getOrElse(-1L))(math.max)
-    }
-    import CommitProtocol.{run, step}
-    run("sample-write", Seq(
-      step("gc-superseded") {
-        cur.foreach(gcSuperseded(fs, path, _))
-        // legacy pre-manifest layout: loose data files at the root —
-        // invisible to every manifest reader, delete so the store's
-        // footprint doesn't silently double after the upgrade
-        val root = new Path(path)
-        if (fs.exists(root))
-          fs.listStatus(root).toSeq
-            .filter(st => st.isFile &&
-              st.getPath.getName != "_manifest" &&
-              st.getPath.getName != "_graft_meta")
-            .foreach(st => fs.delete(st.getPath, false))
-      },
-      step("write-next-base") {
-        writeSorted(df, baseDir(path, newGen), Some(id), sortCols, files)
-      },
-      step("publish-manifest") {
-        // watermark advances over deltas COMMITTED AT THE PRE-WRITE
-        // SNAPSHOT only (see throughSnap above): a crashed append's
-        // markerless dir was never visible, and a batch that commits
-        // mid-rebuild is not in the new base — folding either id
-        // would wedge the stream's legitimate replay behind the
-        // append watermark refusal (review-caught + round-11 ADVICE)
-        publish(fs, path, Manifest(newGen, throughSnap))
-      }))
-  }
+      sortCols: Seq[String] = Nil, files: Int = 16): Unit =
+    new PartLog(path).rebuild(sorted(df, Some(id), sortCols, files))
 
-  /** Append a micro-batch as the batchId-keyed delta `b_<id>`, itself
-    * key-sorted so slab pruning holds inside the batch at its own
-    * file grain. Overwrite -> replay idempotent; the dir is visible
-    * only once its `_SUCCESS` marker lands. An id at or below the
-    * manifest watermark is REFUSED: its rows were folded into the
-    * base (a crash-window replay loses nothing), while a checkpoint
-    * wiped back to id 0 would otherwise land every new batch as a
-    * committed-but-invisible dir the next fold deletes — silent,
-    * unbounded data loss (review-caught). */
+  /** Append a micro-batch as part `batchId`, itself key-sorted so slab
+    * pruning holds inside the batch at its own file grain. A replay
+    * rewrites the part; an id the last fold covers is refused. */
   def append(batch: DataFrame, path: String, batchId: Long,
-      id: Column, sortCols: Seq[String] = Nil, files: Int = 4): Unit = {
-    val fs = Hdfs.of(batch.sparkSession, path)
-    readManifest(fs, path).foreach(m =>
-      require(batchId > m.through,
-        s"sample layout $path: batch $batchId is at or below the " +
-          s"fold watermark ${m.through} — already folded (a replay " +
-          "loses nothing), or the stream's checkpoint was wiped and " +
-          "its ids restarted; re-point the checkpoint or rebuild the " +
-          "store"))
-    writeSorted(batch, deltaDir(path, batchId), Some(id), sortCols,
-      files)
-  }
+      id: Column, sortCols: Seq[String] = Nil, files: Int = 4): Unit =
+    new PartLog(path).append(sorted(batch, Some(id), sortCols, files),
+      batchId)
 
-  /** The dirs `m` admits, resolved in ONE glob (an exists() per delta
-    * is an N+1 on object stores). Throws if the base is missing — a
-    * reader that out-slept the grace window (its generation was
-    * GC'd) must fail loudly, never return a silently partial
-    * delta-only view (review-caught). */
-  private def visibleDirs(fs: FileSystem, path: String,
-      m: Manifest): Seq[String] = {
-    val marks = fs.globStatus(new Path(path, "{base_g*,b_*}/_SUCCESS"))
-    val dirs = (if (marks == null) Seq.empty[Path]
-      else marks.toSeq.map(_.getPath.getParent))
-      .filter { p =>
-        val n = p.getName
-        n == s"base_g${m.gen}" ||
-          (n.startsWith("b_") &&
-            n.stripPrefix("b_").toLongOption.exists(_ > m.through))
-      }
-      .map(_.toString)
-    if (!dirs.exists(_.endsWith(s"/base_g${m.gen}")))
-      throw new IllegalStateException(
-        s"sample layout $path: base_g${m.gen} is gone — the reader " +
-          "out-slept the grace window (two folds passed since its " +
-          "manifest read); re-resolve and retry")
-    dirs
-  }
-
-  private[scale] def committedDirs(spark: SparkSession,
-      path: String): Seq[String] = {
-    val fs = Hdfs.of(spark, path)
-    readManifest(fs, path) match {
-      case None => Nil
-      case Some(m) => visibleDirs(fs, path, m)
-    }
-  }
-
-  /** `SAMPLE num/den` read over the manifest view: rows whose sample
+  /** `SAMPLE num/den` read over the published view: rows whose sample
     * key falls in the [0, num/den * 2^32) slab. Exact integer
     * threshold arithmetic (num * 2^32 / den with num <= den, no
     * overflow for sane fractions) so Spark and any SQL oracle agree
@@ -291,62 +105,26 @@ object SampleLayout {
     *
     * The grace guarantee is RESOLVE-time: act on the returned frame
     * within one fold cycle. A frame held across two folds loses its
-    * files to the grace GC and fails as a raw FileNotFoundException
-    * (or, under spark.sql.files.ignoreMissingFiles=true, an
-    * undercount — don't combine that setting with long-held frames
-    * over this store). */
+    * files to the fold's retire step and fails as a raw
+    * FileNotFoundException (or, under
+    * spark.sql.files.ignoreMissingFiles=true, an undercount — don't
+    * combine that setting with long-held frames over this store). */
   def sampleScan(spark: SparkSession, path: String, num: Long,
       den: Long): DataFrame = {
     require(num > 0 && num <= den && den <= (1L << 20),
       s"sample fraction $num/$den out of range")
-    val dirs = committedDirs(spark, path)
-    require(dirs.nonEmpty, s"no committed sample layout at $path")
-    spark.read.parquet(dirs: _*)
+    new PartLog(path).read(spark)
       .filter(col("sample_key") < lit(num * KeyDomain / den))
   }
 
-  /** Fold the visible deltas into the next base generation and flip
-    * the manifest — reader-safe and crash-safe per the class-doc
-    * protocol. The fold reads the view dirs directly: they are
-    * immutable until the NEXT publish's grace GC, and the new base is
-    * a fresh dir, so no staging is needed (review-caught: an earlier
-    * in-place rewrite both required staging and double-counted on a
-    * crash between rewrite and delete). `files`/`sortCols` have no
-    * defaults: the caller must restate the layout's parameters or the
-    * rewrite would silently drop the secondary sort while the ensure
-    * stamp still claims it (the Hdfs.ensureStamped failure mode). */
+  /** Fold the visible parts into the next base, re-sorted. `files` and
+    * `sortCols` have no defaults: the caller must restate the layout's
+    * parameters or the rewrite would silently drop the secondary sort
+    * while the ensure stamp still claims it (the Hdfs.ensureStamped
+    * failure mode). */
   def compact(spark: SparkSession, path: String, files: Int,
-      sortCols: Seq[String]): Unit = {
-    val fs = Hdfs.of(spark, path)
-    val cur = readManifest(fs, path).getOrElse(
-      throw new IllegalStateException(s"no manifest at $path"))
-    import CommitProtocol.{run, step}
-    // crossing-step state: the view snapshot is taken inside the gc'd
-    // window (single writer: nothing else mutates the store between
-    // these steps) and drives both the fold and the publish
-    var deltas: Seq[String] = Nil
-    var through = cur.through
-    run("sample-compact", Seq(
-      step("gc-superseded") {
-        gcSuperseded(fs, path, cur)
-      },
-      // landing the next base is invisible until the manifest flips
-      step("write-next-base") {
-        val view = visibleDirs(fs, path, cur)
-        deltas = view.filterNot(_.endsWith(s"/base_g${cur.gen}"))
-        if (deltas.nonEmpty) {
-          through = deltas
-            .map(d => new Path(d).getName.stripPrefix("b_").toLong)
-            .foldLeft(cur.through)(math.max)
-          writeSorted(spark.read.parquet(view: _*),
-            baseDir(path, cur.gen + 1), None, sortCols, files)
-        }
-      },
-      step("publish-manifest") {
-        if (deltas.nonEmpty)
-          publish(fs, path, Manifest(cur.gen + 1, through))
-      }))
-  }
+      sortCols: Seq[String]): Unit =
+    new PartLog(path).compact(spark)(sorted(_, None, sortCols, files))
 
   /** Build-once sample-keyed events layout for the registered query.
     * Granularity small enough that slab pruning is observable at test
@@ -357,13 +135,13 @@ object SampleLayout {
     val fs = Hdfs.of(events.sparkSession, path)
     val files = 16
     val stamp = s"rows=${events.count()};key=knuth(user_id)" +
-      s";files=$files;sort=ts;layout=manifest-v1"
-    // the manifest is the success marker: it is written LAST by
-    // write() (so a mid-build crash reads as not-current -> rebuild)
-    // and, unlike base_g0, it survives compaction to later
+      s";files=$files;sort=ts;layout=partlog-v2"
+    // the manifest is the success marker: the fold publishes it LAST
+    // (so a mid-build crash reads as not-current -> rebuild) and,
+    // unlike the first base, it survives compaction to later
     // generations
     Hdfs.ensureStamped(fs, new Path(s"$path/_graft_meta"),
-      Seq(manifestPath(path)), stamp) {
+      Seq(new PartLog(path).manifestPath), stamp) {
       write(events, path, col("user_id"), Seq("ts"), files)
     }
   }

@@ -33,26 +33,29 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(dead.allFailed && dead.median == -1.0 && dead.min == -1.0)
   }
 
-  // A record of `wall` seconds on 4 CPUs at 100 ticks/s: task CPU and
-  // run seconds as given, steal and iowait as shares of all ticks.
-  private def rec(cpu: Double, run: Double, steal: Double = 0.0,
+  // A record of `wall` seconds on 4 CPUs at 100 ticks/s: on-CPU and
+  // run-queue wait seconds as given, steal and iowait as shares of all
+  // ticks.
+  private def rec(onCpu: Double, queued: Double, steal: Double = 0.0,
       iowait: Double = 0.0, wall: Double = 10.0): Health.Record = {
     val total = (wall * 4 * 100).toLong
-    Health.Record(wall, cpu, run, (steal * total).toLong,
+    Health.Record(wall, onCpu, queued, (steal * total).toLong,
       (iowait * total).toLong, total)
   }
 
   test("health: a quiet record is not degraded") {
-    // the quiet sf0.1 window's shape: tasks on CPU most of their run,
-    // a few percent steal, no iowait
-    assert(!Health.degraded(rec(cpu = 17.0, run = 20.0, steal = 0.03)))
-    // a driver-only window (no task ran) shows no stall
-    assert(!Health.degraded(rec(cpu = 0.0, run = 0.0)))
+    // the quiet windows' shape: threads wait for a core a small share
+    // of the time (0.10 for the batch bench, 0.27 for the streaming
+    // one), a few percent steal, no iowait
+    assert(!Health.degraded(rec(onCpu = 30.0, queued = 3.5, steal = 0.03)))
+    assert(!Health.degraded(rec(onCpu = 30.0, queued = 11.0)))
+    // a window in which no thread ran shows no stall
+    assert(!Health.degraded(rec(onCpu = 0.0, queued = 0.0)))
     assert(!Health.degraded(Health.Record.empty))
   }
 
   test("health: high steal degrades the window") {
-    val quiet = rec(cpu = 17.0, run = 20.0)
+    val quiet = rec(onCpu = 30.0, queued = 3.0)
     assert(!Health.degraded(quiet.copy(
       stealTicks = (quiet.totalTicks * Health.MaxStealShare).toLong)))
     assert(Health.degraded(quiet.copy(
@@ -61,22 +64,20 @@ class BenchProtocolSpec extends AnyFunSuite {
       iowaitTicks = (quiet.totalTicks * Health.MaxIowaitShare).toLong + 1)))
   }
 
-  test("health: low task CPU per task run degrades the window") {
-    // runnable task threads that do not get a core: run time keeps
-    // counting while CPU time does not
-    val run = 20.0
-    assert(Health.degraded(rec(cpu = run * Health.MinCpuPerRun * 0.99,
-      run = run)))
-    assert(!Health.degraded(rec(cpu = run * Health.MinCpuPerRun * 1.01,
-      run = run)))
+  test("health: a high run-queue wait share degrades the window") {
+    // runnable threads that do not get a core: their run-queue wait
+    // grows while their on-CPU time does not
+    val waited = 20.0 * Health.MaxQueuedShare / (1 - Health.MaxQueuedShare)
+    assert(Health.degraded(rec(onCpu = 20.0, queued = waited * 1.01)))
+    assert(!Health.degraded(rec(onCpu = 20.0, queued = waited * 0.99)))
   }
 
   test("health: records sum, so a run is judged over every pass") {
-    val a = rec(cpu = 9.0, run = 10.0, steal = 0.02)
-    val b = rec(cpu = 2.0, run = 10.0, steal = 0.10)
+    val a = rec(onCpu = 9.0, queued = 1.0, steal = 0.02)
+    val b = rec(onCpu = 2.0, queued = 8.0, steal = 0.10)
     val sum = a + b
-    assert(sum.taskCpuSec == 11.0 && sum.taskRunSec == 20.0)
-    assert(math.abs(sum.cpuPerRun - 0.55) < 1e-9)
+    assert(sum.onCpuSec == 11.0 && sum.queuedSec == 9.0)
+    assert(math.abs(sum.queuedShare - 0.45) < 1e-9)
     assert(math.abs(sum.stealShare - 0.06) < 1e-9)
     assert(Seq(a, b).foldLeft(Health.Record.empty)(_ + _) == sum)
   }

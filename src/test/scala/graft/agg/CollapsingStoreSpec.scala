@@ -80,17 +80,4 @@ class CollapsingStoreSpec extends SparkSpec {
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
       === ((9L, 2L, 5L, 50.0)))
   }
-
-  test("keyed append refuses an anonymously appended dir (loud " +
-      "single-writer discipline)") {
-    val dir = tmpDir("graft-collapse-anon") + "/s"
-    val s = store(dir)
-    s.append(Seq((1L, 1, 2L, 20.0)).toDF("id", "sign", "qty", "total"), 0L)
-    s.append(Seq((2L, 1, 1L, 5.0)).toDF("id", "sign", "qty", "total"))
-    val e = intercept[IllegalArgumentException](s.append(
-      Seq((3L, 1, 9L, 9.0)).toDF("id", "sign", "qty", "total"), 1L))
-    assert(e.getMessage.contains("anonymously"), e.getMessage)
-    assert(s.read(spark).collect().length == 2,
-      "the refused append must not have touched the store")
-  }
 }

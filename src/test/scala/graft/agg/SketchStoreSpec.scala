@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** AggregatingMergeTree contract: states union across batches to the
-  * same answer as a global distinct, roll up to coarser groupings
-  * without rescanning raw data, survive batch replay, and compaction
-  * changes nothing. At these cardinalities (hundreds) the HLL estimate
-  * is exact, so assertions are equalities, not tolerances.
+  * same answer as a global distinct and roll up to coarser groupings
+  * without rescanning raw data (replay and compaction are
+  * PartStoreContractSpec's). At these cardinalities (hundreds) the HLL
+  * estimate is exact, so assertions are equalities, not tolerances.
   */
 class SketchStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -44,27 +44,6 @@ class SketchStoreSpec extends SparkSpec {
     val perLevel = store.readGrouped(spark, Seq("level"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(perLevel == Map("info" -> 5L, "error" -> 1L))
-  }
-
-  test("replayed batch is idempotent; compaction preserves answers") {
-    val (store, _) = mkStore()
-    val b0 = Seq(("d1", "info", 10L), ("d1", "info", 11L))
-    val states = store.partials(
-      b0.toDF("day", "level", "user"), col("user"))
-    store.append(states, 0L)
-    store.append(states, 0L) // replay of the same epoch
-    assert(store.read(spark).collect()
-      .map(_.getLong(2)).toSeq == Seq(2L))
-
-    store.append(store.partials(
-      Seq(("d1", "info", 11L), ("d1", "info", 12L))
-        .toDF("day", "level", "user"), col("user")), 1L)
-    val before = store.read(spark).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    store.compact(spark)
-    val after = store.read(spark).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(after == before && after == Set(("d1", "info", 3L)))
   }
 
   test("streaming maintenance: foreachBatch appends states per epoch") {

@@ -49,9 +49,7 @@ class SummingStoreSpec extends SparkSpec {
     // the published view is ONE compacted block; the absorbed dirs
     // stay on disk one more fold as the in-flight readers' grace
     // window, invisible to reads
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(StoreCompaction.visibleBatchDirs(fs, path)
+    assert(new graft.scale.PartLog(path).view(spark).dirs
       .map(_.split('/').last) == Seq("batch=compacted-0"))
     // a second fold retires them: disk holds at most two generations
     s.compact(spark)
@@ -61,31 +59,6 @@ class SummingStoreSpec extends SparkSpec {
       s"absorbed numeric dirs must be retired by the next fold: " +
         dirs.toSeq.sorted)
     assert(s.read(spark).collect().map(r => r.getLong(2)).toSeq == Seq(5L))
-  }
-
-  test("batch-mode append lands in a FRESH dir above every on-disk " +
-      "batch id (mid-fold collision regression)") {
-    val path = tmpDir("sumstore-fresh")
-    val s = store(path)
-    // streamed batches 0..5 exist, nothing compacted: watermark is -1,
-    // so the old watermark+1 rule appended into batch=0 — a dir a
-    // concurrent compact may be mid-fold on (its rows would go
-    // invisible at publish and be deleted next fold)
-    (0 to 5).foreach(i =>
-      s.append(partials(("2026-01-01", "info", 1L)), batchId = i.toLong))
-    s.append(partials(("2026-01-01", "info", 10L)))
-    val dirs = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
-    assert(dirs.contains("batch=6"),
-      s"anonymous append must take max(on-disk id)+1, got: $dirs")
-    assert(s.read(spark).collect().map(r => r.getLong(2)).toSeq
-      == Seq(16L))
-    // and after a compact, the next anonymous append clears both the
-    // watermark AND the not-yet-retired generation dirs
-    s.compact(spark)
-    s.append(partials(("2026-01-01", "info", 100L)))
-    assert(s.read(spark).collect().map(r => r.getLong(2)).toSeq
-      == Seq(116L))
   }
 
   test("read racing a compact sees one complete view (reader-safe fold)") {
@@ -108,30 +81,6 @@ class SummingStoreSpec extends SparkSpec {
     assert(midGen.collect().map(_.getLong(2)).toSeq == Seq(5L),
       "between-folds reader must survive the following compact")
     assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(5L))
-  }
-
-  test("readAsOf time-travels the append log; compaction closes it") {
-    import spark.implicits._
-    val store = new SummingStore(tmpDir("summing-asof") + "/t",
-      Seq("level"), Seq("total"))
-    store.append(Seq(("click", 3L)).toDF("level", "total"), batchId = 0L)
-    store.append(Seq(("click", 4L), ("open", 1L))
-      .toDF("level", "total"), batchId = 1L)
-
-    def totals(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(totals(store.readAsOf(spark, 0L)) == Map("click" -> 3L))
-    assert(totals(store.readAsOf(spark, 1L))
-      == Map("click" -> 7L, "open" -> 1L))
-    // as-of at the head equals the live read
-    assert(totals(store.readAsOf(spark, 1L)) == totals(store.read(spark)))
-
-    store.compact(spark)
-    assert(totals(store.read(spark))
-      == Map("click" -> 7L, "open" -> 1L), "compaction preserves totals")
-    intercept[IllegalArgumentException] {
-      store.readAsOf(spark, 0L).collect()
-    }
   }
 
   test("compact refuses an int-overflowing fold instead of wrapping") {
@@ -161,47 +110,6 @@ class SummingStoreSpec extends SparkSpec {
       "no-op compact must not create any batch dir")
   }
 
-  test("compact finishes a fold that crashed before the rename") {
-    val path = tmpDir("sumstore-crash")
-    val s = store(path)
-    s.append(partials(("2026-01-01", "info", 2L)), batchId = 0)
-    s.append(partials(("2026-01-01", "info", 3L)), batchId = 1)
-    // simulate the documented crash state: folded block materialized
-    // to tmp, batch dirs deleted, rename never happened. With the
-    // marker-first ordering the watermark is already correct.
-    s.read(spark).write.parquet(s"$path/_compact_tmp")
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(path, "_compacted_through"), "1")
-    new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("batch="))
-      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
-    s.compact(spark) // recovery: rename tmp -> batch=compacted
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(5L))
-    intercept[IllegalArgumentException] {
-      s.append(partials(("2026-01-01", "info", 9L)), batchId = 1)
-    } // watermark survived the crash — folded replay still refused
-  }
-
-  test("marker-first crash state stays safe: replay refused, read intact") {
-    // the state a compact leaves if it crashes right after the marker
-    // write (the ordering foldBatches promises): batch dirs untouched,
-    // watermark advanced. A replay must already be refused (refusing a
-    // not-yet-folded replay is safe; accepting a folded one is not),
-    // and reads still see the un-deleted dirs.
-    val path = tmpDir("sumstore-marker")
-    val s = store(path)
-    s.append(partials(("2026-01-01", "info", 2L)), batchId = 1)
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(path, "_compacted_through"), "1")
-    intercept[IllegalArgumentException] {
-      s.append(partials(("2026-01-01", "info", 9L)), batchId = 1)
-    }
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(2L))
-    // and a re-run compact completes the fold from this state
-    s.compact(spark)
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(2L))
-  }
-
   test("a crashed fold attempt's orphan generation dir never eats the " +
       "published block (recovery data-loss regression)") {
     val path = tmpDir("sumstore-crash")
@@ -228,70 +136,17 @@ class SummingStoreSpec extends SparkSpec {
 
   test("the fold's watermark derives from what it folded, not a " +
       "re-listing (append-racing-compact regression)") {
-    // Direct protocol-level check: fold with a snapshot that EXCLUDES
-    // a batch appended after it; the late batch must stay visible.
+    // Direct protocol-level check: a batch appended after the fold's
+    // snapshot, before its publish, must stay visible.
     val path = tmpDir("sumstore-latebatch")
     val s = store(path)
     s.append(partials(("2026-01-01", "info", 1L)), batchId = 0L)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val snapshot = StoreCompaction.visibleBatchDirs(fs, path)
-    // materialize the fold input from the snapshot
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_compact_tmp")
-    spark.read.option("basePath", path).parquet(snapshot: _*)
-      .groupBy("day", "level")
-      .agg(org.apache.spark.sql.functions.sum("total").as("total"))
-      .write.parquet(tmp.toString)
-    // a batch lands AFTER the snapshot, BEFORE the fold completes
-    s.append(partials(("2026-01-01", "info", 7L)), batchId = 3L)
-    StoreCompaction.foldBatches(fs, path, tmp, snapshot)
+    new graft.scale.PartLog(path).compact(spark) { parts =>
+      // a batch lands AFTER the snapshot, BEFORE the fold completes
+      s.append(partials(("2026-01-01", "info", 7L)), batchId = 3L)
+      parts
+    }
     assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(8L),
       "the late batch's rows must survive the fold")
-  }
-
-  test("a keyed append refuses to clobber an anonymously appended " +
-      "batch (single-writer discipline, loud)") {
-    val path = tmpDir("sumstore-anon-clobber")
-    val s = store(path)
-    // checkpointed stream wrote batches 0..2; its checkpoint holds 2
-    (0 to 2).foreach(i =>
-      s.append(partials(("2026-01-01", "info", 1L)), batchId = i.toLong))
-    // a batch-mode writer appends anonymously -> lands at batch=3,
-    // exactly the id the stream's NEXT micro-batch will use
-    s.append(partials(("2026-01-01", "info", 10L)))
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(13L))
-    // the stream's overwrite-by-batchId would silently drop the
-    // anonymous rows -- it must fail loudly instead
-    val e = intercept[IllegalArgumentException](
-      s.append(partials(("2026-01-01", "info", 99L)), batchId = 3L))
-    assert(e.getMessage.contains("anonymously"), e.getMessage)
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(13L),
-      "the refused append must not have touched the store")
-    // a keyed append at a FRESH id still works
-    s.append(partials(("2026-01-01", "info", 2L)), batchId = 4L)
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(15L))
-  }
-
-  test("a crashed anonymous claim (marker, no rows) never breaks the " +
-      "store: reads, compaction, and later appends all proceed") {
-    val path = tmpDir("sumstore-crashed-claim")
-    val s = store(path)
-    // simulate the crash window: the claim landed, the rows did not
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    StoreCompaction.markAnon(fs, path, 0L)
-    // a store whose ONLY dir is the rows-less claim must read empty
-    // and compact as a no-op, not die in parquet schema inference
-    assert(StoreCompaction.visibleBatchDirs(fs, path).isEmpty)
-    s.compact(spark)
-    // recovery: the next anonymous append lands ABOVE the claimed id
-    s.append(partials(("2026-01-01", "info", 4L)))
-    val dirs = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
-    assert(dirs.contains("batch=1"),
-      s"retry must land above the crashed claim, got: $dirs")
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(4L))
-    s.compact(spark)
-    assert(s.read(spark).collect().map(_.getLong(2)).toSeq == Seq(4L))
   }
 }

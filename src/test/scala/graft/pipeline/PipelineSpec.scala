@@ -67,6 +67,26 @@ class PipelineSpec extends SparkSpec {
     assert(rawPartials >= partialRows)
   }
 
+  test("levelTotals is one sum(total) GROUP BY level over the visible " +
+      "parts (REF:240-243)") {
+    val c = cfg()
+    val day0 = 1700000000L
+    writeTopicFile(c, "event_tracking", "b0.json",
+      Seq(queueLine(day0, "info", "a"), queueLine(day0 + 86400, "info", "b"),
+        queueLine(day0 + 10, "error", "c")))
+    MaterializedPipeline.start(spark, c).awaitTermination()
+    val totals = MaterializedPipeline.levelTotals(spark, c)
+    // the reference's read is one aggregate: no (day, level) merge
+    // before the level sum
+    val aggs = totals.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }
+    assert(aggs.size == 1, totals.queryExecution.optimizedPlan)
+    assert(totals.orderBy("level").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+      == Seq(("error", 1L), ("info", 2L)))
+  }
+
   test("direct pipeline: wire events land in email_events; corrupt json dead-letters") {
     val c = cfg()
     def wire(ct: String, et: String, time: String, meta: String) =

@@ -519,15 +519,17 @@ class PlanShapeSpec extends SparkSpec {
     // frame against the collected LLR table. The old shape's
     // signature — a broadcast join of every gram occurrence against
     // the LM followed by an avg() per-doc aggregation (one exchange
-    // per corpus pass) — must appear in NO pass of the query
+    // per corpus pass) — must not appear in the scoring pass
     val plans = plansDuring {
       SparkEntry.queries("sample_dsir_select")(spark, sf0001).collect()
     }
     assert(plans.nonEmpty, "plan capture drained empty")
-    assert(plans.exists(_.contains("vec_gather_sum")),
+    val scoring = plans.filter(_.contains("vec_gather_sum"))
+    assert(scoring.nonEmpty,
       "scoring pass is not the gather-sum projection")
-    assert(!plans.exists(_.contains("avg(")),
-      "a pass still aggregates per-gram LLR terms (old join shape)")
+    assert(!scoring.exists(_.contains("avg(")),
+      "the scoring pass still aggregates per-gram LLR terms (old " +
+        "join shape)")
   }
 
   test("targeted-corpus capstone reads the documents text column at " +

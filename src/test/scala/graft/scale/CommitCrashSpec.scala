@@ -45,28 +45,33 @@ class CommitCrashSpec extends SparkSpec {
     /** Bring the crashed store back to the committed answer (default:
       * replay the mutation — the idempotent-op contract). */
     def heal(dir: String): Unit = mutate(dir)
+    /** For the part-log folds: re-append a batch id the fold covers,
+      * which must be refused in every window after the publish. */
+    def replayFolded: Option[String => Unit] = None
   }
 
   private def docs = Tables.documents(spark, sf0001)
   private def emb = Tables.embeddings(spark, sf0001)
 
-  // ---- 1. the agg append-store fold (StoreCompaction MVCC-with-grace)
+  // ---- 1. the agg append-store fold (PartLog: land, publish, retire)
 
   private object AggFold extends CrashCase {
     val name = "agg store fold"
-    val op = "store-fold"
+    val op = "part-fold"
     private def store(dir: String) =
       new graft.agg.SummingStore(dir, Seq("day", "level"), Seq("total"))
+    private def p(rows: (String, String, Long)*) =
+      rows.toDF("day", "level", "total")
+        .withColumn("day", col("day").cast("date"))
     def setup(dir: String): Unit = {
       val s = store(dir)
-      def p(rows: (String, String, Long)*) =
-        rows.toDF("day", "level", "total")
-          .withColumn("day", col("day").cast("date"))
       s.append(p(("2026-01-01", "info", 2L),
         ("2026-01-01", "error", 1L)), batchId = 0)
       s.append(p(("2026-01-01", "info", 3L),
         ("2026-01-02", "info", 5L)), batchId = 1)
     }
+    override def replayFolded: Option[String => Unit] = Some(dir =>
+      store(dir).append(p(("2026-01-01", "info", 3L)), batchId = 1))
     def mutate(dir: String): Unit = store(dir).compact(spark)
     def observe(dir: String): Seq[String] =
       store(dir).read(spark).orderBy("day", "level").collect()
@@ -74,20 +79,23 @@ class CommitCrashSpec extends SparkSpec {
         .toSeq
   }
 
-  // ---- 2. SampleLayout compact (manifest-with-grace)
+  // ---- 2. SampleLayout compact (the same PartLog fold)
 
   private object SampleCompact extends CrashCase {
     val name = "sample layout compact"
-    val op = "sample-compact"
+    val op = "part-fold"
     private def events = Tables.events(spark, sf0001)
+    private def batch = events.limit(40)
+      .withColumn("event_id", col("event_id") + lit(90000000L))
     def setup(dir: String): Unit = {
       SampleLayout.write(events, dir, col("user_id"), Seq("ts"),
         files = 4)
-      val batch = events.limit(40)
-        .withColumn("event_id", col("event_id") + lit(90000000L))
       SampleLayout.append(batch, dir, batchId = 1, col("user_id"),
         Seq("ts"))
     }
+    override def replayFolded: Option[String => Unit] = Some(dir =>
+      SampleLayout.append(batch, dir, batchId = 1, col("user_id"),
+        Seq("ts")))
     def mutate(dir: String): Unit =
       SampleLayout.compact(spark, dir, files = 4, sortCols = Seq("ts"))
     def observe(dir: String): Seq[String] =
@@ -245,20 +253,32 @@ class CommitCrashSpec extends SparkSpec {
     }
   }
 
-  // ---- 8. SampleLayout rebuild (write = gc + invisible base + flip)
+  // ---- 8. SampleLayout rebuild (the same fold, from the source)
 
   private object SampleWrite extends CrashCase {
     val name = "sample layout rebuild"
-    val op = "sample-write"
+    val op = "part-fold"
     private def events = Tables.events(spark, sf0001)
-    def setup(dir: String): Unit =
-      SampleLayout.write(events, dir, col("user_id"), Seq("ts"),
-        files = 4)
+    // a layout with one appended part: the rebuild from the source
+    // supersedes it, so the old and the new view differ
+    def setup(dir: String): Unit = SampleCompact.setup(dir)
     // the mutation under sweep: a REBUILD over an existing layout —
     // the next generation lands invisible, the manifest flips, the
     // superseded base lingers one publish as grace
-    def mutate(dir: String): Unit = setup(dir)
+    def mutate(dir: String): Unit =
+      SampleLayout.write(events, dir, col("user_id"), Seq("ts"),
+        files = 4)
     def observe(dir: String): Seq[String] = SampleCompact.observe(dir)
+    private lazy val before = {
+      val d = tmpDir("crash-sample-write-before")
+      setup(d)
+      observe(d)
+    }
+    // the complete old view before the publish, the new one after
+    override def acceptable(dir: String, after: Seq[String],
+        got: Seq[String]): Boolean = got == after || got == before
+    override def replayFolded: Option[String => Unit] =
+      SampleCompact.replayFolded
   }
 
   // ---- 9. Media ingest (stats + rejects, batchId-keyed overwrites)
@@ -423,6 +443,11 @@ class CommitCrashSpec extends SparkSpec {
         assert(c.acceptable(dir, after, got),
           s"${c.name}: unacceptable read after crash at " +
             s"'${steps(i)}': got $got, committed $after")
+        // once the manifest is published, a folded id is refused
+        c.replayFolded.filter(_ =>
+          i >= steps.indexOf("publish-manifest")).foreach { replay =>
+          intercept[IllegalArgumentException](replay(dir))
+        }
         // remediation restores the committed answer exactly
         c.heal(dir)
         val healed = c.observe(dir)

@@ -45,8 +45,7 @@ class SampleLayoutSpec extends SparkSpec {
       "of the layout where a time-sorted layout reads everything") {
     val hi = (slabHi - 1).toDouble
     val slabFrac = ZOrder.fileSurvivalFraction(
-      spark.read.parquet(
-        SampleLayout.committedDirs(spark, layout): _*),
+      spark.read.parquet(new PartLog(layout).view(spark).dirs: _*),
       "sample_key", 0.0, hi)
     // the counterfactual: same data sorted by ts — sample keys
     // scatter, every file's [min, max] spans the probe slab
@@ -105,11 +104,11 @@ class SampleLayoutSpec extends SparkSpec {
     assert(sampledNew() == Seq(inUser))
     // an uncommitted dir (no _SUCCESS) is invisible
     val fs = Hdfs.of(spark, p)
-    batch.write.mode("overwrite").parquet(s"$p/b_9")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/b_9/_SUCCESS"), false)
+    batch.write.mode("overwrite").parquet(s"$p/batch=9")
+    fs.delete(new org.apache.hadoop.fs.Path(s"$p/batch=9/_SUCCESS"), false)
     assert(sampledNew() == Seq(inUser),
       "markerless delta dir must stay invisible")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/b_9"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$p/batch=9"), true)
     // compact folds the delta into the next generation and flips the
     // manifest; answers are fixed. The folded delta dir SURVIVES this
     // publish on disk (the in-flight readers' grace window) but is
@@ -139,8 +138,9 @@ class SampleLayoutSpec extends SparkSpec {
     // superseded
     SampleLayout.compact(spark, p, files = 16, sortCols = Seq("ts"))
     assert(!fs.listStatus(new org.apache.hadoop.fs.Path(p))
-      .exists(st => st.getPath.getName.startsWith("b_") ||
-        st.getPath.getName == "base_g0"),
+      .exists(st => st.getPath.getName.stripPrefix("batch=")
+        .toLongOption.isDefined ||
+        st.getPath.getName == "batch=compacted-0"),
       "second fold must retire the superseded generation and deltas")
     assert(SampleLayout.sampleScan(spark, p, 1, 8)
       .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -178,7 +178,7 @@ class SampleLayoutSpec extends SparkSpec {
     val p = tmpDir("sampleidx-grace") + "/events"
     SampleLayout.ensureEvents(events, p)
     val fs = Hdfs.of(spark, p)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/base_g0"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$p/batch=compacted-0"), true)
     val e = intercept[IllegalStateException] {
       SampleLayout.sampleScan(spark, p, 1, 8)
     }
@@ -192,15 +192,29 @@ class SampleLayoutSpec extends SparkSpec {
     SampleLayout.ensureEvents(events, p)
     val batch = events.limit(1).withColumn("event_id", lit(97000000L))
     // simulate the crash: delta dir exists, commit marker does not
-    batch.write.mode("overwrite").parquet(s"$p/b_7")
+    batch.write.mode("overwrite").parquet(s"$p/batch=7")
     val fs = Hdfs.of(spark, p)
-    fs.delete(new Path(s"$p/b_7/_SUCCESS"), false)
+    fs.delete(new Path(s"$p/batch=7/_SUCCESS"), false)
     // rebuild (source refresh) — must NOT fold the uncommitted id 7
     // into the watermark, or the stream's legitimate replay wedges
     SampleLayout.write(events, p, col("user_id"), Seq("ts"), 16)
     SampleLayout.append(batch, p, batchId = 7, col("user_id"),
       Seq("ts"))
     assert(SampleLayout.sampleScan(spark, p, 1, 8).count() > 0)
+  }
+
+  test("ensure rebuilds a layout written in the previous on-disk " +
+      "format, whose manifest names a base this format never wrote") {
+    import org.apache.hadoop.fs.Path
+    val p = tmpDir("sampleidx-legacy") + "/events"
+    val fs = Hdfs.of(spark, p)
+    events.limit(10).write.parquet(s"$p/base_g0")
+    Hdfs.atomicWrite(fs, new Path(p, "_manifest"), "0 -1")
+    Hdfs.atomicWrite(fs, new Path(p, "_graft_meta"), "layout=manifest-v1")
+    SampleLayout.ensureEvents(events, p)
+    def ids(path: String) = SampleLayout.sampleScan(spark, path, 1, 8)
+      .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(p) == ids(layout) && ids(p).nonEmpty)
   }
 
   test("ensure is idempotent; fraction bounds are enforced") {
