@@ -14,6 +14,8 @@ import graft.scale.PartLog
   * Correctness never depends on compaction: every read merges, so rows
   * sharing a key may sit in any number of parts. Compaction only bounds
   * the parts a read scans, and a read racing it sees one complete view.
+  * The log records the parts' schema, so building a read starts no
+  * Spark job, and a block of another schema is refused.
   */
 abstract class PartStore(path: String) {
   private val log = new PartLog(path)
@@ -31,7 +33,10 @@ abstract class PartStore(path: String) {
   /** The visible parts, unmerged. */
   def parts(spark: SparkSession): DataFrame = log.read(spark)
 
-  /** Background-merge analog: fold every visible part into one base
-    * through [[merge]]. */
-  def compact(spark: SparkSession): Unit = log.compact(spark)(merge)
+  /** Background-merge analog: fold the visible parts into one base
+    * through [[merge]]. Only parts with ids below `below` are folded,
+    * and only once at least `fanIn` of them are visible, so a writer
+    * can fold before appending batch `below` and still replay it. */
+  def compact(spark: SparkSession, below: Long = Long.MaxValue,
+      fanIn: Int = 0): Unit = log.compact(spark, below, fanIn)(merge)
 }

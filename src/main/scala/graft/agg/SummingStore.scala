@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
   * the SummingMergeTree analog (kafka+clickhouse.md:205-211).
   *
   * Contract (kafka+clickhouse.md:396-401): rows sharing the key columns
-  * are summed lazily — in ClickHouse at background merge, here either by
-  * an optional [[compact]] job or, always and sufficiently, by the
-  * mandatory read-side `groupBy(key).sum` in [[read]]. Correctness never
-  * depends on compaction; compaction only bounds the number of partial
-  * rows scanned at read time. Parts, visibility and the fold are
-  * [[graft.scale.PartLog]]'s.
+  * are summed lazily — in ClickHouse at background merge, here by the
+  * fold ([[compact]]), which the MV pipeline runs itself
+  * ([[graft.pipeline.MaterializedPipeline.FoldFanIn]]), and, always and
+  * sufficiently, by the mandatory read-side `groupBy(key).sum` in
+  * [[read]]. Correctness never depends on the fold; it only bounds the
+  * number of partial rows scanned at read time. Parts, the recorded
+  * schema, visibility and the fold are [[graft.scale.PartLog]]'s.
   *
   * This design (append partials, re-sum on read) is deliberately chosen
   * over a stateful streaming aggregation: it reproduces the reference's
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: partial rows are bounded by (#batches x |key domain|), not
   * by raw event count, so the store stays tiny relative to the stream;
-  * periodic [[compact]] keeps read amplification bounded over long runs.
+  * the fold keeps read amplification bounded over long runs.
   */
 final class SummingStore(path: String, keyCols: Seq[String],
     sumCols: Seq[String]) extends PartStore(path) {

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.EditDistanceFunctions
+
 /** Deduplication operators for a training-data pipeline.
   *
   * Four families, in increasing scale-sophistication:
@@ -90,10 +92,10 @@ object Dedup {
     // Banded DP: any pair whose distance exceeds the ROUNDED keep
     // rule's budget — (1 - t + 5e-5) x the longest doc, the 5e-5 being
     // the half-ulp round(...,4) forgives — fails round(sim,4) >= t
-    // regardless of its own lengths, so the threshold variant
-    // (O(threshold x len) per pair, returns -1 past the band) computes
-    // the same kept set ~len/threshold cheaper (3.0 -> 1.1 s at the
-    // sf0.1 anchor). A bare (1-t) band pruned exactly-at-threshold
+    // regardless of its own lengths, so the banded distance
+    // ([[graft.functions.LevenshteinWithin]], O(band x len) per pair,
+    // -1 past the band) computes the same kept set ~len/band cheaper.
+    // A bare (1-t) band pruned exactly-at-threshold
     // pairs once 5e-5 x len outgrew the old constant +2 (docs beyond
     // ~40 k chars). The corpus max is a 1-row driver read, same
     // bounded-collect contract as ops/Dict.
@@ -108,7 +110,8 @@ object Dedup {
             (lit(1.0) - t + lit(5e-5)) *
               greatest(col("a.n_ch"), col("b.n_ch")) + lit(1.0))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        levenshtein(col("a.text"), col("b.text"), band).as("lev"),
+        EditDistanceFunctions.levenshtein_within(col("a.text"),
+          col("b.text"), band).as("lev"),
         greatest(col("a.n_ch"), col("b.n_ch")).as("max_ch"))
       .filter(col("lev") >= 0) // -1 = distance beyond the band
       .select(col("doc_a"), col("doc_b"),

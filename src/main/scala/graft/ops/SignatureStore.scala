@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.ops.Dedup.{bandTable, withShingles}
 
@@ -22,6 +23,14 @@ import graft.ops.Dedup.{bandTable, withShingles}
   * signatures (numHashes+1 longs per doc per band group).
   */
 object SignatureStore {
+
+  /** The band table as [[build]] and [[append]] write it
+    * ([[Dedup.bandTable]]), `band` the partition column. The probe reads
+    * it with this schema, so no read infers one from Parquet footers. */
+  val bandsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("sig", LongType),
+    StructField("band", IntegerType)))
 
   /** Build the store: the corpus' exploded band table, written
     * partitioned by band (8-ish dirs — keeps per-band files clustered
@@ -72,7 +81,7 @@ object SignatureStore {
   def dedupeIncoming(incoming: DataFrame, corpusText: DataFrame,
       path: String, n: Int = 3, t: Double = 0.8): DataFrame = {
     val spark = incoming.sparkSession
-    val stored = spark.read.parquet(s"$path/bands")
+    val stored = spark.read.schema(bandsSchema).parquet(s"$path/bands")
     val probe = bandTable(incoming, n)
     val cand = stored
       .join(broadcast(probe.withColumnRenamed("doc_id", "in_doc")),
@@ -116,6 +125,6 @@ object SignatureStore {
   def storeSize(spark: SparkSession, path: String): Long = {
     val fs = graft.scale.Hdfs.of(spark, path)
     if (!fs.exists(new Path(s"$path/bands"))) 0L
-    else spark.read.parquet(s"$path/bands").count()
+    else spark.read.schema(bandsSchema).parquet(s"$path/bands").count()
   }
 }

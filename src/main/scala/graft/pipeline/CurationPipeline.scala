@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.ops.Curation
 import graft.ops.TextAnalysis
@@ -49,6 +49,24 @@ object CurationPipeline {
     StructField("text", StringType),
     StructField("lang", StringType),
     StructField("source", StringType)))
+
+  /** The curated store as [[start]] writes it, one `batch=<id>` dir per
+    * micro-batch. `batch` is the partition column, an int as inference
+    * types it. Every read of the store uses this schema, so none infers
+    * one from Parquet footers. */
+  val curatedSchema: StructType = StructType(docSchema.fields ++ Seq(
+    StructField("n_tokens", LongType),
+    StructField("rep_ratio", DoubleType),
+    StructField("fingerprint", StringType),
+    StructField("batch", IntegerType)))
+
+  /** The reject store as [[start]] writes it: `batch=d<id>` holds the
+    * curated stream's tier rejects and `batch=g<id>` the gate rejects,
+    * so `batch` is a string partition column. */
+  val rejectsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("reject_reason", StringType),
+    StructField("batch", StringType)))
 
   /** Per-tier wall-clock accumulator for the curated foreachBatch
     * (round-14 VERDICT #2: the three-tier throughput gap — 1229 vs
@@ -119,7 +137,9 @@ object CurationPipeline {
     * An old curated store also lacks the persisted `fingerprint`
     * column the anti-join reads; [[migrateFingerprints]] backfills it
     * once (recomputing fingerprints from the stored text) before the
-    * upgraded stream's first batch.
+    * upgraded stream's first batch. Without it, the anti-join reads
+    * the old rows through [[curatedSchema]] with null fingerprints and
+    * drops none of their re-crawls.
     *
     * @param minTokens   reject docs shorter than this many tokens
     * @param maxRepetition reject docs whose duplicate-bigram fraction
@@ -236,7 +256,7 @@ object CurationPipeline {
           (if (!dedupFs.exists(new org.apache.hadoop.fs.Path(curatedDir)))
             inBatch
           else {
-            val prior = batch.sparkSession.read.parquet(curatedDir)
+            val prior = curatedParts(batch.sparkSession, outDir)
               .filter(col("batch") =!= batchId)
               .select(col("fingerprint"))
             inBatch.join(prior, Seq("fingerprint"), "left_anti")
@@ -264,8 +284,7 @@ object CurationPipeline {
               // Excluding the batch's own partition prunes those
               // candidates away in dedupeIncoming's verify left_semi,
               // restoring retry-stability (round-13 ADVICE).
-              val curatedSoFar = batch.sparkSession.read
-                .parquet(s"$outDir/curated")
+              val curatedSoFar = curatedParts(batch.sparkSession, outDir)
                 .filter(col("batch") =!= batchId)
                 .select(col("doc_id"), col("text"))
               val (keep, dups) = graft.ops.SignatureStore.ingest(
@@ -299,6 +318,7 @@ object CurationPipeline {
         // The fingerprint column is persisted — it IS the cross-batch
         // dedup state now that the anti-join reads it from the store.
         phase("curated_write") {
+          // the columns of curatedSchema, less the partition column
           kept.select(col("doc_id"), col("text"), col("lang"),
               col("source"), col("n_tokens"),
               round(col("rep_ratio"), 4).as("rep_ratio"),
@@ -405,9 +425,14 @@ object CurationPipeline {
     }
   }
 
+  /** The curated store with its `batch` partition column. */
+  private def curatedParts(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(curatedSchema).parquet(s"$outDir/curated")
+
   def curated(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/curated").drop("batch")
+    curatedParts(spark, outDir).drop("batch")
 
   def rejects(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/rejects").drop("batch")
+    spark.read.schema(rejectsSchema).parquet(s"$outDir/rejects")
+      .drop("batch")
 }

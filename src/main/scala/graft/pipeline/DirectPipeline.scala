@@ -120,7 +120,10 @@ object DirectPipeline {
       .start()
   }
 
-  /** Raw-event table view. */
+  /** Raw-event table view, read with the table's declared schema
+    * ([[Schemas.emailEvents]], `event_date` the partition column), so
+    * opening it infers nothing from Parquet footers. */
   def emailEvents(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    spark.read.parquet(cfg.tablePath("email_events"))
+    spark.read.schema(Schemas.emailEvents)
+      .parquet(cfg.tablePath("email_events"))
 }

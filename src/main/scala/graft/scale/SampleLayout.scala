@@ -86,8 +86,18 @@ object SampleLayout {
     * or compact. Batch-owner entrypoint — never run it against a store
     * a stream is maintaining (single-writer discipline). */
   def write(df: DataFrame, path: String, id: Column,
-      sortCols: Seq[String] = Nil, files: Int = 16): Unit =
+      sortCols: Seq[String] = Nil, files: Int = 16): Unit = {
     new PartLog(path).rebuild(sorted(df, Some(id), sortCols, files))
+    // the format before PartLog kept its base in `base_g<g>` and its
+    // parts in `b_<id>`; no view reads them, so once the rebuild has
+    // published they are dead copies
+    val fs = Hdfs.of(df.sparkSession, path)
+    fs.listStatus(new Path(path)).map(_.getPath)
+      .filter(p => PreviousFormat.matches(p.getName))
+      .foreach(fs.delete(_, true))
+  }
+
+  private val PreviousFormat = "(base_g|b_)[0-9]+".r
 
   /** Append a micro-batch as part `batchId`, itself key-sorted so slab
     * pruning holds inside the batch at its own file grain. A replay
@@ -129,13 +139,13 @@ object SampleLayout {
   /** Build-once sample-keyed events layout for the registered query.
     * Granularity small enough that slab pruning is observable at test
     * scale; currency = the shared [[Hdfs.ensureStamped]] protocol
-    * (the stamp carries a layout version so pre-manifest layouts
-    * rebuild). */
+    * (the stamp carries a layout version, so layouts of an older
+    * format rebuild; v3 layouts record their schema). */
   def ensureEvents(events: DataFrame, path: String): Unit = {
     val fs = Hdfs.of(events.sparkSession, path)
     val files = 16
     val stamp = s"rows=${events.count()};key=knuth(user_id)" +
-      s";files=$files;sort=ts;layout=partlog-v2"
+      s";files=$files;sort=ts;layout=partlog-v3"
     // the manifest is the success marker: the fold publishes it LAST
     // (so a mid-build crash reads as not-current -> rebuild) and,
     // unlike the first base, it survives compaction to later

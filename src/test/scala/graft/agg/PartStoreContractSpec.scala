@@ -186,4 +186,61 @@ class PartStoreContractSpec extends SparkSpec {
       assert(s.answer == want)
     }
   }
+
+  test("building parts(spark) starts no Spark job") {
+    forEveryEngine("nojob") { c =>
+      import c.s
+      s.put(0, 1)
+      s.store.compact(spark)
+      s.put(2)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      val bus = org.apache.spark.sql.graftbridge.ListenerBridge
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        bus.drain(spark.sparkContext)
+        jobs.set(0)
+        // the view is read with the recorded schema: no footer job
+        val parts = s.store.parts(spark)
+        bus.drain(spark.sparkContext)
+        assert(jobs.get == 0, s"${jobs.get} jobs")
+        assert(parts.count() > 0)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("an append whose block schema differs is refused, naming the path") {
+    forEveryEngine("schema") { c =>
+      import c.{path, s}
+      s.put(0)
+      val want = s.answer
+      val e = intercept[IllegalArgumentException](
+        s.store.append(s.block(1).withColumn("extra", lit(1)), 1))
+      assert(e.getMessage.contains(path), e.getMessage)
+      assert(!new java.io.File(s"$path/batch=1").exists)
+      assert(s.answer == want)
+    }
+  }
+
+  test("a log without a recorded schema reads the same rows, and its " +
+      "next append records the schema") {
+    forEveryEngine("legacy") { c =>
+      import c.{path, s}
+      s.put(0, 1)
+      s.store.compact(spark)
+      s.put(2)
+      val want = s.answer
+      // a log written before schemas were recorded
+      val schema = new java.io.File(s"$path/_schema")
+      assert(schema.delete())
+      assert(s.answer == want)
+      s.put(3)
+      assert(schema.exists)
+      assert(s.answer == c.reference(0, 1, 2, 3))
+    }
+  }
 }

@@ -57,6 +57,17 @@ class CurationPipelineSpec extends SparkSpec {
       .head()
     assert(kept.getAs[Long]("n_tokens") == 10L)
     assert(kept.getAs[Double]("rep_ratio") == 0.0)
+
+    // the stores hold exactly the schemas their reads declare
+    import org.apache.spark.sql.types.StructType
+    def stored(dir: String, declared: StructType) = {
+      val got = spark.read.parquet(dir).drop("batch").schema
+      val want = StructType(declared.filterNot(_.name == "batch"))
+      assert(got.map(f => (f.name, f.dataType)) ==
+        want.map(f => (f.name, f.dataType)), s"$dir: $got")
+    }
+    stored(s"$out/curated", CurationPipeline.curatedSchema)
+    stored(s"$out/rejects", CurationPipeline.rejectsSchema)
   }
 
   test("language gate: content-predicted lang outside allow-list rejected") {

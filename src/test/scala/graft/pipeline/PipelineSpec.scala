@@ -87,6 +87,80 @@ class PipelineSpec extends SparkSpec {
       == Seq(("error", 1L), ("info", 2L)))
   }
 
+  /** FoldFanIn + 1 queue files, each its own micro-batch with
+    * `maxFilesPerTrigger = 1`, so the MV pipeline folds the first
+    * FoldFanIn parts before the last batch lands. Returns the exact
+    * per-level totals. */
+  private def foldingStream(c: PipelineConfig): Map[String, Long] = {
+    val day0 = 1700000000L
+    val levels = Seq("info", "warn", "error")
+    val lines = (0 to MaterializedPipeline.FoldFanIn).map { b =>
+      val batch = Seq((day0 + b * 3600L, levels(b % 3)),
+        (day0 + b * 86400L, "info"))
+      writeTopicFile(c, "event_tracking", f"b$b%03d.json",
+        batch.map { case (ts, l) => queueLine(ts, l, s"m$b") })
+      batch
+    }
+    lines.flatten.groupBy(_._2).map { case (l, xs) => l -> xs.size.toLong }
+  }
+
+  private def runMv(c: PipelineConfig) =
+    MaterializedPipeline.start(spark, c, maxFilesPerTrigger = 1)
+
+  private def totalsOf(c: PipelineConfig): Map[String, Long] =
+    MaterializedPipeline.levelTotals(spark, c).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("MV fold: the pipeline folds the parts below the arriving batch " +
+      "once FoldFanIn of them wait; a crash after the fold publishes " +
+      "and before the batch's part lands replays exactly once") {
+    import graft.scale.CommitProtocol
+    val clean = cfg()
+    val want = foldingStream(clean)
+    runMv(clean).awaitTermination()
+    assert(totalsOf(clean) == want)
+    val k = MaterializedPipeline.FoldFanIn
+    val daily = new java.io.File(clean.tablePath("daily"))
+    assert(daily.list().contains("batch=compacted-0"), daily.list().toSeq)
+    assert(scala.io.Source.fromFile(new java.io.File(daily, "_manifest"))
+      .mkString.trim == s"0 ${k - 1}", "the fold covers ids below k only")
+    val steps = CommitProtocol.stepsOf("part-fold")
+    (steps.indexOf("publish-manifest") until steps.size).foreach { i =>
+      val c = cfg()
+      assert(foldingStream(c) == want)
+      CommitProtocol.crashAfter = Some(("part-fold", i))
+      val e = try intercept[org.apache.spark.sql.streaming
+          .StreamingQueryException](runMv(c).awaitTermination())
+        finally CommitProtocol.crashAfter = None
+      assert(Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(_.isInstanceOf[CommitProtocol.InjectedCrash]), e)
+      // batch k's part never landed; the restart replays batch k and
+      // its append is above the new watermark
+      assert(!new java.io.File(c.tablePath("daily") + s"/batch=$k").exists)
+      runMv(c).awaitTermination()
+      assert(totalsOf(c) == want, s"after a crash at '${steps(i)}'")
+    }
+  }
+
+  test("MV fold: a crash after the batch's part lands and before the " +
+      "checkpoint commit replays exactly once") {
+    val c = cfg()
+    val want = foldingStream(c)
+    runMv(c).awaitTermination()
+    val k = MaterializedPipeline.FoldFanIn
+    // the part of batch k landed but its commit did not
+    val commits = c.checkpointDir("consumer") + "/commits"
+    Seq(s"$k", s".$k.crc").foreach(n =>
+      new java.io.File(commits, n).delete())
+    assert(!new java.io.File(commits, s"$k").exists)
+    val q = runMv(c)
+    q.awaitTermination()
+    assert(q.recentProgress.exists(p =>
+      p.batchId == k && p.numInputRows > 0), "batch k must replay")
+    assert(totalsOf(c) == want)
+  }
+
   test("direct pipeline: wire events land in email_events; corrupt json dead-letters") {
     val c = cfg()
     def wire(ct: String, et: String, time: String, meta: String) =

@@ -209,12 +209,18 @@ class SampleLayoutSpec extends SparkSpec {
     val p = tmpDir("sampleidx-legacy") + "/events"
     val fs = Hdfs.of(spark, p)
     events.limit(10).write.parquet(s"$p/base_g0")
+    events.limit(3).write.parquet(s"$p/b_1")
     Hdfs.atomicWrite(fs, new Path(p, "_manifest"), "0 -1")
     Hdfs.atomicWrite(fs, new Path(p, "_graft_meta"), "layout=manifest-v1")
     SampleLayout.ensureEvents(events, p)
     def ids(path: String) = SampleLayout.sampleScan(spark, path, 1, 8)
       .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(ids(p) == ids(layout) && ids(p).nonEmpty)
+    // the previous format's base and part dirs do not outlive the
+    // rebuild
+    val left = fs.listStatus(new Path(p)).map(_.getPath.getName)
+    assert(!left.exists(n => n.startsWith("base_g") || n.startsWith("b_")),
+      left.toSeq)
   }
 
   test("ensure is idempotent; fraction bounds are enforced") {
