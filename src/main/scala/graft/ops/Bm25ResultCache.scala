@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.scale.PartLog
 
 /** ClickHouse query-cache analog for the BM25 serving path (round-11
   * verdict #4's suggested alternative): a PERSISTED memo of
@@ -24,13 +26,14 @@ import org.apache.spark.sql.functions._
   * race with readers; stale rows are dead weight until a memo GC
   * ([[compact]]) drops keys whose stamp is no longer current.
   *
-  * Layout: `memoPath/batch=<n>/` parquet (ts_key, doc_id, score, rank)
-  * with per-dir `_SUCCESS` — the delta-store discipline: one append
-  * job per call (never a write per termset), committed-marker
-  * discovery in one glob, torn writes invisible. Single-writer like
-  * every ensure* store. At memo sizes where the probe scan dominates,
-  * the layout would bucket by ts_key; the probe is a bounded-key
-  * `isin` filter either way.
+  * Layout: the memo is a [[graft.scale.PartLog]] at `memoPath` of
+  * (ts_key, doc_id, score, rank) rows: one part per call that missed
+  * (never a write per termset), keyed by the view's watermark + 1, so
+  * visibility (committed parts only, in one glob), the recorded schema
+  * and the GC fold are the log's. Single-writer like every ensure*
+  * store. At memo sizes where the probe scan dominates, the layout
+  * would bucket by ts_key; the probe is a bounded-key `isin` filter
+  * either way.
   */
 object Bm25ResultCache {
 
@@ -109,27 +112,26 @@ object Bm25ResultCache {
     val canon = cb.canon
     val repOf = cb.repOf
     val keyOf = cb.keyOf
-    val memo = readMemo(spark, memoPath)
+    val memoLog = new PartLog(memoPath)
+    val memo = memoLog.readOption(spark) // None: nothing memoized yet
     val wanted = keyOf.values.toSeq
-    val present: Set[String] = memo
-      .filter(col("ts_key").isin(wanted: _*))
-      .select(col("ts_key")).distinct()
-      .collect().map(_.getString(0)).toSet // bounded: <= distinct termsets
+    val present: Set[String] = memo.fold(Set.empty[String])(
+      _.filter(col("ts_key").isin(wanted: _*))
+        .select(col("ts_key")).distinct()
+        .collect().map(_.getString(0)).toSet) // bounded: <= distinct termsets
     val (hitReps, missReps) = repOf.values.toSeq.distinct
       .partition(rid => present.contains(keyOf(rid)))
 
-    val hits: Option[DataFrame] =
-      if (hitReps.isEmpty) None
-      else {
+    val hits: Option[DataFrame] = memo.filter(_ => hitReps.nonEmpty)
+      .map { m =>
         val hitKeys = hitReps.map(r => (keyOf(r), r))
           .toDF("ts_key", "rep_id")
         // duplicate (ts_key, rank) rows can exist after a replayed
         // append; rows are deterministic-identical, distinct collapses
-        Some(memo.filter(col("ts_key").isin(
-            hitReps.map(keyOf): _*)).distinct()
+        m.filter(col("ts_key").isin(hitReps.map(keyOf): _*)).distinct()
           .join(broadcast(hitKeys), Seq("ts_key"))
           .select(col("rep_id"), col("doc_id"), col("score"),
-            col("rank")))
+            col("rank"))
       }
     val misses: Option[DataFrame] =
       if (missReps.isEmpty) None
@@ -146,10 +148,11 @@ object Bm25ResultCache {
         // a 398-branch expression bloats and re-analyzes the plan)
         val missKeys = missReps.map(r => (r, keyOf(r)))
           .toDF("rep_id", "ts_key")
-        appendMemo(spark, memoPath, scored
-          .join(broadcast(missKeys), Seq("rep_id"))
-          .select(col("ts_key"), col("doc_id"), col("score"),
-            col("rank")))
+        memoLog.append(scored
+            .join(broadcast(missKeys), Seq("rep_id"))
+            .select(col("ts_key"), col("doc_id"), col("score"),
+              col("rank")),
+          memoLog.view(spark).through + 1)
         Some(scored)
       }
     val repScored = (hits, misses) match {
@@ -167,53 +170,12 @@ object Bm25ResultCache {
       .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
   }
 
-  private val memoSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("ts_key",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("score",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("rank",
-      org.apache.spark.sql.types.LongType)))
-
-  private def readMemo(spark: SparkSession, memoPath: String): DataFrame = {
-    val fs = graft.scale.Hdfs.of(spark, memoPath)
-    val marks = fs.globStatus(
-      new org.apache.hadoop.fs.Path(memoPath, "batch=*/_SUCCESS"))
-    val committed =
-      if (marks == null) Seq.empty
-      else marks.toSeq.map(_.getPath.getParent.toString)
-    if (committed.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], memoSchema)
-    else spark.read.schema(memoSchema).parquet(committed: _*)
-  }
-
-  private def appendMemo(spark: SparkSession, memoPath: String,
-      rows: DataFrame): Unit = {
-    val fs = graft.scale.Hdfs.of(spark, memoPath)
-    val marks = fs.globStatus(
-      new org.apache.hadoop.fs.Path(memoPath, "batch=*/_SUCCESS"))
-    val next =
-      if (marks == null || marks.isEmpty) 0L
-      else marks.toSeq.flatMap(
-        _.getPath.getParent.getName.stripPrefix("batch=").toLongOption)
-        .max + 1L
-    rows.write.mode(SaveMode.Overwrite)
-      .parquet(s"$memoPath/batch=$next")
-  }
-
   /** Memo GC: drop entries whose stamp is no longer the CURRENT
     * index's — stale keys can never hit again (the stamp is in the
-    * key), they are pure dead weight. Writes the survivors to a FRESH
-    * batch id FIRST, then deletes the superseded dirs (round-12
-    * ADVICE: the delete-first order silently emptied the whole memo on
-    * a crash between the steps — destroying exactly the warm entries
-    * the GC exists to preserve). A crash between the new order's steps
-    * leaves survivors transiently duplicated across old+new batches;
-    * the hit path's distinct() collapses them and a re-run finishes
-    * the delete. Maintenance op, no reader or writer in flight (the
-    * compaction contract every store here shares). Current keys are
+    * key), they are pure dead weight. The memo log's fold
+    * ([[PartLog.compact]]) keeps the live keys in its next base, so a
+    * reader sees the complete old memo or the complete new one, never
+    * an empty or partial one, in any crash window. Current keys are
     * not enumerable from the memo alone, so the caller passes the live
     * termset universe it cares about; keys outside it are dropped. */
   def compact(spark: SparkSession, path: String, memoPath: String,
@@ -221,27 +183,7 @@ object Bm25ResultCache {
     val stamp = indexStamp(spark, path)
     val live = liveTermsets
       .map(ts => tsKey(ts.distinct.sorted, k, stamp))
-    val memo = readMemo(spark, memoPath)
-    val keep = memo.filter(col("ts_key").isin(live: _*)).distinct()
-    val fs = graft.scale.Hdfs.of(spark, memoPath)
-    // snapshot the superseded dirs BEFORE writing, so the fresh batch
-    // is never in its own delete list
-    val marks = fs.globStatus(
-      new org.apache.hadoop.fs.Path(memoPath, "batch=*/_SUCCESS"))
-    val oldDirs =
-      if (marks == null) Seq.empty
-      else marks.toSeq.map(_.getPath.getParent)
-    val next = oldDirs
-      .flatMap(_.getName.stripPrefix("batch=").toLongOption)
-      .foldLeft(-1L)(math.max) + 1L
-    import graft.scale.CommitProtocol.{run, step}
-    run("bm25-memo-compact", Seq(
-      step("write-survivors") {
-        keep.write.mode(SaveMode.Overwrite)
-          .parquet(s"$memoPath/batch=$next")
-      },
-      step("delete-superseded") {
-        oldDirs.foreach(d => fs.delete(d, true))
-      }))
+    new PartLog(memoPath).compact(spark)(
+      _.filter(col("ts_key").isin(live: _*)).distinct())
   }
 }

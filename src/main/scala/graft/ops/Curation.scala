@@ -69,7 +69,12 @@ object Curation {
     * pair once just to dedup what each row could dedup itself.
     * Same multiset of output rows (array_distinct keeps first
     * occurrences), no row order guarantee — all consumers aggregate
-    * or join. */
+    * or join.
+    *
+    * Precondition: `doc_id` is unique in `docs`. The distinct is per
+    * ROW, so two rows with one doc_id each emit their grams, and the
+    * pair appears twice (a `SELECT DISTINCT doc_id, ngram` would keep
+    * it once). Dedup the doc rows first where ids can repeat. */
   def docNgrams(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"),
@@ -107,6 +112,9 @@ object Curation {
     * spans — the C4/RefinedWeb "repeated line" filter generalized to
     * flat text). One explode + one map-side-combined count; the result
     * is the removal list a cleaning pass joins against.
+    *
+    * Precondition: `doc_id` is unique in `docs` ([[docNgrams]]): a
+    * doc repeated in k rows counts k times toward `minDocs`.
     */
   def boilerplateNgrams(docs: DataFrame, n: Int = 5,
       minDocs: Int = 3): DataFrame =
@@ -131,6 +139,12 @@ object Curation {
     * joined back LEFT so gram-free/clean docs score 0.0 rather than
     * vanish. At scale the list is broadcast; the doc side is one
     * explode + one count — same shuffle budget as the detection pass.
+    *
+    * Precondition: `doc_id` is unique in `docs` ([[docNgrams]]): a
+    * doc repeated in k rows counts k times toward its grams'
+    * `minDocs`, its `n_grams` and `n_boiler` are k times too large,
+    * and it yields k output rows, where the DuckDB oracle's
+    * `SELECT DISTINCT doc_id, ngram` counts it once.
     */
   def boilerplateFraction(docs: DataFrame, n: Int = 5,
       minDocs: Int = 3): DataFrame = {

@@ -149,19 +149,33 @@ object VectorIndex {
     finally out.close()
   }
 
-  /** All streamed delta batches under `<path>/cells_delta/batch=*`
-    * (written by [[graft.pipeline.VectorIngestPipeline]]), or None if
-    * no delta has landed. The batch and cell partition columns are
-    * both discoverable; readers prune on cell exactly as on the base
+  /** All committed streamed delta batches under
+    * `<path>/cells_delta/batch=*` (written by
+    * [[graft.pipeline.VectorIngestPipeline]]), or None if none has
+    * landed. The batch and cell partition columns are both
+    * discoverable; readers prune on cell exactly as on the base
     * layout. */
   def deltaBatches(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val root = new Path(s"$path/cells_delta")
-    val hasBatches = fs.exists(root) &&
-      fs.listStatus(root).exists(_.getPath.getName.startsWith("batch="))
-    if (!hasBatches) None
-    else Some(spark.read.option("basePath", root.toString)
-      .parquet(s"$root/batch=*"))
+    val batches = committedDeltaBatches(spark, path)
+    if (batches.isEmpty) None else Some(readFloatDeltas(spark, path, batches))
+  }
+
+  /** Names of the float-delta batch dirs that hold `_SUCCESS`, found
+    * in one glob: the rule of every batch-keyed store. Spark writes the
+    * marker last, so a batch whose write died during job commit stays
+    * invisible, to the probes and to
+    * `VectorIngestPipeline.compactDeltas`, until its replay lands. */
+  private def committedDeltaBatches(spark: SparkSession,
+      path: String): Seq[String] =
+    Option(graft.scale.Hdfs.of(spark, path).globStatus(
+        new Path(s"$path/cells_delta/batch=*/_SUCCESS")))
+      .toSeq.flatten.map(_.getPath.getParent.getName).sorted
+
+  private def readFloatDeltas(spark: SparkSession, path: String,
+      batches: Seq[String]): DataFrame = {
+    val root = s"$path/cells_delta"
+    spark.read.option("basePath", root)
+      .parquet(batches.map(b => s"$root/$b"): _*)
   }
 
   /** Code-delta layout for streamed arrivals:
@@ -339,7 +353,7 @@ object VectorIndex {
     }
   }
 
-  /** Split the live float-delta batches by code coverage:
+  /** Split the committed float-delta batches by code coverage:
     * `(coded, uncoded)` where `coded = (codes, floats)` spans the
     * batches whose code dir committed (`_SUCCESS`) under the CURRENT
     * books id, and `uncoded` spans the rest (pre-codebook arrivals,
@@ -348,12 +362,9 @@ object VectorIndex {
     * every arrival is scored either way, pinned in IvfPqSpec. */
   private[graft] def deltaByCoverage(spark: SparkSession, path: String)
       : (Option[(DataFrame, DataFrame)], Option[DataFrame]) = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val root = new Path(s"$path/cells_delta")
-    if (!fs.exists(root)) return (None, None)
-    val batches = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).sorted.toSeq
+    val batches = committedDeltaBatches(spark, path)
     if (batches.isEmpty) return (None, None)
+    val fs = graft.scale.Hdfs.of(spark, path)
     val curId = currentBooksId(spark, path)
     def covered(b: String): Boolean = curId.exists { id =>
       fs.exists(new Path(s"${pqDeltaDir(path)}/$b/_SUCCESS")) &&
@@ -361,15 +372,13 @@ object VectorIndex {
           new Path(s"${pqDeltaDir(path)}/$b/_books_id")).contains(id)
     }
     val (cov, unc) = batches.partition(covered)
-    def readFloats(bs: Seq[String]): DataFrame =
-      spark.read.option("basePath", root.toString)
-        .parquet(bs.map(b => s"$root/$b"): _*)
     val coded =
       if (cov.isEmpty) None
       else Some((spark.read.option("basePath", pqDeltaDir(path))
           .parquet(cov.map(b => s"${pqDeltaDir(path)}/$b"): _*),
-        readFloats(cov)))
-    val uncoded = if (unc.isEmpty) None else Some(readFloats(unc))
+        readFloatDeltas(spark, path, cov)))
+    val uncoded =
+      if (unc.isEmpty) None else Some(readFloatDeltas(spark, path, unc))
     (coded, uncoded)
   }
 

@@ -3,10 +3,11 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ops.Curation
 import graft.ops.TextAnalysis
+import graft.scale.PartLog
 
 /** Streaming corpus curation: the batch curation operators
   * ([[graft.ops.Curation]], [[graft.ops.TextAnalysis]]) applied to a
@@ -17,7 +18,7 @@ import graft.ops.TextAnalysis
   *      both narrow codegen'd projections fused into the scan;
   *   2. cross-batch EXACT dedup on the content fingerprint — an
   *      anti-join against the curated store's own persisted
-  *      fingerprints (self-excluding the replaying batch's partition),
+  *      fingerprints (self-excluding the replaying batch's part),
   *      so a re-crawled page is dropped even when it arrives days
   *      after the original, and dedup "state" can only ever contain
   *      docs that passed EVERY gate including the batch-level DSIR
@@ -28,6 +29,13 @@ import graft.ops.TextAnalysis
   *      reject store WITH the failed gate named, so filter tuning is
   *      auditable (what a pipeline operator actually needs when a
   *      quality knob changes).
+  *
+  * Each store is a [[graft.scale.PartLog]], one per writer: the
+  * curated store at `outDir/curated`, and the reject store as two logs,
+  * the curated stream's tier rejects at `outDir/rejects/tier` and the
+  * rejects stream's gate rejects at `outDir/rejects/gate`. A part is
+  * visible once its `_SUCCESS` lands, so a write that died mid-commit
+  * joins no later anti-join.
   *
   * Near-dup deduplication runs in BOTH regimes: the optional streaming
   * tier (`nearDupStore` below) probes every micro-batch against the
@@ -50,23 +58,11 @@ object CurationPipeline {
     StructField("lang", StringType),
     StructField("source", StringType)))
 
-  /** The curated store as [[start]] writes it, one `batch=<id>` dir per
-    * micro-batch. `batch` is the partition column, an int as inference
-    * types it. Every read of the store uses this schema, so none infers
-    * one from Parquet footers. */
-  val curatedSchema: StructType = StructType(docSchema.fields ++ Seq(
-    StructField("n_tokens", LongType),
-    StructField("rep_ratio", DoubleType),
-    StructField("fingerprint", StringType),
-    StructField("batch", IntegerType)))
-
-  /** The reject store as [[start]] writes it: `batch=d<id>` holds the
-    * curated stream's tier rejects and `batch=g<id>` the gate rejects,
-    * so `batch` is a string partition column. */
-  val rejectsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("reject_reason", StringType),
-    StructField("batch", StringType)))
+  private def curatedLog(outDir: String) = new PartLog(s"$outDir/curated")
+  private def tierRejects(outDir: String) =
+    new PartLog(s"$outDir/rejects/tier")
+  private def gateRejects(outDir: String) =
+    new PartLog(s"$outDir/rejects/gate")
 
   /** Per-tier wall-clock accumulator for the curated foreachBatch
     * (round-14 VERDICT #2: the three-tier throughput gap — 1229 vs
@@ -128,18 +124,19 @@ object CurationPipeline {
     * gate, including the batch-level DSIR tier; the reject stream is
     * stateless.
     *
-    * '''Migration from the pre-store-backed-dedup version''' (which
-    * used streaming `dropDuplicates` state): resuming an OLD
-    * checkpoint fails — removing a stateful operator changes the
-    * streaming plan, so a deployment upgrading across that change
-    * must start from a FRESH `checkpointDir` (the curated store
-    * itself carries the dedup state forward, so no docs re-admit).
-    * An old curated store also lacks the persisted `fingerprint`
-    * column the anti-join reads; [[migrateFingerprints]] backfills it
-    * once (recomputing fingerprints from the stored text) before the
-    * upgraded stream's first batch. Without it, the anti-join reads
-    * the old rows through [[curatedSchema]] with null fingerprints and
-    * drops none of their re-crawls.
+    * '''Upgrading from the pre-store-backed-dedup version''' (which
+    * used streaming `dropDuplicates` state): resuming its checkpoint
+    * fails — removing a stateful operator changes the streaming plan —
+    * so the upgrade starts from a fresh `checkpointDir`, and batch ids
+    * restart at 0. A curated store that version wrote lacks the
+    * persisted `fingerprint` column the anti-join reads: the first
+    * batch refuses it with its path in the message and leaves its rows
+    * as they are, so start the upgraded stream on a new `outDir`. No
+    * backfill in place is offered: with ids restarting at 0, each new
+    * part would overwrite the old part of the same id after the
+    * anti-join had already read it. A reject store written before the
+    * reject logs split (`rejects/batch=d<id>`, `rejects/batch=g<id>`)
+    * is left on disk and not read.
     *
     * @param minTokens   reject docs shorter than this many tokens
     * @param maxRepetition reject docs whose duplicate-bigram fraction
@@ -239,28 +236,34 @@ object CurationPipeline {
             withW.filter(col("dsir_weight") >= minW).drop("dsir_weight")
           }
         }
+        // The curated store less this batch's own part, read by both
+        // dedup tiers below (None before the first part lands). It
+        // SELF-EXCLUDES exactly this batch's id, so a replay never
+        // sees its own partial write (the SignatureStore
+        // self-excluding-probe lesson), while every other id stays
+        // visible: after a fresh-checkpoint rerun re-batches the
+        // source, parts with higher ids hold docs this batch repeats.
+        lazy val prior = curatedLog(outDir)
+          .readOption(batch.sparkSession, Some(batchId)).map { p =>
+            require(p.columns.contains("fingerprint"),
+              s"curated store $outDir/curated has no fingerprint " +
+                "column: it was written before dedup read fingerprints " +
+                "from the store. Start this stream on a new outDir")
+            p
+          }
         // exact dedup, all gates already applied: within-batch
         // collapse + anti-join against the curated store's
-        // fingerprints. The prior read SELF-EXCLUDES this batch's
-        // partition so a replay never sees its own partial write
-        // (the SignatureStore self-excluding-probe lesson).
+        // fingerprints.
         val deduped = phase("exact_dedup") {
           val inBatch = targeted.dropDuplicates("fingerprint")
-          val curatedDir = s"$outDir/curated"
-          val dedupFs = graft.scale.Hdfs.of(batch.sparkSession, curatedDir)
           // localCheckpoint: the near-dup tier fires SEVERAL jobs over
           // this frame (probe, verify, signature append) and each would
           // otherwise re-run the store read + anti-join per job — the
           // un-checkpointed rework measured ~3x on the two-tier
           // streaming metric before this line
-          (if (!dedupFs.exists(new org.apache.hadoop.fs.Path(curatedDir)))
-            inBatch
-          else {
-            val prior = curatedParts(batch.sparkSession, outDir)
-              .filter(col("batch") =!= batchId)
-              .select(col("fingerprint"))
-            inBatch.join(prior, Seq("fingerprint"), "left_anti")
-          }).localCheckpoint(true)
+          prior.fold(inBatch)(p => inBatch.join(
+              p.select(col("fingerprint")), Seq("fingerprint"), "left_anti"))
+            .localCheckpoint(true)
         }
         val kept = nearDupStore match {
           case None => deduped
@@ -281,11 +284,10 @@ object CurationPipeline {
               // the batch's own docs — two within-batch near-dup
               // survivors would flag EACH OTHER as near_dup and the
               // rewritten partition would silently drop them.
-              // Excluding the batch's own partition prunes those
+              // Excluding the batch's own part prunes those
               // candidates away in dedupeIncoming's verify left_semi,
               // restoring retry-stability (round-13 ADVICE).
-              val curatedSoFar = curatedParts(batch.sparkSession, outDir)
-                .filter(col("batch") =!= batchId)
+              val curatedSoFar = prior.getOrElse(deduped.limit(0))
                 .select(col("doc_id"), col("text"))
               val (keep, dups) = graft.ops.SignatureStore.ingest(
                 deduped, curatedSoFar, path)
@@ -299,34 +301,25 @@ object CurationPipeline {
             }
           }
         }
-        // ONE merged tier-rejects write per batch, batchId-keyed
-        // overwrite — replay rewrites its own dir. (Upgrade note: the
-        // pre-round-15 layout wrote off_target and near_dup rejects
-        // to separate batch=d/batch=nd dirs; a store written by that
-        // version replays cleanly because a rewritten batch=d dir
-        // carries the union and a stale batch=nd dir holds rows the
-        // union duplicates only on a mid-upgrade replay of the SAME
-        // batch — fresh stores, the normal case, never see both.)
+        // ONE merged tier-rejects part per batch, batchId-keyed
+        // overwrite — replay rewrites its own part
         if (rejectFrames.nonEmpty) phase("reject_write") {
-          rejectFrames.reduce(_ unionByName _)
-            .write.mode("overwrite")
-            .parquet(s"$outDir/rejects/batch=d$batchId")
+          tierRejects(outDir)
+            .append(rejectFrames.reduce(_ unionByName _), batchId)
         }
         // batchId-keyed overwrite = exactly-once on retry: a replayed
-        // micro-batch rewrites ITS OWN partition instead of appending a
+        // micro-batch rewrites ITS OWN part instead of appending a
         // duplicate (same contract as SummingStore/EventSink appends).
         // The fingerprint column is persisted — it IS the cross-batch
         // dedup state now that the anti-join reads it from the store.
         phase("curated_write") {
-          // the columns of curatedSchema, less the partition column
-          kept.select(col("doc_id"), col("text"), col("lang"),
+          curatedLog(outDir).append(
+            kept.select(col("doc_id"), col("text"), col("lang"),
               col("source"), col("n_tokens"),
               round(col("rep_ratio"), 4).as("rep_ratio"),
-              col("fingerprint"))
-            .write.mode("overwrite")
-            .parquet(s"$outDir/curated/batch=$batchId")
+              col("fingerprint")),
+            batchId)
         }
-        ()
       }
       .start()
 
@@ -337,102 +330,22 @@ object CurationPipeline {
       .option("checkpointLocation", s"$checkpointDir-rejects")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col("doc_id"), col("reject_reason"))
-          .write.mode("overwrite")
-          .parquet(s"$outDir/rejects/batch=g$batchId")
-        ()
+        gateRejects(outDir)
+          .append(batch.select(col("doc_id"), col("reject_reason")), batchId)
       }
       .start()
 
     (curatedQ, rejectsQ)
   }
 
-  /** One-shot backfill for curated stores written BEFORE dedup became
-    * store-backed: adds the `fingerprint` column the per-batch
-    * anti-join reads, recomputed from the stored text (the same
-    * [[TextAnalysis.fingerprint]] the gate projection applies, so old
-    * and new rows dedup against each other exactly). Writes to a
-    * sibling staging dir then renames — never reads and overwrites
-    * the same path. No-op when the column is already present. Run
-    * once, before the upgraded stream's first batch, alongside the
-    * fresh `checkpointDir` the plan change requires (see [[start]]).
-    */
-  def migrateFingerprints(spark: SparkSession, outDir: String): Unit = {
-    val dir = s"$outDir/curated"
-    val fs = graft.scale.Hdfs.of(spark, dir)
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val stagedPath = new org.apache.hadoop.fs.Path(
-      s"$outDir/curated_fp_migration")
-    val backupPath = new org.apache.hadoop.fs.Path(
-      s"$outDir/curated_pre_fp_backup")
-    // Hadoop FileSystem signals rename/delete failure by RETURNING
-    // false, not throwing (round-14 ADVICE): a swallowed false from
-    // rename(staged -> curated) followed by the unconditional backup
-    // delete — plus a stream start that treats a missing curated dir
-    // as first-batch — could recreate curated with only new data and
-    // let the NEXT migrate run delete the staged dir holding the full
-    // history. Every mutation in this protocol goes through these
-    // checked wrappers so a silent false aborts the swap loudly with
-    // the recovery preamble still able to finish the job on re-run.
-    def renameOrThrow(from: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(from, to),
-        s"fingerprint migration: rename $from -> $to returned false; " +
-          "aborting the swap (re-run resumes from the recovery preamble)")
-    def deleteOrThrow(p: org.apache.hadoop.fs.Path): Unit =
-      require(!fs.exists(p) || fs.delete(p, true),
-        s"fingerprint migration: delete $p returned false; aborting " +
-          "(re-run resumes from the recovery preamble)")
-    // Crash recovery FIRST (review-caught: the original delete-then-
-    // rename lost the whole store — and silently reset dedup — if the
-    // JVM died between the two). The swap below never has a moment
-    // with no recoverable copy: a missing curated dir means a crash
-    // landed between its two renames, and exactly one of staged /
-    // backup holds the data.
-    if (!fs.exists(dirPath)) {
-      if (fs.exists(stagedPath)) renameOrThrow(stagedPath, dirPath)
-      else if (fs.exists(backupPath)) renameOrThrow(backupPath, dirPath)
-      else return // nothing to migrate
-    }
-    if (spark.read.parquet(dir).columns.contains("fingerprint")) {
-      // already migrated — drop leftovers from a crash after the
-      // staged-in rename but before the backup delete
-      deleteOrThrow(backupPath)
-      deleteOrThrow(stagedPath)
-    } else {
-      require(!fs.exists(backupPath),
-        s"curated store present without fingerprints AND $backupPath " +
-          "exists — not a state this protocol produces; inspect " +
-          "manually before migrating")
-      // a staged dir WITHOUT its parquet commit marker is a partial
-      // write from a crashed prior attempt — rebuild it
-      val stagedComplete = fs.exists(
-        new org.apache.hadoop.fs.Path(stagedPath, "_SUCCESS"))
-      if (!stagedComplete) {
-        deleteOrThrow(stagedPath)
-        spark.read.parquet(dir)
-          .withColumn("fingerprint",
-            TextAnalysis.fingerprint(col("text")))
-          .write.mode("overwrite").partitionBy("batch")
-          .parquet(stagedPath.toString)
-      }
-      // swap: old aside, staged in, backup dropped — at every point
-      // the data exists under curated, staged, or backup, and the
-      // recovery preamble above can resume from any interleaving
-      renameOrThrow(dirPath, backupPath)
-      renameOrThrow(stagedPath, dirPath)
-      deleteOrThrow(backupPath)
-    }
-  }
-
-  /** The curated store with its `batch` partition column. */
-  private def curatedParts(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(curatedSchema).parquet(s"$outDir/curated")
-
   def curated(spark: SparkSession, outDir: String): DataFrame =
-    curatedParts(spark, outDir).drop("batch")
+    curatedLog(outDir).read(spark)
 
+  /** Both reject logs: the curated stream's tier rejects and the
+    * rejects stream's gate rejects. */
   def rejects(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(rejectsSchema).parquet(s"$outDir/rejects")
-      .drop("batch")
+    Seq(tierRejects(outDir), gateRejects(outDir))
+      .flatMap(_.readOption(spark)).reduceOption(_ unionByName _)
+      .getOrElse(throw new IllegalStateException(
+        s"no committed rejects under $outDir/rejects"))
 }

@@ -1,11 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.ops.Multimodal
+import graft.scale.PartLog
 
 /** Streaming MEDIA ingest: arriving binary payloads (base64 in the
   * JSON topic files — the wire shape a Kafka topic of blobs would
@@ -18,10 +19,11 @@ import graft.ops.Multimodal
   * catches).
   *
   * Scale shape: decode is narrow (parallelism == source partitions,
-  * payloads never shuffle); both sinks are batchId-keyed OVERWRITE
-  * dirs, so a checkpoint replay of any micro-batch is idempotent; a
-  * crash between the two writes is healed by the replay (stats commit
-  * first — a re-run overwrites both dirs with identical rows). At
+  * payloads never shuffle); every sink is a [[graft.scale.PartLog]]
+  * (stats, rejects, dups, and the phash store), appended batchId-keyed,
+  * so a checkpoint replay of any micro-batch overwrites its own parts;
+  * a crash between the writes is healed by the replay (stats commit
+  * first — a re-run overwrites every part with identical rows). At
   * 100 TB this is the same per-batch contract as the vector-ingest
   * and postings pipelines: per-batch work scales with the ARRIVING
   * rows only, never with the accumulated store.
@@ -42,7 +44,7 @@ object MediaPipeline {
 
   /** One micro-batch: base64 -> binary, dead-letter decode through
     * [[Multimodal.MixedRealDecoder]], split into stats + rejects, two
-    * batchId-keyed overwrite writes on one CommitProtocol run. The
+    * batchId-keyed part-log appends on one CommitProtocol run. The
     * decoded frame is a micro-batch — staged once via localCheckpoint
     * so the sinks don't re-decode (the stage-narrow-frames rule: the
     * staged rows are stats-sized, payloads are already dropped).
@@ -59,7 +61,7 @@ object MediaPipeline {
     * gain-invariant energy-delta hash lands in the same store as
     * `afp:`-prefixed rows — a re-encoded copy at a different volume
     * dups against its original exactly like a rescaled image re-crawl
-    * does. All four writes are batchId-keyed overwrites on one
+    * does. All four writes are batchId-keyed part-log appends on one
     * CommitProtocol run, so a checkpoint replay of any crash window
     * re-lands the batch identically. */
   def ingestBatch(batch: DataFrame, path: String, batchId: Long,
@@ -85,11 +87,11 @@ object MediaPipeline {
       if (!phashDedup)
         run("media-ingest", Seq(
           step("write-stats-delta") {
-            outcomes.filter(col("error").isNull)
-              .select(col("doc_id"), col("format"), col("n_bytes"),
-                col("features"))
-              .write.mode(SaveMode.Overwrite)
-              .parquet(s"${statsDir(path)}/batch=$batchId")
+            new PartLog(statsDir(path)).append(
+              outcomes.filter(col("error").isNull)
+                .select(col("doc_id"), col("format"), col("n_bytes"),
+                  col("features")),
+              batchId)
           },
           step("write-rejects-delta") {
             writeRejects(outcomes, path, batchId)
@@ -137,8 +139,8 @@ object MediaPipeline {
           // (caught by the CommitCrashSpec sweep, exactly the window
           // it exists for). Appends are batchId-keyed, so exclusion
           // is exact.
-          val store = readDeltas(spark, phashStoreDir(path),
-            phashSchema, excludeBatch = Some(batchId))
+          val store = visible(spark, phashStoreDir(path), phashSchema,
+            without = Some(batchId))
           // store-side probe: semi join against the BROADCAST batch
           // hashes — the store scan stays where it is, nothing store-
           // sized shuffles
@@ -164,13 +166,13 @@ object MediaPipeline {
                 // id of a perceptual-dup image must keep its stats
                 // row — a doc_id-only anti silently dropped it
                 // (review-caught)
-                outcomes.filter(col("error").isNull)
-                  .join(dupRows.select(col("doc_id"), col("format")),
-                    Seq("doc_id", "format"), "left_anti")
-                  .select(col("doc_id"), col("format"), col("n_bytes"),
-                    col("features"))
-                  .write.mode(SaveMode.Overwrite)
-                  .parquet(s"${statsDir(path)}/batch=$batchId")
+                new PartLog(statsDir(path)).append(
+                  outcomes.filter(col("error").isNull)
+                    .join(dupRows.select(col("doc_id"), col("format")),
+                      Seq("doc_id", "format"), "left_anti")
+                    .select(col("doc_id"), col("format"), col("n_bytes"),
+                      col("features")),
+                  batchId)
               },
               step("write-rejects-delta") {
                 // feature-pass rejects PLUS hash-pass rejects (the
@@ -186,17 +188,16 @@ object MediaPipeline {
                   path, batchId)
               },
               step("write-dups-delta") {
-                dupRows.write.mode(SaveMode.Overwrite)
-                  .parquet(s"${dupsDir(path)}/batch=$batchId")
+                new PartLog(dupsDir(path)).append(dupRows, batchId)
               },
               step("append-phash-store") {
                 // the batch's KEPT fingerprints (one per new phash)
-                hashed.join(keeper, Seq("phash"))
-                  .filter(col("doc_id") === col("keep_id"))
-                  .join(broadcast(hitHashes), Seq("phash"), "left_anti")
-                  .select(col("phash"))
-                  .write.mode(SaveMode.Overwrite)
-                  .parquet(s"${phashStoreDir(path)}/batch=$batchId")
+                new PartLog(phashStoreDir(path)).append(
+                  hashed.join(keeper, Seq("phash"))
+                    .filter(col("doc_id") === col("keep_id"))
+                    .join(broadcast(hitHashes), Seq("phash"), "left_anti")
+                    .select(col("phash")),
+                  batchId)
               }))
           } finally dupRows.unpersist(false)
         } finally hashOut.unpersist(false)
@@ -207,11 +208,11 @@ object MediaPipeline {
 
   private def writeRejects(outcomes: DataFrame, path: String,
       batchId: Long): Unit =
-    outcomes.filter(col("error").isNotNull)
-      .select(col("doc_id"), col("format"), col("n_bytes"),
-        col("error"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${rejectsDir(path)}/batch=$batchId")
+    new PartLog(rejectsDir(path)).append(
+      outcomes.filter(col("error").isNotNull)
+        .select(col("doc_id"), col("format"), col("n_bytes"),
+          col("error")),
+      batchId)
 
   /** Start the ingest stream over a JSON drop directory. */
   def start(spark: SparkSession, srcDir: String, path: String,
@@ -231,14 +232,14 @@ object MediaPipeline {
   /** All committed stats / rejects across batches (empty-schema-safe:
     * a store with no committed batches reads as an empty frame). */
   def stats(spark: SparkSession, path: String): DataFrame =
-    readDeltas(spark, statsDir(path), StructType(Seq(
+    visible(spark, statsDir(path), StructType(Seq(
       StructField("doc_id", LongType),
       StructField("format", StringType),
       StructField("n_bytes", IntegerType),
       StructField("features", ArrayType(DoubleType)))))
 
   def rejects(spark: SparkSession, path: String): DataFrame =
-    readDeltas(spark, rejectsDir(path), StructType(Seq(
+    visible(spark, rejectsDir(path), StructType(Seq(
       StructField("doc_id", LongType),
       StructField("format", StringType),
       StructField("n_bytes", IntegerType),
@@ -249,28 +250,15 @@ object MediaPipeline {
 
   /** Perceptual duplicates routed by the dedup tier. */
   def dups(spark: SparkSession, path: String): DataFrame =
-    readDeltas(spark, dupsDir(path), StructType(Seq(
+    visible(spark, dupsDir(path), StructType(Seq(
       StructField("doc_id", LongType),
       StructField("format", StringType),
       StructField("phash", StringType))))
 
-  private def readDeltas(spark: SparkSession, dir: String,
-      schema: StructType,
-      excludeBatch: Option[Long] = None): DataFrame = {
-    val fs = graft.scale.Hdfs.of(spark, dir)
-    // ONE glob for the committed markers — an exists() per batch dir
-    // is an N+1 on object stores (the PartLog view lesson;
-    // review-caught here too)
-    val marks = fs.globStatus(
-      new org.apache.hadoop.fs.Path(dir, "batch=*/_SUCCESS"))
-    val committed =
-      if (marks == null) Seq.empty
-      else marks.toSeq.map(_.getPath.getParent)
-        .filter(p => !excludeBatch.map(b => s"batch=$b")
-          .contains(p.getName))
-        .map(_.toString)
-    if (committed.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(committed: _*)
-  }
+  /** The log's visible parts, less part `without` if given; a log
+    * with no visible part reads as an empty frame of `schema`. */
+  private def visible(spark: SparkSession, dir: String,
+      schema: StructType, without: Option[Long] = None): DataFrame =
+    new PartLog(dir).readOption(spark, without).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
 }

@@ -17,8 +17,9 @@ import graft.ops.VectorIndex
   *   `<index>/cells_delta/batch=<id>/cell=<c>/...`
   *
   *  - Exactly-once: a replayed micro-batch OVERWRITES its own batch
-  *    dir (the SummingStore / CurationPipeline discipline) — no
-  *    marker files, no at-least-once window.
+  *    dir (the SummingStore / CurationPipeline discipline), and readers
+  *    admit a batch dir only once its `_SUCCESS` lands — no
+  *    at-least-once window, no partial batch scored or folded.
   *  - Probe-compatible: `cell` stays a partition column inside each
   *    batch dir, so an nProbe query prunes delta files exactly like
   *    base files; [[VectorIndex.queryIvf]] unions the delta

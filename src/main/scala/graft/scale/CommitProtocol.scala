@@ -1,12 +1,9 @@
 package graft.scale
 
 /** The ordering rules of every multi-step store mutation, expressed
-  * ONCE (round-10 verdict #5: five batchId-keyed delta stores had
-  * grown three commit idioms — the part-log MVCC-with-grace (now
-  * [[PartLog]]'s one fold), TextSkipIndex's sidecar-retract-first, and
-  * the postings/IVF marker commits — each individually spec-verified,
-  * but every new store cloned a fresh variant and re-derived its
-  * crash-window analysis by hand).
+  * ONCE (round-10 verdict #5: every new batchId-keyed store used to
+  * clone a fresh commit variant and re-derive its crash-window
+  * analysis by hand).
   *
   * A commit is an ordered list of NAMED steps executed through
   * [[run]]. In production this is a plain sequential executor — zero
@@ -15,15 +12,21 @@ package graft.scale
   * step, so ONE parameterized spec (CommitCrashSpec) sweeps
   * kill-between-every-pair-of-steps across every store on the module
   * and asserts each store's documented crash contract in every
-  * window:
+  * window. The shapes left:
   *
-  *  - reader-safe stores ([[PartLog]], which the agg append stores
-  *    and SampleLayout share, and TextSkipIndex): every window reads a complete consistent view —
-  *    old or new, never partial, never dangling.
-  *  - maintenance folds (BM25 postings, IVF cell deltas — documented
-  *    "no reader/replay in flight" contract): every window is either
-  *    exact or DETECTABLE (the un-retired delta dirs are the
+  *  - the [[PartLog]] fold (`part-fold`), shared by every single-dir
+  *    batch-keyed store (the agg engines, SampleLayout, the curation
+  *    and media logs, the BM25 result-cache memo): every window reads
+  *    the complete old view or the complete new one.
+  *  - the BM25 postings and IVF cell-delta maintenance folds
+  *    (documented "no reader/replay in flight" contract): every window
+  *    is either exact or DETECTABLE (the un-retired delta dirs are the
   *    operator's check-before-retry signal).
+  *  - TextSkipIndex's retract-first append: a window may hide the
+  *    batch, never show part of it.
+  *  - the ingest runs (BM25 and IVF deltas, and the media runs, whose
+  *    steps are PartLog appends): every window shows the batch
+  *    invisible or a stage-prefix of it, and the replay overwrites it.
   *
   * The step lists are registered at run time ([[stepsOf]]) so the
   * crash spec enumerates boundaries from the code itself — a store

@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The append-log protocol, written once. Every append-log store is
-  * built on it: the five agg engines (through [[graft.agg.PartStore]])
-  * and [[SampleLayout]]. It is the MergeTree part model
+/** The append-log protocol, written once. Every single-dir
+  * batch-keyed store is built on it: the five agg engines (through
+  * [[graft.agg.PartStore]]), [[SampleLayout]], the curated store and
+  * the two reject logs of [[graft.pipeline.CurationPipeline]], the
+  * four delta logs of [[graft.pipeline.MediaPipeline]], and the memo
+  * of [[graft.ops.Bm25ResultCache]]. It is the MergeTree part model
   * (kafka+clickhouse.md:205-211, 396-401): each block lands as its own
   * part, a background fold merges the parts into one base, and no
   * reader ever sees a fold half done.
@@ -29,7 +32,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Spark job before its query runs. Only a log written before schemas
   * were recorded is read by inference, until its writer's next append
   * or fold records one. Without a manifest nothing has been folded
-  * yet: every committed part, no base.
+  * yet: every committed part, no base. [[read]] refuses a log with
+  * nothing visible; [[readOption]] answers None for it, and can leave
+  * out one part, so a writer replaying a batch probes the log without
+  * its own earlier attempt.
   *
   * [[append]] overwrites `batch=<id>`, so a replayed batch rewrites
   * itself. An id at or below `through` is refused: its rows are in the
@@ -142,14 +148,15 @@ final class PartLog(path: String) {
     * every committed part above the watermark. */
   def view(spark: SparkSession): View = view(Hdfs.of(spark, path))
 
-  /** The view restricted to parts with ids below `below`. */
-  private def view(fs: FileSystem, below: Long = Long.MaxValue): View = {
+  /** The view restricted to the parts whose ids pass `keep`. */
+  private def view(fs: FileSystem, keep: Long => Boolean = _ => true)
+      : View = {
     val m = manifest(fs)
     val schema = recorded(fs)
     val names = committed(fs)
     val through = m.fold(-1L)(_.through)
     val ids = names.toSeq.flatMap(partId)
-      .filter(i => i > through && i < below).sorted
+      .filter(i => i > through && keep(i)).sorted
     val base = m.map(g => s"batch=compacted-${g.gen}").filter(names)
     View(m, (base.toSeq ++ ids.map(i => s"batch=$i"))
       .map(n => s"$path/$n"), ids.size, (through +: ids).max, schema)
@@ -157,6 +164,17 @@ final class PartLog(path: String) {
 
   /** The visible rows, unmerged. */
   def read(spark: SparkSession): DataFrame = rows(spark, view(spark))
+
+  /** The visible rows, or None for a log with no visible part or base.
+    * `without` leaves out part `batch=<id>`: a writer replaying batch
+    * `id` probes the log as it stood before that batch's earlier
+    * attempt, whatever ids the other parts hold. */
+  def readOption(spark: SparkSession,
+      without: Option[Long] = None): Option[DataFrame] = {
+    val v = view(Hdfs.of(spark, path), i => !without.contains(i))
+    if (v.manifest.isEmpty && v.dirs.isEmpty) None
+    else Some(rows(spark, v))
+  }
 
   /** Throws if the manifest's base is gone: a reader that out-slept the
     * grace window must not return the parts alone. A [[rebuild]] reads
@@ -198,7 +216,7 @@ final class PartLog(path: String) {
   private def fold(spark: SparkSession, below: Long = Long.MaxValue)(
       next: View => Option[DataFrame]): Unit = {
     val fs = Hdfs.of(spark, path)
-    val v = view(fs, below)
+    val v = view(fs, _ < below)
     next(v).foreach { base =>
       record(fs, base.schema, None)
       val m = Manifest(v.manifest.fold(0L)(_.gen + 1), v.through)

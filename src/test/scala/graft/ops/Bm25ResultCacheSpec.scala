@@ -92,14 +92,14 @@ class Bm25ResultCacheSpec extends SparkSpec {
     assert(canon(Bm25ResultCache.scoreTopKCachedBatch(spark, path,
         memo, qs, 5)) ==
       canon(Bm25.scoreTopKIndexedBatch(spark, path, qs, 5)))
-    // write-survivors-first (round-12 ADVICE): the survivors landed in
-    // a FRESH batch dir, the superseded dirs are gone — so a crash
-    // between compact's steps can only ever duplicate, never empty
-    val dirs = new java.io.File(memo).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
-    assert(dirs.nonEmpty && !dirs.exists(d =>
-        d.stripPrefix("batch=").toLong <= 1L),
-      s"survivors must land in a fresh batch id, got $dirs")
+    // the survivors are the memo log's new base, and the view holds
+    // nothing else: the live key's rows, the stale key gone
+    val log = new graft.scale.PartLog(memo)
+    assert(log.view(spark).dirs == Seq(s"$memo/batch=compacted-0"))
+    val keys = log.read(spark).select("ts_key").distinct()
+      .collect().map(_.getString(0)).toSeq
+    assert(keys == Seq(Bm25ResultCache.tsKey(live.sorted, 5,
+      Bm25ResultCache.indexStamp(spark, path))), keys.toString)
   }
 
   test("empty batch and no-terms batch throw the uncached path's " +

@@ -58,16 +58,20 @@ class CurationPipelineSpec extends SparkSpec {
     assert(kept.getAs[Long]("n_tokens") == 10L)
     assert(kept.getAs[Double]("rep_ratio") == 0.0)
 
-    // the stores hold exactly the schemas their reads declare
-    import org.apache.spark.sql.types.StructType
-    def stored(dir: String, declared: StructType) = {
-      val got = spark.read.parquet(dir).drop("batch").schema
-      val want = StructType(declared.filterNot(_.name == "batch"))
-      assert(got.map(f => (f.name, f.dataType)) ==
-        want.map(f => (f.name, f.dataType)), s"$dir: $got")
-    }
-    stored(s"$out/curated", CurationPipeline.curatedSchema)
-    stored(s"$out/rejects", CurationPipeline.rejectsSchema)
+    // each log records the schema of its parts: the curated columns
+    // (with the persisted fingerprint) and the gate rejects; no tier
+    // reject landed, so that log was never written
+    import org.apache.spark.sql.types.{DataType, StructType}
+    def recorded(log: String) =
+      DataType.fromJson(new String(Files.readAllBytes(
+        Paths.get(s"$out/$log/_schema")))).asInstanceOf[StructType]
+        .map(f => s"${f.name}:${f.dataType.simpleString}")
+    assert(recorded("curated") == Seq("doc_id:bigint", "text:string",
+      "lang:string", "source:string", "n_tokens:bigint",
+      "rep_ratio:double", "fingerprint:string"))
+    assert(recorded("rejects/gate") ==
+      Seq("doc_id:bigint", "reject_reason:string"))
+    assert(!Files.exists(Paths.get(s"$out/rejects/tier")))
   }
 
   test("language gate: content-predicted lang outside allow-list rejected") {
@@ -167,105 +171,63 @@ class CurationPipelineSpec extends SparkSpec {
     assert(rejects.toSeq == Seq((3L, "near_dup")), rejects.toSeq.toString)
   }
 
-  test("fingerprint migration: a pre-store-backed curated store is " +
-      "backfilled once and then dedups a re-crawl; migrated store is " +
-      "a no-op second time") {
-    import org.apache.spark.sql.functions.col
-    val base = tmpDir("curation-migrate")
+  test("a curated part without _SUCCESS is invisible to curated() " +
+      "and to the next batch's anti-join") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = tmpDir("curation-torn")
     val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
     Files.createDirectories(Paths.get(src))
-    val oldText =
-      "a perfectly ordinary document curated by the previous deployment"
-
-    // a curated store written BEFORE dedup became store-backed: same
-    // layout, NO fingerprint column
-    import spark.implicits._
-    Seq((100L, oldText, "en", "crawl", 9L, 0.0))
-      .toDF("doc_id", "text", "lang", "source", "n_tokens", "rep_ratio")
-      .withColumn("batch", org.apache.spark.sql.functions.lit(999L))
-      .write.partitionBy("batch").parquet(s"$out/curated")
-
-    CurationPipeline.migrateFingerprints(spark, out)
-    val migrated = spark.read.parquet(s"$out/curated")
-    assert(migrated.columns.contains("fingerprint"))
-    val fpAfter = migrated.filter(col("doc_id") === 100L)
-      .select("fingerprint").head().getString(0)
-    // idempotent: a second run must not rewrite (same fingerprint,
-    // same row count)
-    CurationPipeline.migrateFingerprints(spark, out)
-    assert(spark.read.parquet(s"$out/curated").count() == 1)
-    assert(spark.read.parquet(s"$out/curated")
-      .select("fingerprint").head().getString(0) == fpAfter)
-
-    // the upgraded stream (fresh checkpoint, as the migration doc
-    // requires) now dedups a re-crawl of the OLD store's doc via the
-    // backfilled fingerprints
     writeDocs(src, "b1.json", Seq(
-      (101L, oldText), // exact re-crawl of the pre-migration doc
-      (102L, "novel content arriving after the deployment upgraded")))
+      (1L, "first document with a perfectly reasonable number of words")))
+    runOnce(src, out, ck)
+
+    // a part whose write died during job commit: parquet files, no
+    // _SUCCESS. It holds the fingerprint of the doc arriving next.
+    val arriving = "a document whose earlier write never finished committing"
+    CurationPipeline.curated(spark, out)
+      .withColumn("doc_id", lit(900L))
+      .withColumn("text", lit(arriving))
+      .withColumn("fingerprint",
+        graft.ops.TextAnalysis.fingerprint(col("text")))
+      .write.parquet(s"$out/curated/batch=5")
+    Files.delete(Paths.get(s"$out/curated/batch=5/_SUCCESS"))
+
+    writeDocs(src, "b2.json", Seq((2L, arriving)))
     runOnce(src, out, ck)
     val curated = CurationPipeline.curated(spark, out)
       .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(curated.toSeq == Seq(100L, 102L),
+    assert(curated.toSeq == Seq(1L, 2L),
       s"curated = ${curated.mkString(",")}")
   }
 
-  test("fingerprint migration crash recovery: every mid-swap state " +
-      "restores the store instead of silently losing it") {
-    import org.apache.spark.sql.functions.{col, lit}
+  test("a curated store written before fingerprints were persisted is " +
+      "refused at the first batch, naming its path; its rows stay") {
     import spark.implicits._
-    val base = tmpDir("curation-migrate-crash")
-    val out = s"$base/out"
-    def writeOldStore(): Unit =
-      Seq((100L, "a doc", "en", "crawl", 2L, 0.0))
-        .toDF("doc_id", "text", "lang", "source", "n_tokens",
-          "rep_ratio")
-        .withColumn("batch", lit(7L))
-        .write.mode("overwrite").partitionBy("batch")
-        .parquet(s"$out/curated")
-    val fs = graft.scale.Hdfs.of(spark, out)
-    def p(d: String) = new org.apache.hadoop.fs.Path(s"$out/$d")
-    def countCurated() = spark.read.parquet(s"$out/curated").count()
+    val base = tmpDir("curation-old-store")
+    val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
+    Files.createDirectories(Paths.get(src))
+    // the old writer's layout: one batch-keyed dir per micro-batch,
+    // no fingerprint column, no recorded schema
+    Seq((100L, "a perfectly ordinary document curated earlier", "en",
+        "crawl", 6L, 0.0))
+      .toDF("doc_id", "text", "lang", "source", "n_tokens", "rep_ratio")
+      .write.parquet(s"$out/curated/batch=7")
 
-    // crash between rename(curated -> backup) and rename(staged ->
-    // curated): curated absent, BOTH staged (new data) and backup
-    // (old) present — recovery must prefer the completed staged copy
-    writeOldStore()
-    CurationPipeline.migrateFingerprints(spark, out) // builds fp store
-    fs.rename(p("curated"), p("curated_pre_fp_backup"))
-    // simulate: the staged dir was already renamed in — reconstruct
-    // the pre-rename interleaving instead: move curated (migrated) to
-    // the staged name, leaving backup in place
-    fs.rename(p("curated_pre_fp_backup"), p("curated_fp_migration"))
-    writeOldStore() // old copy back under the backup name
-    fs.rename(p("curated"), p("curated_pre_fp_backup"))
-    CurationPipeline.migrateFingerprints(spark, out)
-    assert(countCurated() == 1)
-    assert(spark.read.parquet(s"$out/curated").columns
-      .contains("fingerprint"))
-    assert(!fs.exists(p("curated_fp_migration")) &&
-      !fs.exists(p("curated_pre_fp_backup")),
-      "recovery must leave no migration leftovers")
+    writeDocs(src, "b1.json", Seq(
+      (101L, "novel content arriving after the deployment upgraded")))
+    val (cq, rq) = CurationPipeline.start(spark, src, out, ck)
+    val e = intercept[org.apache.spark.sql.streaming
+      .StreamingQueryException](cq.awaitTermination())
+    rq.awaitTermination()
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains(s"$out/curated")), e.toString)
 
-    // crash after the staged-in rename but before the backup delete:
-    // curated (migrated) + backup both present — next run cleans up
-    writeOldStore()
-    CurationPipeline.migrateFingerprints(spark, out)
-    Seq((1L, "x")).toDF("a", "b").write.mode("overwrite")
-      .parquet(s"$out/curated_pre_fp_backup")
-    CurationPipeline.migrateFingerprints(spark, out)
-    assert(!fs.exists(p("curated_pre_fp_backup")),
-      "post-swap leftover backup must be dropped")
-    assert(countCurated() == 1)
-
-    // crash mid-staged-write (no _SUCCESS): the partial stage is
-    // rebuilt, not swapped in
-    writeOldStore()
-    fs.mkdirs(p("curated_fp_migration"))
-    // a marker-less dir only (no _SUCCESS) — migrate must rebuild
-    CurationPipeline.migrateFingerprints(spark, out)
-    assert(spark.read.parquet(s"$out/curated").columns
-      .contains("fingerprint"))
-    assert(countCurated() == 1)
+    assert(!Files.exists(Paths.get(s"$out/curated/_schema")))
+    assert(new java.io.File(s"$out/curated").list().toSet ==
+      Set("batch=7"))
+    val old = spark.read.parquet(s"$out/curated/batch=7")
+    assert(!old.columns.contains("fingerprint"))
+    assert(old.select("doc_id").as[Long].collect().toSeq == Seq(100L))
   }
 }

@@ -134,4 +134,32 @@ class VectorIngestPipelineSpec extends SparkSpec {
     assert(VectorIndex.queryIvf(spark, idx,
       vecsDF(3L until 4L), 5, nProbe = 4).count() == 5)
   }
+
+  test("a float delta without _SUCCESS is neither probed nor folded " +
+      "by a compaction") {
+    val idx = tmpDir("vecingest-torn") + "/idx"
+    VectorIndex.ensureIvfPq(vecsDF(0L until 40L), idx, numCells = 4,
+      m = 4, k = 8)
+    VectorIngestPipeline.ingestBatch(vecsDF(40L until 50L), idx, 0L)
+    // batch 1's write died during job commit: its cell files landed,
+    // its _SUCCESS did not. Its one row copies vector 3 under a fresh
+    // id, so a probe that admitted it would rank it first for query 3.
+    val torn = s"${VectorIngestPipeline.deltaDir(idx)}/batch=1"
+    VectorIndex.assignCells(Seq((777L, emb(3L))).toDF("vec_id", "embedding"),
+        idx)
+      .write.partitionBy("cell").parquet(torn)
+    Files.delete(Paths.get(s"$torn/_SUCCESS"))
+    val q = vecsDF(Seq(3L))
+    def neighbors(): Seq[Long] =
+      (VectorIndex.queryIvf(spark, idx, q, k = 5, nProbe = 4).collect() ++
+        VectorIndex.queryIvfPq(spark, idx, q, 5, nProbe = 4).collect())
+        .map(_.getLong(1)).toSeq
+    assert(neighbors().size == 10 && !neighbors().contains(777L),
+      s"the torn batch was probed: ${neighbors()}")
+    VectorIngestPipeline.compactDeltas(spark, idx)
+    assert(spark.read.parquet(s"$idx/cells")
+      .filter(col("vec_id") === 777L).isEmpty,
+      "the compaction folded the torn batch into the base cells")
+    assert(neighbors().size == 10 && !neighbors().contains(777L))
+  }
 }

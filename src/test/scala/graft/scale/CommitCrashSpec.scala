@@ -8,14 +8,20 @@ import graft.ops.{Bm25, VectorIndex}
 /** THE crash-injection sweep (round-10 verdict #5): every store
   * mutation routed through [[CommitProtocol]] is killed between every
   * pair of its steps, and each store's documented crash contract is
-  * asserted in every window:
+  * asserted in every window. The shapes swept:
   *
-  *  - reader-safe stores (agg fold, sample layout, gram index, the
-  *    two ingest paths): the canonical read in any crash window is a
-  *    complete consistent answer — the committed state, or (for
-  *    marker-committed appends) the batch-invisible state; never a
-  *    partial view, never an exception.
-  *  - maintenance folds (BM25 postings, IVF cell deltas — documented
+  *  - the [[PartLog]] fold (`part-fold`: the agg store, the sample
+  *    layout's compact and rebuild, the BM25 result-cache memo GC):
+  *    every window reads the complete old view or the complete new
+  *    one, and a folded batch id is refused once the manifest is
+  *    published;
+  *  - the gram index's retract-first append and the ingest runs (BM25
+  *    and IVF deltas, and the media runs, whose steps are PartLog
+  *    appends): the canonical read in any crash window is a complete
+  *    consistent answer — the committed state, or (for
+  *    marker-committed appends) the batch-invisible or stage-prefix
+  *    state; never a partial view, never an exception.
+  *  - the BM25/IVF maintenance folds (postings, cell deltas — documented
   *    "no reader/replay in flight"): any window where the read could
   *    be inexact still has its delta dirs on disk — the operator's
   *    check-before-retry signal — and the prescribed remediation
@@ -377,13 +383,11 @@ class CommitCrashSpec extends SparkSpec {
     }
   }
 
-  // ---- 10. BM25 result-cache memo GC (write-survivors-first, then
-  // delete-superseded — round-12 ADVICE flipped the order so no crash
-  // window can empty the memo)
+  // ---- 10. BM25 result-cache memo GC (the memo log's PartLog fold)
 
   private object MemoCompact extends CrashCase {
     val name = "bm25 memo compact"
-    val op = "bm25-memo-compact"
+    val op = "part-fold"
     private val ts = Seq("key", "join")
     private def idx(dir: String) = s"$dir/idx"
     private def memo(dir: String) = s"$dir/memo"
@@ -400,16 +404,30 @@ class CommitCrashSpec extends SparkSpec {
     def mutate(dir: String): Unit =
       graft.ops.Bm25ResultCache.compact(spark, idx(dir), memo(dir),
         liveTermsets = Seq(ts), k = 5)
-    // the cache is answer-NEUTRAL: every crash window (memo empty,
-    // memo partial, memo compacted) must return the identical scored
-    // answer — hits replay memoized exact results, misses recompute
+    // the memo's rows, then the scored answer: the cache is
+    // answer-NEUTRAL (hits replay memoized exact results), and the
+    // live termset hits in the old memo and in the new one alike, so
+    // observing appends nothing
     def observe(dir: String): Seq[String] =
-      graft.ops.Bm25ResultCache.scoreTopKCachedBatch(spark, idx(dir),
-          memo(dir), qs, 5)
-        .collect()
-        .map(r => s"${r.getString(0)}|${r.getLong(1)}|${
+      new PartLog(memo(dir)).read(spark).collect()
+        .map(r => s"memo ${r.getString(0)}|${r.getLong(1)}|${
           r.getDouble(2)}|${r.getLong(3)}")
-        .toSeq.sorted
+        .toSeq.sorted ++
+        graft.ops.Bm25ResultCache.scoreTopKCachedBatch(spark, idx(dir),
+            memo(dir), qs, 5)
+          .collect()
+          .map(r => s"${r.getString(0)}|${r.getLong(1)}|${
+            r.getDouble(2)}|${r.getLong(3)}")
+          .toSeq.sorted
+    private lazy val before = {
+      val d = tmpDir("crash-memo-compact-before")
+      setup(d)
+      observe(d)
+    }
+    // reader-safe: the complete old memo before the publish, the
+    // complete new one after it
+    override def acceptable(dir: String, after: Seq[String],
+        got: Seq[String]): Boolean = got == after || got == before
   }
 
   private val cases: Seq[CrashCase] = Seq(AggFold, SampleCompact,
