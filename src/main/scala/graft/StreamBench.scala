@@ -390,8 +390,8 @@ object StreamBench {
     // Streaming BM25 postings maintenance: the curation corpus's doc
     // stream re-used as index arrivals — a base index is built from
     // the first half, the second half streams in as batchId-keyed
-    // postings deltas; the metric prices tokenize + delta write +
-    // stats increment per doc. A post-ingest probe sanity-checks the
+    // parts of the arrival log; the metric prices tokenize + the
+    // postings and stats tables per doc. A post-ingest probe sanity-checks the
     // grown index answers.
     val bmBase = s"$root/bm25_idx"
     locally {
@@ -429,9 +429,9 @@ object StreamBench {
 
     // Streaming hybrid retrieval maintenance: ONE stream of documents
     // (text + embedding per record) feeds BOTH index halves through
-    // RetrievalPipeline — BM25 postings deltas AND IVF cell deltas.
-    // The metric prices tokenize + centroid-assign + two batchId-keyed
-    // delta writes per doc; a post-ingest hybrid probe sanity-checks
+    // RetrievalPipeline — the BM25 AND the IVF arrival logs. The
+    // metric prices tokenize + centroid-assign + two batchId-keyed
+    // part appends per doc; a post-ingest hybrid probe sanity-checks
     // that arrivals are retrievable by keyword AND by similarity.
     locally {
       import spark.implicits._
@@ -485,10 +485,10 @@ object StreamBench {
 
     // Streaming vector ingest into a PQ-BACKED index: same arrival
     // stream shape, but the base index carries the residual-PQ half,
-    // so every micro-batch additionally residual-encodes its rows
-    // into a code-delta dir (VectorIndex.encodeDeltaBatch, books
-    // broadcast memoized across batches). The metric prices
-    // centroid-assign + float delta + code delta per vector; the
+    // so every micro-batch's arrival part also holds its rows'
+    // residual codes (VectorIndex.arrivalPart, books broadcast
+    // memoized across batches). The metric prices centroid-assign +
+    // the cells table + the codes table per vector; the
     // post-ingest probe must surface a planted arrival through the
     // ADC path (no uncoded batches exist, so exact fallback is empty).
     locally {

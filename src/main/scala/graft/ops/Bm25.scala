@@ -1,8 +1,12 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.scale.PartLog
+import graft.scale.PartLog.{Part, Table}
 
 /** BM25 lexical retrieval (Robertson & Zaragoza 2009) — the keyword
   * half of a RAG retrieval stack next to the ANN family; hybrid
@@ -369,296 +373,130 @@ object Bm25 {
         org.apache.spark.unsafe.types.UTF8String.fromString(t), 42L),
       PostingsBuckets.toLong).toInt
 
-  /** The ONE physical postings writer (shared by build, batch append,
-    * and streamed delta ingest — the layout must never fork): rows =
-    * (term, doc_id, tf, dl) partitioned by term hash-bucket. Returns
-    * the per-doc (doc_id, dl) frame so callers derive their stats from
-    * exactly what was written. */
-  private def writePostings(docs: DataFrame, dir: String,
-      mode: SaveMode): DataFrame = {
+  /** The ONE postings layout (shared by the build and the arrival
+    * log — the layout must never fork): rows = (term, doc_id, tf, dl,
+    * bucket), bucket the term hash-bucket partition column; and the
+    * per-doc (doc_id, dl) frame the stats derive from. */
+  private def postingsOf(docs: DataFrame): (DataFrame, DataFrame) = {
     val tf = termFreqs(docs)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, Seq("doc_id"))
+    (tf.join(dl, Seq("doc_id"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        bucketOf(col("term")).as("bucket"))
-      .write.mode(mode)
-      .partitionBy("bucket")
-      .parquet(dir)
-    dl
+        bucketOf(col("term")).as("bucket")), dl)
   }
 
   private def statsOf(dl: DataFrame): DataFrame =
     dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
       .na.fill(0L)
 
-  private def writeMeta(spark: SparkSession, path: String,
-      rows: Long): Unit = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$path/_graft_meta"), true)
-    try out.write(s"rows=$rows;buckets=$PostingsBuckets"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** The arrival log beside the built postings: one [[PartLog]] whose
+    * parts hold two tables, `postings` (the layout above, partitioned
+    * by bucket) and `stats`, the 1-row (n_docs, total_dl, n_raw)
+    * increment. */
+  def arrivals(path: String): PartLog = new PartLog(s"$path/arrivals")
 
-  private def metaRows(spark: SparkSession, path: String): Long = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_graft_meta"))
-    val s = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    s.split(";").head.stripPrefix("rows=").toLong
-  }
+  private def arrivalPart(postings: DataFrame, stats: DataFrame): Part =
+    Part(Seq(Table("postings", postings, Some("bucket")),
+      Table("stats", stats)))
 
   /** Build-once postings: `<path>/postings` = (term, doc_id, tf, dl)
     * partitioned by term hash-bucket, `<path>/stats` = the 1-row
     * (n_docs, total_dl) over TOKEN-HAVING docs. Fingerprint-guarded
-    * like every ensure* store; the fingerprint counts RAW input rows
-    * (cheap before tokenizing) and every append path tracks the same
-    * raw count, so currency holds on corpora with token-less docs too.
-    * The corpus tokenizes exactly once, here. */
+    * like every ensure* store ([[graft.scale.Hdfs.ensureStamped]]); the
+    * fingerprint counts RAW input rows (cheap before tokenizing), and
+    * the layout is current when its rows plus the arrival log's raw
+    * count cover `docs`, so an index with uncompacted arrivals is
+    * current for the grown corpus. A rebuild derives from the whole
+    * corpus and drops the arrival log. The corpus tokenizes exactly
+    * once, here. */
   def ensurePostings(docs: DataFrame, path: String): String = {
     val spark = docs.sparkSession
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val meta = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
     val nRaw = docs.count()
-    // Currency counts BASE raw rows + COMMITTED delta raw rows: an
-    // appended-but-not-yet-compacted index is current for the grown
-    // corpus (the delta layout probes identically), so ensure neither
-    // rebuilds over live deltas nor forces a compact.
-    val deltaRaw = deltaStatTotalsOf(spark, path,
-      completeBatchIds(spark, path)).map(_._3).getOrElse(0L)
-    val current = fs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/postings/_SUCCESS")) &&
-      fs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/stats/_SUCCESS")) &&
-      fs.exists(meta) && {
-        val in = fs.open(meta)
-        val s = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        // a torn/corrupt meta means NOT current (rebuild), not a crash
-        s.endsWith(s"buckets=$PostingsBuckets") &&
-          s.split(";").head.stripPrefix("rows=").toLongOption
-            .contains(nRaw - deltaRaw)
-      }
-    if (!current) {
-      // a REBUILD derives from the caller's full corpus, which
-      // subsumes any delta rows — stale delta dirs left beside the
-      // fresh base would double-count at probe time
-      fs.delete(new org.apache.hadoop.fs.Path(deltaDir(path)), true)
-      fs.delete(new org.apache.hadoop.fs.Path(deltaStatsDir(path)), true)
-      val dl = writePostings(docs, s"$path/postings", SaveMode.Overwrite)
+    val log = arrivals(path)
+    val arrived = log.resolve(spark).fold(0L)(v =>
+      log.table(spark, v, "stats", v.dirs).agg(sum(col("n_raw")))
+        .head().getLong(0))
+    def stamp(rows: Long) = s"rows=$rows;buckets=$PostingsBuckets"
+    graft.scale.Hdfs.ensureStamped(graft.scale.Hdfs.of(spark, path),
+      new Path(s"$path/_graft_meta"),
+      Seq(new Path(s"$path/postings/_SUCCESS"),
+        new Path(s"$path/stats/_SUCCESS")),
+      stamp(nRaw - arrived), Some(stamp(nRaw))) {
+      log.drop(spark)
+      val (postings, dl) = postingsOf(docs)
+      postings.write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket").parquet(s"$path/postings")
       statsOf(dl).coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$path/stats")
-      writeMeta(spark, path, nRaw)
     }
     path
   }
 
-  def deltaDir(path: String): String = s"$path/postings_delta"
-  def deltaStatsDir(path: String): String = s"$path/stats_delta"
-
-  /** One streamed micro-batch of documents, landed batchId-keyed: the
-    * batch's postings under `postings_delta/batch=<id>/bucket=*` and
-    * its stats increment (token-having n_docs, total_dl, RAW row
-    * count for the ensure fingerprint) under `stats_delta/batch=<id>`
-    * — a replayed batch OVERWRITES its own dirs (the engine's
-    * exactly-once discipline), and `bucket` stays a partition column
-    * inside each batch dir so probes prune deltas like base files.
+  /** One streamed micro-batch of documents, landed as part
+    * `batch=<batchId>` of the arrival log: the batch's postings and its
+    * stats increment (token-having n_docs, total_dl, and the RAW row
+    * count for the ensure fingerprint), committed together. A replayed
+    * batch overwrites its own part, and `bucket` stays a partition
+    * column inside the part, so probes prune arrivals like base files.
     * Arrivals are NEW doc_ids by contract (same as the vector ingest
-    * path). Write order postings-then-stats makes the stats dir the
-    * batch's COMMIT marker: readers and compaction only consume
-    * batches whose stats landed. */
+    * path). Queries need no special handling: df is computed from the
+    * (pruned) base plus arrival postings at probe time and avgdl from
+    * base plus arrival stats, so arriving documents score immediately
+    * and exactly. An all-token-less batch adds only its raw count. */
   def ingestBatch(batch: DataFrame, path: String, batchId: Long): Unit = {
     val nRaw = batch.count()
-    import graft.scale.CommitProtocol.{run, step}
-    var dl: DataFrame = null
-    run("bm25-ingest", Seq(
-      step("write-postings-delta") {
-        dl = writePostings(batch, s"${deltaDir(path)}/batch=$batchId",
-          SaveMode.Overwrite)
-      },
-      // the stats dir is the batch's COMMIT marker: a crash between
-      // the two writes leaves the batch invisible; its replay
-      // overwrites both dirs
-      step("commit-stats") {
-        statsOf(dl).withColumn("n_raw", lit(nRaw))
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"${deltaStatsDir(path)}/batch=$batchId")
-      }))
+    val (postings, dl) = postingsOf(batch)
+    arrivals(path).append(
+      arrivalPart(postings, statsOf(dl).withColumn("n_raw", lit(nRaw))),
+      batchId)
   }
 
-  /** Batch ids whose ingest COMPLETED: both the postings dir and the
-    * stats dir carry a _SUCCESS marker. A postings dir without its
-    * stats (ingest crashed mid-batch; its replay will rewrite both) is
-    * invisible to readers and to compaction. */
-  private[ops] def completeBatchIds(spark: SparkSession,
-      path: String): Seq[String] = {
-    val fs = graft.scale.Hdfs.of(spark, path)
-    def done(root: String): Set[String] = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).map(_.getPath)
-        .filter(d => d.getName.startsWith("batch=") &&
-          fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-        .map(_.getName).toSet
-    }
-    (done(deltaDir(path)) intersect done(deltaStatsDir(path)))
-      .toSeq.sorted
-  }
-
-  /** The postings of EXACTLY the delta batches in `ids` — callers
-    * snapshot [[completeBatchIds]] ONCE and thread the same list into
-    * this and [[deltaStatTotalsOf]], so a micro-batch committing
-    * between the two reads cannot produce stats that include a batch
-    * whose postings were not scanned (review-caught: the old
-    * per-helper re-listing broke the "appended docs score immediately
-    * and exactly" contract under concurrent ingest). */
-  private def deltaPostingsOf(spark: SparkSession, path: String,
-      ids: Seq[String]): Option[DataFrame] =
-    if (ids.isEmpty) None
-    else Some(spark.read.option("basePath", deltaDir(path))
-      .parquet(ids.map(b => s"${deltaDir(path)}/$b"): _*)
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        col("bucket")))
-
-  /** All COMMITTED streamed postings deltas, or None when no complete
-    * batch has landed. Standalone listing — for a read that must be
-    * consistent with stats, snapshot ids and use the *Of twins. */
-  def deltaPostings(spark: SparkSession, path: String): Option[DataFrame] =
-    deltaPostingsOf(spark, path, completeBatchIds(spark, path))
-
-  /** Summed (n_docs, total_dl, n_raw) across EXACTLY the delta batches
-    * in `ids` (same snapshot discipline as [[deltaPostingsOf]]). */
-  private def deltaStatTotalsOf(spark: SparkSession, path: String,
-      ids: Seq[String]): Option[(Long, Long, Long)] =
-    if (ids.isEmpty) None
-    else {
-      val r = spark.read
-        .parquet(ids.map(b => s"${deltaStatsDir(path)}/$b"): _*)
-        .agg(sum(col("n_docs")), sum(col("total_dl")),
-          sum(col("n_raw"))).collect().head
-      Some((r.getLong(0), r.getLong(1), r.getLong(2)))
-    }
-
-  /** Fold streamed deltas into the base postings + stats and retire
-    * the delta dirs. Maintenance op — run with no replay or reader in
-    * flight (the append-store compaction contract). */
+  /** Fold the arrival log's parts into the log's own base: postings
+    * unioned, stats summed. The built postings are never rewritten, so
+    * the fold costs O(arrivals). Readers need no pause: every crash
+    * window reads the complete old view or the complete new one, and a
+    * retried fold is safe ([[PartLog.compactParts]]). The fold writes
+    * the log, so it runs between the micro-batches of the stream that
+    * appends to it (one writer per log). */
   def compactDeltas(spark: SparkSession, path: String): Unit = {
-    // ONE listing drives the fold input, the stats increment, AND the
-    // retirement set (review-caught twice: (a) the old order appended
-    // first and could then throw, leaving the base mutated with deltas
-    // still present — a retry would double-append; (b) the old
-    // delete-the-whole-delta-tree retirement destroyed, unfolded, any
-    // batch that committed after the listing). Only the snapshot's
-    // batches are folded, and only their dirs are deleted — a batch
-    // landing mid-fold survives to the next compact. The remaining
-    // crash window (append lands, delta delete doesn't) is the
-    // documented maintenance contract shared with
-    // VectorIngestPipeline.compactDeltas: run with no replay in
-    // flight, retry only after checking the delta dirs.
-    val ids = completeBatchIds(spark, path)
-    deltaPostingsOf(spark, path, ids)
-      .zip(deltaStatTotalsOf(spark, path, ids)).foreach {
-      case (delta, (nDocs, totalDl, nRaw)) =>
-        val old = spark.read.parquet(s"$path/stats").collect().head
-        val oldRows = metaRows(spark, path)
-        import graft.scale.CommitProtocol.{run, step}
-        run("bm25-compact", Seq(
-          step("append-postings-to-base") {
-            delta.write.mode(SaveMode.Append)
-              .partitionBy("bucket")
-              .parquet(s"$path/postings")
-          },
-          step("overwrite-stats") {
-            import spark.implicits._
-            Seq((old.getLong(0) + nDocs, old.getLong(1) + totalDl))
-              .toDF("n_docs", "total_dl")
-              .coalesce(1)
-              .write.mode(SaveMode.Overwrite).parquet(s"$path/stats")
-          },
-          step("write-meta") {
-            writeMeta(spark, path, oldRows + nRaw)
-          },
-          // a crash before this step leaves the folded batches' dirs
-          // in place — the DETECTABLE state the maintenance contract
-          // keys on (check the delta dirs before retrying)
-          step("retire-delta-dirs") {
-            val fs = graft.scale.Hdfs.of(spark, path)
-            ids.foreach { b =>
-              fs.delete(new org.apache.hadoop.fs.Path(
-                s"${deltaDir(path)}/$b"), true)
-              fs.delete(new org.apache.hadoop.fs.Path(
-                s"${deltaStatsDir(path)}/$b"), true)
-            }
-            // tidy the parent dirs ONLY if nothing landed mid-fold — a
-            // batch committing after the snapshot keeps its files and
-            // survives to the next compact
-            Seq(deltaDir(path), deltaStatsDir(path)).foreach { d =>
-              val p = new org.apache.hadoop.fs.Path(d)
-              if (fs.exists(p) && fs.listStatus(p).isEmpty)
-                fs.delete(p, true)
-            }
-          }))
+    val log = arrivals(path)
+    log.compactParts(spark) { v =>
+      arrivalPart(log.table(spark, v, "postings", v.dirs),
+        log.table(spark, v, "stats", v.dirs).agg(
+          sum(col("n_docs")).as("n_docs"),
+          sum(col("total_dl")).as("total_dl"),
+          sum(col("n_raw")).as("n_raw")))
     }
   }
-
-  /** Incrementally index arriving documents WITHOUT re-tokenizing the
-    * corpus (the [[VectorIndex.appendIvf]] / SignatureStore arrival
-    * discipline) — routed through the SAME batchId-keyed delta layout
-    * as the streaming path ([[ingestBatch]]): the batch's postings
-    * land under their own `postings_delta/batch=<id>` dir (bucket
-    * still a partition column, so probes prune the delta exactly like
-    * base files), the stats increment lands second as the batch's
-    * COMMIT marker, and a replayed batchId overwrites itself.
-    *
-    * This replaces the old base-mutating SaveMode.Append, which had no
-    * idempotence key at all: a crash between the postings append and
-    * the stats rewrite left appended postings with stale stats, and a
-    * retry DOUBLE-APPENDED the postings — the defect class the
-    * append-log stores cure with batch-keyed overwrite. Queries need
-    * no special handling — df is computed from the (pruned) base ∪
-    * committed-delta postings at probe time and avgdl from base stats
-    * + delta increments, so appended documents participate in scoring
-    * immediately and exactly; [[compactDeltas]] periodically folds the
-    * deltas into the base. Empty (or all-token-less) batches are a
-    * no-op on stats beyond the raw count. */
-  def appendPostings(newDocs: DataFrame, path: String,
-      batchId: Long): Unit =
-    ingestBatch(newDocs, path, batchId)
 
   /** The shared indexed-probe construction: bucket-pruned postings
-    * rows for `terms` (base + committed streamed deltas, rows carrying
-    * dl) and the delta-adjusted 1-row corpus stats. Streamed arrivals
-    * probe alongside the base — bucket is a partition column inside
-    * each batch dir, so the same IN-filter prunes both sides (applied
-    * per side, before the union, to keep the pruning visible in each
-    * scan — the queryIvf discipline). ONE committed-batch snapshot
-    * serves BOTH the postings read and the stats totals — a batch
-    * committing between two independent listings would yield stats
-    * including postings never scanned. */
+    * rows for `terms` (base + arrivals, rows carrying dl) and the
+    * 1-row corpus stats over both. The same IN-filter prunes each side
+    * on its `bucket` partition column, applied per side before the
+    * union to keep the pruning visible in each scan (the queryIvf
+    * discipline). ONE resolved arrival view serves both the postings
+    * and the stats read, so a batch committing in between cannot give
+    * stats that count postings never scanned. */
   private def indexedProbe(spark: SparkSession, path: String,
       terms: Seq[String]): (DataFrame, DataFrame) = {
     val buckets = terms.map(bucketOfTerm).distinct.sorted
-    val base = spark.read.parquet(s"$path/postings")
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        col("bucket"))
-    def pruned(rows: DataFrame): DataFrame = rows
+    val cols = Seq("term", "doc_id", "tf", "dl", "bucket").map(col)
+    def pruned(rows: DataFrame): DataFrame = rows.select(cols: _*)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
-    val ids = completeBatchIds(spark, path)
-    val tf = deltaPostingsOf(spark, path, ids) match {
-      case None => pruned(base)
-      case Some(delta) => pruned(base).unionByName(pruned(delta))
-    }
+    val base = pruned(spark.read.parquet(s"$path/postings"))
     val baseStats = spark.read.parquet(s"$path/stats")
-    val corpusStats = deltaStatTotalsOf(spark, path, ids) match {
-      case None => baseStats
-      case Some((nd, tdl, _)) =>
-        baseStats.select((col("n_docs") + nd).as("n_docs"),
-          (col("total_dl") + tdl).as("total_dl"))
+    val log = arrivals(path)
+    log.resolve(spark) match {
+      case None => (base, baseStats)
+      case Some(v) =>
+        (base.unionByName(pruned(log.table(spark, v, "postings", v.dirs))),
+          baseStats.select(col("n_docs"), col("total_dl"))
+            .unionByName(log.table(spark, v, "stats", v.dirs)
+              .select(col("n_docs"), col("total_dl")))
+            .agg(sum(col("n_docs")).as("n_docs"),
+              sum(col("total_dl")).as("total_dl")))
     }
-    (tf, corpusStats)
   }
 
   /** BM25 top-k against the persisted postings: the scan prunes to the

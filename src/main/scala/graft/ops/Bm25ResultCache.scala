@@ -20,9 +20,9 @@ import graft.scale.PartLog
   * the uncached batch row).
   *
   * Invalidation is by KEY, never by scan: the ts_key embeds an index
-  * STAMP (the postings `_graft_meta` content + the sorted committed
-  * delta batch ids + a cache format version), so a rebuilt or
-  * delta-grown index simply misses every stale entry — no deletion
+  * STAMP (the postings `_graft_meta` content + the arrival log's view
+  * dirs + a cache format version), so a rebuilt or arrival-grown
+  * index simply misses every stale entry — no deletion
   * race with readers; stale rows are dead weight until a memo GC
   * ([[compact]]) drops keys whose stamp is no longer current.
   *
@@ -37,14 +37,17 @@ import graft.scale.PartLog
   */
 object Bm25ResultCache {
 
-  /** Bump when scoring semantics change: memo entries are keyed by
-    * index content, not code version — a scoring change must miss the
-    * whole memo rather than replay stale results. */
-  val CacheFormatVersion = 1
+  /** Bump when scoring semantics or the stamp's makeup change: memo
+    * entries are keyed by index content, not code version — a scoring
+    * change must miss the whole memo rather than replay stale results.
+    * 2: the stamp names the arrival log's view dirs. */
+  val CacheFormatVersion = 2
 
-  /** The index's content stamp: meta bytes + committed delta ids.
-    * Any rebuild (meta rows change) or delta append (new batch id)
-    * changes the stamp, so every dependent memo key misses cleanly. */
+  /** The index's content stamp: meta bytes + the arrival log's view
+    * dirs (the SAME resolved view the probe reads). A rebuild (meta
+    * rows change), an arrival (a new part) or an arrival fold (a new
+    * base) changes the stamp, so every dependent memo key misses
+    * cleanly. */
   def indexStamp(spark: SparkSession, path: String): String = {
     val fs = graft.scale.Hdfs.of(spark, path)
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
@@ -53,13 +56,9 @@ object Bm25ResultCache {
     val in = fs.open(metaPath)
     val meta = try new String(in.readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    // the SAME committed-delta notion the probe uses (postings AND
-    // stats markers both present): a torn ingest that later heals
-    // changes probe content, so it must change the stamp too — a
-    // postings-only glob here would let a pre-heal memo entry serve
-    // the post-heal index (review-caught)
-    val deltas = Bm25.completeBatchIds(spark, path)
-    s"v$CacheFormatVersion;$meta;${deltas.mkString(",")}"
+    val arrived = Bm25.arrivals(path).view(spark).dirs
+      .map(d => new org.apache.hadoop.fs.Path(d).getName)
+    s"v$CacheFormatVersion;$meta;${arrived.mkString(",")}"
   }
 
   /** Memo key of one canonical termset under one index stamp. Terms
@@ -113,6 +112,9 @@ object Bm25ResultCache {
     val repOf = cb.repOf
     val keyOf = cb.keyOf
     val memoLog = new PartLog(memoPath)
+    // a memo written before schemas were recorded, and only ever hit
+    // since, would otherwise be read by inference on every call
+    memoLog.recordSchema(spark)
     val memo = memoLog.readOption(spark) // None: nothing memoized yet
     val wanted = keyOf.values.toSeq
     val present: Set[String] = memo.fold(Set.empty[String])(

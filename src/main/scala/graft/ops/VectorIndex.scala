@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CentroidFunctions.{centroid_cell, centroid_top_cells}
 import graft.functions.VectorFunctions.{vec_dot, vec_norm}
+import graft.scale.PartLog
+import graft.scale.PartLog.{Part, Table}
 
 /** Persisted IVF index: build once, query many — the missing half of
   * [[Similarity.ivfTopK]], which recomputes cell assignments on every
@@ -54,17 +56,26 @@ object VectorIndex {
     * = both halves' _SUCCESS markers exist AND the `_graft_meta` marker
     * records the same corpus fingerprint (row count), so a regenerated
     * testdata dir at the same path triggers a rebuild instead of
-    * silently probing a stale index. The fingerprint costs one
-    * footer-metadata count() per call — negligible next to a probe.
-    * Returns `path`.
+    * silently probing a stale index. The built cells plus the arrival
+    * log's rows must cover the corpus: an index with uncompacted
+    * arrivals is current for the grown corpus, and a rebuild absorbs
+    * them ([[buildIvf]] drops the log). The fingerprint costs one
+    * footer-metadata count() per call (two with arrivals) — negligible
+    * next to a probe. Returns `path`.
     */
   def ensureIvf(corpus: DataFrame, path: String, numCells: Int = 16,
       refineIters: Int = 2): String = {
-    val fs = graft.scale.Hdfs.of(corpus.sparkSession, path)
-    graft.scale.Hdfs.ensureStamped(fs, new Path(s"$path/_graft_meta"),
+    val spark = corpus.sparkSession
+    val log = arrivals(path)
+    val arrived = log.resolve(spark)
+      .fold(0L)(v => log.table(spark, v, "cells", v.dirs).count())
+    val n = corpus.count()
+    def stamp(rows: Long) = s"rows=$rows;cells=$numCells"
+    graft.scale.Hdfs.ensureStamped(graft.scale.Hdfs.of(spark, path),
+      new Path(s"$path/_graft_meta"),
       Seq(new Path(s"$path/centroids/_SUCCESS"),
         new Path(s"$path/cells/_SUCCESS")),
-      s"rows=${corpus.count()};cells=$numCells") {
+      stamp(n - arrived), Some(stamp(n))) {
       buildIvf(corpus, path, numCells, refineIters)
     }
     path
@@ -72,11 +83,13 @@ object VectorIndex {
 
   /** Build the index: strided seeds -> optional Lloyd refinement ->
     * assign every vector -> write centroids + cell-partitioned corpus.
-    * Embedding dim is read from the data.
+    * Embedding dim is read from the data. The corpus is the whole
+    * index, so the arrival log is dropped first.
     */
   def buildIvf(corpus: DataFrame, path: String, numCells: Int = 16,
       refineIters: Int = 2): Unit = {
     val spark = corpus.sparkSession
+    arrivals(path).drop(spark)
     import spark.implicits._
     val dim = Similarity.embDim(corpus)
     val n = corpus.count()
@@ -101,20 +114,13 @@ object VectorIndex {
       .parquet(s"$path/cells")
   }
 
-  /** Incrementally add vectors to an existing index WITHOUT a rebuild:
-    * assign each new vector to its nearest existing centroid and append
-    * to that cell's partition (dynamic-partition append — only touched
-    * cells gain files). This is the arrival path at scale: the
-    * full-corpus build amortizes over many appends, and a periodic
-    * [[buildIvf]] re-centers drifted centroids (same cadence as any
-    * IVF system's retrain). The `_graft_meta` fingerprint is refreshed
-    * so [[ensureIvf]] sees the grown corpus as current.
-    */
   /** Assign arriving vectors to their nearest EXISTING centroid:
     * returns `newVecs` + (cell, c_norm), ready to land in the index's
-    * cell-partitioned layout. Shared by the batch [[appendIvf]] and
-    * the streaming ingest path
-    * ([[graft.pipeline.VectorIngestPipeline]]). */
+    * cell-partitioned layout. The arrival path of
+    * [[graft.pipeline.VectorIngestPipeline]]: the full-corpus build
+    * amortizes over many arrivals, and a periodic [[buildIvf]]
+    * re-centers drifted centroids (same cadence as any IVF system's
+    * retrain). */
   def assignCells(newVecs: DataFrame, path: String): DataFrame = {
     val spark = newVecs.sparkSession
     val cents = spark.read.parquet(s"$path/centroids")
@@ -134,57 +140,39 @@ object VectorIndex {
       .withColumn("c_norm", vec_norm(col("embedding")))
   }
 
-  def appendIvf(newVecs: DataFrame, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    assignCells(newVecs, path)
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val total = spark.read.parquet(s"$path/cells").count()
-    val nCells = spark.read.parquet(s"$path/centroids").count()
-    val out = fs.create(new Path(s"$path/_graft_meta"), true)
-    try out.write(s"rows=$total;cells=$nCells"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+  /** The arrival log beside the built cells
+    * ([[graft.pipeline.VectorIngestPipeline]] appends to it): one
+    * [[graft.scale.PartLog]] whose parts hold a `cells` table
+    * (vec_id, embedding, c_norm, cell), partitioned by cell so probes
+    * prune arrivals exactly as base files. When the index has a PQ
+    * half, a part also holds a `codes` table (vec_id, code, cell),
+    * encoded with the persisted codebooks so the ADC probe scans bytes
+    * for arrivals too, and the [[BooksNote]] naming those books. */
+  def arrivals(path: String): PartLog = new PartLog(s"$path/arrivals")
+
+  /** The note naming the codebooks a part's codes were encoded with. */
+  val BooksNote = "_books_id"
+
+  /** The arrival part of cell-assigned rows: the `cells` table and,
+    * when the index has a PQ half, their codes under the CURRENT books
+    * with that books id as the note. The id is read BEFORE encoding:
+    * if a [[refreshPq]] lands in between, the note names the retired
+    * id, the coverage check rejects the part, and the probe scores it
+    * exactly — stale codes can never be decoded through new LUTs.
+    * Ingest and the arrival fold both land their parts through this. */
+  private[graft] def arrivalPart(assigned: DataFrame, path: String): Part = {
+    val cells = Table("cells", assigned.select(col("vec_id"),
+      col("embedding"), col("c_norm"), col("cell")), Some("cell"))
+    currentBooksId(assigned.sparkSession, path) match {
+      case None => Part(Seq(cells))
+      case Some(id) =>
+        val bc = encodeBooksFor(assigned.sparkSession, path, id)
+        Part(Seq(cells, Table("codes", assigned.select(col("vec_id"),
+            graft.functions.PqFunctions.ivfpq_encode(col("embedding"),
+              col("cell"), bc).as("code"), col("cell")), Some("cell"))),
+          Map(BooksNote -> id))
+    }
   }
-
-  /** All committed streamed delta batches under
-    * `<path>/cells_delta/batch=*` (written by
-    * [[graft.pipeline.VectorIngestPipeline]]), or None if none has
-    * landed. The batch and cell partition columns are both
-    * discoverable; readers prune on cell exactly as on the base
-    * layout. */
-  def deltaBatches(spark: SparkSession, path: String): Option[DataFrame] = {
-    val batches = committedDeltaBatches(spark, path)
-    if (batches.isEmpty) None else Some(readFloatDeltas(spark, path, batches))
-  }
-
-  /** Names of the float-delta batch dirs that hold `_SUCCESS`, found
-    * in one glob: the rule of every batch-keyed store. Spark writes the
-    * marker last, so a batch whose write died during job commit stays
-    * invisible, to the probes and to
-    * `VectorIngestPipeline.compactDeltas`, until its replay lands. */
-  private def committedDeltaBatches(spark: SparkSession,
-      path: String): Seq[String] =
-    Option(graft.scale.Hdfs.of(spark, path).globStatus(
-        new Path(s"$path/cells_delta/batch=*/_SUCCESS")))
-      .toSeq.flatten.map(_.getPath.getParent.getName).sorted
-
-  private def readFloatDeltas(spark: SparkSession, path: String,
-      batches: Seq[String]): DataFrame = {
-    val root = s"$path/cells_delta"
-    spark.read.option("basePath", root)
-      .parquet(batches.map(b => s"$root/$b"): _*)
-  }
-
-  /** Code-delta layout for streamed arrivals:
-    * `<path>/pq_cells_delta/batch=<id>/cell=<c>` mirrors the float
-    * delta layout, holding (vec_id, code) encoded with the PERSISTED
-    * codebooks at ingest time — so the ADC probe scans bytes, not
-    * floats, for uncompacted arrivals too (the float delta scan was
-    * the one remaining full-width path on a hot ingest stream). */
-  def pqDeltaDir(path: String): String = s"$path/pq_cells_delta"
 
   private def readSmallText(fs: FileSystem, p: Path): Option[String] =
     if (!fs.exists(p)) None
@@ -199,12 +187,12 @@ object VectorIndex {
     new Path(s"$path/_graft_pq_books_id")
 
   /** Identity of the CURRENT persisted codebooks (fresh id per
-    * [[refreshPq]]). Delta code batches are stamped with the id they
-    * were encoded under; a batch whose stamp no longer matches was
-    * encoded with retired books and silently decoding it through the
-    * new LUTs would corrupt scores — so it falls back to the exact
-    * float path instead ([[deltaByCoverage]]). None = PQ half absent
-    * or predates code deltas (then no arrivals are encoded). */
+    * [[refreshPq]]). Arrival parts note the id their codes were
+    * encoded under; a part whose note no longer matches was encoded
+    * with retired books and silently decoding it through the new LUTs
+    * would corrupt scores — so it falls back to the exact float path
+    * instead ([[deltaByCoverage]]). None = PQ half absent or predates
+    * coded arrivals (then no arrivals are encoded). */
   def currentBooksId(spark: SparkSession, path: String): Option[String] = {
     val fs = graft.scale.Hdfs.of(spark, path)
     if (!fs.exists(new Path(s"$path/pq_books/_SUCCESS"))) None
@@ -229,7 +217,7 @@ object VectorIndex {
     * index path, books id): a streaming ingest encodes EVERY
     * micro-batch, and re-reading books + centroids per batch (two
     * small driver jobs) would tax exactly the hot-stream path the
-    * code deltas exist to serve. The books id in the key makes
+    * coded arrivals exist to serve. The books id in the key makes
     * staleness impossible — a refreshPq mints a new id, which misses
     * the cache and loads the new books. Bounded (indexes × refreshes
     * per app is small); cleared wholesale past 64 entries. */
@@ -318,68 +306,26 @@ object VectorIndex {
       })
   }
 
-  /** Residual-encode a cell-assigned arrival batch with the CURRENT
-    * persisted codebooks and land it as a code-delta batch dir
-    * (idempotent overwrite, same discipline as the float delta).
-    * Returns false (a no-op) when the PQ half doesn't exist yet —
-    * pre-codebook arrivals stay float-only and score exactly.
-    *
-    * The books id is read BEFORE encoding and stamped AFTER the
-    * write: if a [[refreshPq]] lands in between, the stamp records
-    * the retired id, the coverage check rejects the batch, and the
-    * probe falls back to exact scoring — stale codes can never be
-    * decoded through new LUTs. */
-  def encodeDeltaBatch(assigned: DataFrame, path: String,
-      batchId: Long): Boolean = {
-    val spark = assigned.sparkSession
-    currentBooksId(spark, path) match {
-      case None => false
-      case Some(id) =>
-        val bc = encodeBooksFor(spark, path, id)
-        val dir = s"${pqDeltaDir(path)}/batch=$batchId"
-        assigned
-          .select(col("vec_id"),
-            graft.functions.PqFunctions.ivfpq_encode(col("embedding"),
-              col("cell"), bc).as("code"),
-            col("cell"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("cell")
-          .parquet(dir)
-        val fs = graft.scale.Hdfs.of(spark, path)
-        val out = fs.create(new Path(s"$dir/_books_id"), true)
-        try out.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        true
-    }
-  }
-
-  /** Split the committed float-delta batches by code coverage:
-    * `(coded, uncoded)` where `coded = (codes, floats)` spans the
-    * batches whose code dir committed (`_SUCCESS`) under the CURRENT
-    * books id, and `uncoded` spans the rest (pre-codebook arrivals,
-    * crashed code writes, stale-books stamps). The probe scores coded
-    * batches through ADC like base rows and uncoded ones exactly —
-    * every arrival is scored either way, pinned in IvfPqSpec. */
+  /** Split the arrival view's dirs by code coverage:
+    * `(coded, uncoded)` where `coded = (codes, floats)` spans the parts
+    * (and the fold's base) whose books note is the CURRENT books id,
+    * and `uncoded` spans the rest (pre-codebook arrivals, stale-books
+    * notes). The probe scores coded parts through ADC like base rows
+    * and uncoded ones exactly — every arrival is scored either way,
+    * pinned in IvfPqSpec. */
   private[graft] def deltaByCoverage(spark: SparkSession, path: String)
       : (Option[(DataFrame, DataFrame)], Option[DataFrame]) = {
-    val batches = committedDeltaBatches(spark, path)
-    if (batches.isEmpty) return (None, None)
-    val fs = graft.scale.Hdfs.of(spark, path)
-    val curId = currentBooksId(spark, path)
-    def covered(b: String): Boolean = curId.exists { id =>
-      fs.exists(new Path(s"${pqDeltaDir(path)}/$b/_SUCCESS")) &&
-        readSmallText(fs,
-          new Path(s"${pqDeltaDir(path)}/$b/_books_id")).contains(id)
+    val log = arrivals(path)
+    log.resolve(spark).fold[(Option[(DataFrame, DataFrame)],
+        Option[DataFrame])]((None, None)) { v =>
+      val cur = currentBooksId(spark, path)
+      val (cov, unc) = v.dirs.partition(d =>
+        cur.nonEmpty && log.note(spark, d, BooksNote) == cur)
+      def cells(dirs: Seq[String]) = log.table(spark, v, "cells", dirs)
+      (Option.when(cov.nonEmpty)(
+          (log.table(spark, v, "codes", cov), cells(cov))),
+        Option.when(unc.nonEmpty)(cells(unc)))
     }
-    val (cov, unc) = batches.partition(covered)
-    val coded =
-      if (cov.isEmpty) None
-      else Some((spark.read.option("basePath", pqDeltaDir(path))
-          .parquet(cov.map(b => s"${pqDeltaDir(path)}/$b"): _*),
-        readFloatDeltas(spark, path, cov)))
-    val uncoded =
-      if (unc.isEmpty) None else Some(readFloatDeltas(spark, path, unc))
-    (coded, uncoded)
   }
 
   // ------------------------------------------------------------------
@@ -409,9 +355,9 @@ object VectorIndex {
   }
 
   /** The PQ half's currency fingerprint derives from the INDEX layout
-    * (base cells row count), not a caller's frame: appends and delta
-    * compaction grow `cells`, and the code table must re-cover the
-    * grown base. */
+    * (base cells row count), not a caller's frame: a rebuild of
+    * `cells` must be re-covered by the code table. Arrivals never grow
+    * `cells`; their parts carry their own codes. */
   private def pqFingerprint(spark: SparkSession, path: String, m: Int,
       k: Int): String =
     // layout=b1 = byte-packed binary codes: a code table persisted
@@ -448,12 +394,12 @@ object VectorIndex {
     path
   }
 
-  /** (Re)build the PQ half from the index layout AS-IS — the
-    * maintenance entry for the ingest flow: after
-    * [[graft.pipeline.VectorIngestPipeline.compactDeltas]] folds
-    * streamed vectors into the base cells, this re-covers them with
-    * codes (until then, [[queryIvfPq]] scores uncovered rows exactly —
-    * see its scaladoc). Never touches centroids or the base cells. */
+  /** (Re)build the PQ half from the index layout AS-IS: retrain the
+    * books on the base cells and re-encode them. Arrival parts encoded
+    * under the old books then score exactly until
+    * [[graft.pipeline.VectorIngestPipeline.compactDeltas]] re-encodes
+    * them under the new ones (see [[queryIvfPq]]'s scaladoc). Never
+    * touches centroids or the base cells. */
   def refreshPq(spark: SparkSession, path: String, m: Int = 16,
       k: Int = 64, pqIters: Int = 8, sampleCap: Int = 4096): Unit = {
     import spark.implicits._
@@ -505,8 +451,8 @@ object VectorIndex {
     try out.write(pqFingerprint(spark, path, m, k)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    // fresh books identity: delta code batches stamped with an older
-    // id are retired from ADC coverage (they encode against books
+    // fresh books identity: arrival parts noting an older id are
+    // retired from ADC coverage (they encode against books
     // that no longer exist) and fall back to exact scoring
     val idOut = fs.create(booksIdPath(path), true)
     try idOut.write(java.util.UUID.randomUUID().toString
@@ -580,8 +526,7 @@ object VectorIndex {
     }
     val probedCells = probePairs.map(_._1).distinct.sorted
     val probeDf = probePairs.toDF("cell", "q_idx")
-    // streamed arrivals whose batch carries codes under the CURRENT
-    // books join the compressed ADC scan; the rest score exactly below
+    // arrival parts whose codes are under the CURRENT books join the compressed ADC scan; the rest score exactly below
     val (codedDelta, uncodedDelta) = deltaByCoverage(spark, path)
     val basePqScan = spark.read.parquet(s"$path/pq_cells")
       .select(col("vec_id").as("neighbor_id"), col("code"), col("cell"))
@@ -615,9 +560,9 @@ object VectorIndex {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id")), "ivfpq-shortlist")
     // exact rerank: float embeddings read ONLY for shortlist rows,
-    // through the same partition-pruned cell layout. Coded delta rows
+    // through the same partition-pruned cell layout. Coded arrival rows
     // can make the shortlist too, so their float side rides along —
-    // shortlist-bounded, never a full-width delta scan for SCORING
+    // shortlist-bounded, never a full-width arrival scan for SCORING
     val floats = spark.read.parquet(s"$path/cells")
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").as("c_emb"), col("c_norm"), col("cell"))
@@ -643,12 +588,12 @@ object VectorIndex {
         col("c_norm"))
     // INVARIANT: every probed vector gets scored — compressed when a
     // code covers it, EXACTLY otherwise. Two uncovered classes:
-    //  (a) delta batches WITHOUT current-books codes (pre-codebook
-    //      arrivals, crashed code writes, stale stamps) — scored
-    //      exactly like queryIvf would; batches WITH codes went
-    //      through the ADC scan above instead;
-    //  (b) base rows folded in by compactDeltas AFTER the last
-    //      refreshPq — detected by a metadata-only count compare, then
+    //  (a) arrival parts WITHOUT current-books codes (pre-codebook
+    //      arrivals, stale-books notes) — scored exactly like queryIvf
+    //      would; parts WITH codes went through the ADC scan above
+    //      instead;
+    //  (b) base rows a rebuild of the cells left without codes (no
+    //      refreshPq since) — detected by a metadata-only count compare, then
     //      isolated with an anti-join (only runs while stale; the
     //      steady state pays two footer counts).
     // Both classes are disjoint from the shortlist (covered rows) by
@@ -689,7 +634,7 @@ object VectorIndex {
     * driver (centroids are tiny), then probe ONLY the union of the
     * top-nProbe cells — a `cell IN (...)` filter on the partition
     * column, so the scan is partition-pruned to the probed fraction.
-    * Streamed deltas are probed alongside the base cells.
+    * Streamed arrivals are probed alongside the base cells.
     */
   def queryIvf(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nProbe: Int = 4): DataFrame = {
@@ -755,18 +700,19 @@ object VectorIndex {
         .collect().map(_.getInt(0)).toSeq)
     }
     val scanCols = Seq("vec_id", "embedding", "c_norm", "cell").map(col)
-    // streamed arrivals (VectorIngestPipeline) live as batchId-keyed
-    // delta partitions beside the base cells; cell is a partition
-    // column inside each batch dir, so the same IN-filter prunes both
+    // streamed arrivals (VectorIngestPipeline) live in the arrival
+    // log beside the base cells; cell is a partition column inside
+    // each part's cells table, so the same IN-filter prunes both
     // sides — the filter is applied per side BEFORE the union to keep
     // the pruning visible in each scan
     val base = spark.read.parquet(s"$path/cells")
       .select(scanCols: _*)
       .filter(col("cell").isin(probedCells: _*))
-    val cellsScan = deltaBatches(spark, path) match {
+    val log = arrivals(path)
+    val cellsScan = log.resolve(spark) match {
       case None => base
-      case Some(delta) => base.unionByName(
-        delta.select(scanCols: _*)
+      case Some(v) => base.unionByName(
+        log.table(spark, v, "cells", v.dirs).select(scanCols: _*)
           .filter(col("cell").isin(probedCells: _*)))
     }
     val ranked = cellsScan

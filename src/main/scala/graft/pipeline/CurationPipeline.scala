@@ -136,7 +136,10 @@ object CurationPipeline {
     * part would overwrite the old part of the same id after the
     * anti-join had already read it. A reject store written before the
     * reject logs split (`rejects/batch=d<id>`, `rejects/batch=g<id>`)
-    * is left on disk and not read.
+    * is left on disk and not read. Those `rejects/batch=d*` and
+    * `rejects/batch=g*` dirs are safe to delete: nothing reads them,
+    * and the two reject logs live beside them in `rejects/tier` and
+    * `rejects/gate`.
     *
     * @param minTokens   reject docs shorter than this many tokens
     * @param maxRepetition reject docs whose duplicate-bigram fraction

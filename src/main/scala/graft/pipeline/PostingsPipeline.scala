@@ -8,20 +8,20 @@ import graft.ops.Bm25
 
 /** Streaming BM25 index maintenance — the lexical twin of
   * [[VectorIngestPipeline]]: arriving documents are tokenized ALONE
-  * (the corpus is never re-read) and their postings land as
-  * batchId-keyed delta partitions that [[Bm25.scoreTopKIndexed]]
+  * (the corpus is never re-read) and land as parts of the index's
+  * arrival log ([[Bm25.arrivals]]), which [[Bm25.scoreTopKIndexed]]
   * probes alongside the base index, immediately and exactly:
   *
-  *  - Exactly-once: a replayed micro-batch OVERWRITES its own batch
-  *    dirs (postings AND the 1-row stats increment) — no
-  *    at-least-once window.
+  *  - Exactly-once: a replayed micro-batch OVERWRITES its own part
+  *    (postings AND the 1-row stats increment, committed by one
+  *    `_SUCCESS`) — no at-least-once window.
   *  - Probe-compatible: `bucket` stays a partition column inside each
-  *    batch dir, so a query's term-bucket pruning applies to deltas
-  *    exactly as to base files; df and avgdl are derived at probe
-  *    time, so scores over the grown corpus equal a full rebuild
+  *    part's postings, so a query's term-bucket pruning applies to
+  *    arrivals exactly as to base files; df and avgdl are derived at
+  *    probe time, so scores over the grown corpus equal a full rebuild
   *    bit-for-bit (spec-pinned).
   *  - Bounded small-file growth: [[Bm25.compactDeltas]] folds
-  *    accumulated batches into the base on a maintenance cadence.
+  *    accumulated parts into the log's own base; readers need no pause.
   */
 object PostingsPipeline {
 

@@ -9,23 +9,25 @@ import graft.ops.{Bm25, Rrf, VectorIndex}
 
 /** The retrieval stack's incremental story end-to-end: ONE document
   * stream (text + embedding per doc) maintains BOTH halves of a hybrid
-  * retrieval index — BM25 postings deltas ([[PostingsPipeline]]'s
-  * layout) and IVF cell deltas ([[VectorIngestPipeline]]'s layout) —
-  * and [[hybridTopK]] probes both mid-stream, immediately and exactly:
+  * retrieval index — the BM25 arrival log ([[PostingsPipeline]]'s
+  * layout) and the IVF arrival log ([[VectorIngestPipeline]]'s layout)
+  * — and [[hybridTopK]] probes both mid-stream, immediately and
+  * exactly:
   *
-  *  - Exactly-once per store: each micro-batch lands batchId-keyed in
-  *    BOTH delta layouts; a replayed batch overwrites its own dirs on
-  *    each side independently, so a crash between the two store writes
-  *    is healed by the replay (the lexical write is itself
-  *    postings-then-stats committed; the vector write is a single
-  *    overwrite).
-  *  - Probe-compatible: term-bucket pruning applies to postings deltas
-  *    and cell pruning to vector deltas exactly as to base files, so
-  *    an arrived document is retrievable by keyword AND by similarity
-  *    the moment its batch commits — no rebuild, no refresh job.
-  *  - Compaction-neutral: folding either side's deltas into its base
-  *    ([[Bm25.compactDeltas]] / [[VectorIngestPipeline.compactDeltas]])
-  *    changes no probe answer (spec-pinned pre/post equality).
+  *  - Exactly-once per store: each micro-batch lands batchId-keyed as
+  *    one part in EACH arrival log; a replayed batch overwrites its own
+  *    part on each side independently, so a crash between the two
+  *    store writes is healed by the replay (each part commits all its
+  *    tables under one `_SUCCESS`).
+  *  - Probe-compatible: term-bucket pruning applies to postings
+  *    arrivals and cell pruning to vector arrivals exactly as to base
+  *    files, so an arrived document is retrievable by keyword AND by
+  *    similarity the moment its batch commits — no rebuild, no refresh
+  *    job.
+  *  - Compaction-neutral: folding either side's arrivals into its log's
+  *    base ([[Bm25.compactDeltas]] / [[VectorIngestPipeline.compactDeltas]])
+  *    changes no probe answer (spec-pinned pre/post equality), and
+  *    readers need no pause while it runs.
   *
   * This is the maintenance loop of a production RAG serving index
   * expressed as pure data layouts — no index server, just partitioned
@@ -67,7 +69,7 @@ object RetrievalPipeline {
       }
       .start()
 
-  /** Hybrid probe of the LIVE index (base + committed deltas on both
+  /** Hybrid probe of the LIVE index (base + committed arrivals on both
     * sides): BM25 top-`perList` by `terms`, dense IVF top-`perList`
     * by `queryVec` (a one-row (vec_id, embedding) frame), fused by
     * reciprocal rank into the top `k`. */
@@ -82,9 +84,10 @@ object RetrievalPipeline {
     Rrf.fuse(Seq(lex, dense), k)
   }
 
-  /** Fold both sides' deltas into their bases. Maintenance op — run
-    * with no ingest replay in flight (each side's documented compact
-    * contract). Probe answers are identical before and after. */
+  /** Fold both sides' arrivals into their logs' bases. Probe answers
+    * are identical before, during and after; every crash window reads
+    * a complete view and a retry is safe. Like the ingest, it writes
+    * both logs, so it runs between micro-batches. */
   def compact(spark: SparkSession, bmPath: String,
       ivfPath: String): Unit = {
     Bm25.compactDeltas(spark, bmPath)

@@ -272,7 +272,7 @@ object PipelineQueries {
     // The SAME persisted IVF layout at FULL probe (nProbe = numCells):
     // every cell is probed, so the candidate set is the whole corpus
     // and the result is exact BY CONSTRUCTION — which makes the index
-    // LAYOUT itself (partitioned cells + deltas + centroid routing)
+    // LAYOUT itself (partitioned cells + arrivals + centroid routing)
     // oracle-gated against sim_cosine_topk's exact-SQL oracle, not
     // just spec-gated (round-10 verdict #2; the pattern
     // retrieval_hybrid_indexed_batch set for the BM25 layout). The
@@ -1340,19 +1340,19 @@ object PipelineQueries {
     *  - RRF fusion (w = 1/(60+rank), round 6) and the final top-10 —
     *    [[hybridBatchOracleSql]]'s tail verbatim.
     *
-    * Registered only when the persisted index exists with NO delta
-    * batches (the SQL reads the base cells layout; a store with
-    * streamed deltas keeps the entry rows-only rather than risking a
+    * Registered only when the persisted index has NO arrival log (the
+    * SQL reads the base cells layout; a store with streamed arrivals,
+    * folded or not, keeps the entry rows-only rather than risking a
     * wrong oracle). The store-read dependence means a stale or
     * corrupt index surfaces as a hash mismatch — same failure
     * surface the engine itself has. */
-  /** The persisted index exists with no streamed deltas — the
+  /** The persisted index exists with no arrival log — the
     * precondition both IVF replays share (their SQL reads the base
     * cells layout only). */
   private def ivfReplayable(ivf: String): Boolean =
     new java.io.File(s"$ivf/centroids/_SUCCESS").exists() &&
       new java.io.File(s"$ivf/cells/_SUCCESS").exists() &&
-      !new java.io.File(s"$ivf/cells_delta").exists()
+      !new java.io.File(VectorIndex.arrivals(ivf).path).exists()
 
   /** The pruned-probe CTE block both IVF replays share, given a
     * `qs(query_id, embedding)` CTE: per-query probed cells = top-

@@ -14,19 +14,19 @@ package graft.scale
   * and asserts each store's documented crash contract in every
   * window. The shapes left:
   *
-  *  - the [[PartLog]] fold (`part-fold`), shared by every single-dir
-  *    batch-keyed store (the agg engines, SampleLayout, the curation
-  *    and media logs, the BM25 result-cache memo): every window reads
-  *    the complete old view or the complete new one.
-  *  - the BM25 postings and IVF cell-delta maintenance folds
-  *    (documented "no reader/replay in flight" contract): every window
-  *    is either exact or DETECTABLE (the un-retired delta dirs are the
-  *    operator's check-before-retry signal).
+  *  - the [[PartLog]] fold (`part-fold`), shared by every batch-keyed
+  *    store (the agg engines, SampleLayout, the curation and media
+  *    logs, the BM25 result-cache memo, and the BM25 and IVF arrival
+  *    logs): every window reads the complete old view or the complete
+  *    new one, and a retried fold is safe.
+  *  - the [[PartLog]] named-table append (`part-append`: the BM25 and
+  *    IVF arrivals): `_SUCCESS` is retracted first and written last, so
+  *    every window shows the batch invisible or complete.
   *  - TextSkipIndex's retract-first append: a window may hide the
   *    batch, never show part of it.
-  *  - the ingest runs (BM25 and IVF deltas, and the media runs, whose
-  *    steps are PartLog appends): every window shows the batch
-  *    invisible or a stage-prefix of it, and the replay overwrites it.
+  *  - the media ingest runs, whose steps are PartLog appends: every
+  *    window shows the batch invisible or a stage-prefix of it, and the
+  *    replay overwrites it.
   *
   * The step lists are registered at run time ([[stepsOf]]) so the
   * crash spec enumerates boundaries from the code itself — a store

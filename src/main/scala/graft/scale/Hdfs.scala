@@ -59,9 +59,15 @@ object Hdfs {
     * count at minimum) AND every parameter that shapes the layout —
     * a parameter retune that silently serves the old physical layout
     * is this protocol's failure mode (review-caught, round 10).
+    *
+    * `built` is the stamp a fresh build writes, when it differs from
+    * the `stamp` a current layout holds: a store with an arrival log
+    * beside its built layout is current when the layout plus the
+    * arrivals cover the input, and its rebuild absorbs the arrivals.
     */
   def ensureStamped(fs: FileSystem, meta: Path,
-      successPaths: Seq[Path], stamp: String)(build: => Unit): Unit = {
+      successPaths: Seq[Path], stamp: String,
+      built: Option[String] = None)(build: => Unit): Unit = {
     val current = successPaths.forall(fs.exists) &&
       fs.exists(meta) && {
         val in = fs.open(meta)
@@ -74,8 +80,8 @@ object Hdfs {
       fs.delete(meta, false)
       build
       val out = fs.create(meta, true)
-      try out.write(
-        stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(built.getOrElse(stamp)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
   }

@@ -6,15 +6,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The append-log protocol, written once. Every single-dir
-  * batch-keyed store is built on it: the five agg engines (through
-  * [[graft.agg.PartStore]]), [[SampleLayout]], the curated store and
-  * the two reject logs of [[graft.pipeline.CurationPipeline]], the
-  * four delta logs of [[graft.pipeline.MediaPipeline]], and the memo
-  * of [[graft.ops.Bm25ResultCache]]. It is the MergeTree part model
-  * (kafka+clickhouse.md:205-211, 396-401): each block lands as its own
-  * part, a background fold merges the parts into one base, and no
-  * reader ever sees a fold half done.
+/** The append-log protocol, written once. Every batch-keyed store is
+  * built on it: the five agg engines (through [[graft.agg.PartStore]]),
+  * [[SampleLayout]], the curated store and the two reject logs of
+  * [[graft.pipeline.CurationPipeline]], the four delta logs of
+  * [[graft.pipeline.MediaPipeline]], the memo of
+  * [[graft.ops.Bm25ResultCache]], and the two-table arrival logs of
+  * [[graft.ops.Bm25]] and [[graft.ops.VectorIndex]]. It is the
+  * MergeTree part model (kafka+clickhouse.md:205-211, 396-401): each
+  * block lands as its own part, a background fold merges the parts
+  * into one base, and no reader ever sees a fold half done.
   *
   * Layout under `path`:
   *  - `batch=<id>`: one part per append, keyed by the writer's batch id;
@@ -22,30 +23,47 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - `_manifest`: "gen through", the published generation and the
   *    highest batch id folded into its base (the replay watermark);
   *  - `_schema`: the parts' schema as JSON, the log's CREATE TABLE.
-  *    The writer publishes it once, before the first part or base
-  *    lands, so every committed part has a recorded schema.
+  *    The writer publishes it before the first part or base lands, so
+  *    every committed part has a recorded schema.
+  *
+  * A part or base holds either the rows themselves, or named tables
+  * ([[Part]]): `batch=<id>/<table>/`, each table optionally partitioned
+  * by one column (`bucket`, `cell`), so a probe prunes a part's files
+  * the way it prunes a built layout's. Small text notes (a codebook
+  * id) sit beside the tables. For a named-table log, `_schema` records
+  * every table's schema as one struct of structs, and a table first
+  * written by a later part is added to it.
   *
   * The view a reader sees is the base of `gen` plus every committed
-  * part with id > `through`. Committed means the part holds `_SUCCESS`,
-  * which Spark writes last. The view is resolved in one glob and read
-  * with the recorded schema, so a read infers nothing and starts no
-  * Spark job before its query runs. Only a log written before schemas
-  * were recorded is read by inference, until its writer's next append
-  * or fold records one. Without a manifest nothing has been folded
-  * yet: every committed part, no base. [[read]] refuses a log with
-  * nothing visible; [[readOption]] answers None for it, and can leave
-  * out one part, so a writer replaying a batch probes the log without
-  * its own earlier attempt.
+  * part with id > `through`. Committed means the part holds
+  * `_SUCCESS`, which is written last: by Spark for a rows part, by the
+  * append itself, after every table and note, for a named-table part.
+  * The view is resolved in one glob and read with the recorded schema,
+  * so a read infers nothing and starts no Spark job before its query
+  * runs; one resolved view serves every table a read touches. Only a
+  * log written before schemas were recorded is read by inference,
+  * until its writer's next append or fold, or [[recordSchema]],
+  * records one. Without a manifest nothing has been folded yet: every
+  * committed part, no base.
+  * [[read]] refuses a log with nothing visible; [[readOption]] and
+  * [[resolve]] answer None for it, and [[readOption]] can leave out one
+  * part, so a writer replaying a batch probes the log without its own
+  * earlier attempt.
   *
   * [[append]] overwrites `batch=<id>`, so a replayed batch rewrites
-  * itself. An id at or below `through` is refused: its rows are in the
-  * base, so a replay would double-count, and a stream whose checkpoint
-  * was wiped would land parts no view admits. An append or fold whose
-  * schema differs from the recorded one (nullability aside) is refused
-  * too: a log keeps one schema.
+  * itself. A named-table append runs through [[CommitProtocol]]
+  * (`part-append`): it first retracts the part's `_SUCCESS` (then the
+  * rest of an earlier attempt), lands each table, and writes the notes
+  * and a fresh `_SUCCESS` last, so every crash window shows the batch
+  * invisible or complete. An id at or below `through` is refused: its
+  * rows are in the base, so a replay would double-count, and a stream
+  * whose checkpoint was wiped would land parts no view admits. An
+  * append or fold whose schema differs from the recorded one
+  * (nullability aside) is refused too: a log keeps one schema.
   *
-  * [[compact]] and [[rebuild]] share one fold. It snapshots the view,
-  * then runs three steps through [[CommitProtocol]]:
+  * [[compact]], [[compactParts]] and [[rebuild]] share one fold. It
+  * snapshots the view, then runs three steps through
+  * [[CommitProtocol]] (`part-fold`):
   *  1. land the next base as `batch=compacted-<gen+1>`, a name the
   *     published manifest does not admit;
   *  2. publish the manifest through [[Hdfs.atomicWrite]]: readers flip
@@ -60,7 +78,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * it. A reader that out-sleeps the grace window fails loudly on its
   * missing base. One writer per log; readers are unrestricted.
   */
-final class PartLog(path: String) {
+final class PartLog(val path: String) {
   import PartLog._
 
   val manifestPath: Path = new Path(path, "_manifest")
@@ -100,23 +118,37 @@ final class PartLog(path: String) {
       }
     }
 
+  private def same(want: StructType, got: StructType,
+      what: String): Unit =
+    require(SchemaBridge.sameIgnoringNullability(want, got),
+      s"part log $path: schema ${got.simpleString} differs from " +
+        s"$what ${want.simpleString}. A log keeps one schema; write " +
+        "a new log to change it")
+
   /** Refuse `got` unless it is the recorded schema; record it on a log
     * that has none. `current` gives the schema an older log's parts
     * already hold, if any. */
   private def record(fs: FileSystem, got: StructType,
-      current: => Option[StructType]): Unit = {
-    def same(want: StructType, what: String): Unit =
-      require(SchemaBridge.sameIgnoringNullability(want, got),
-        s"part log $path: schema ${got.simpleString} differs from " +
-          s"$what ${want.simpleString}. A log keeps one schema; write " +
-          "a new log to change it")
+      current: => Option[StructType]): Unit =
     recorded(fs) match {
-      case Some(r) => same(r, s"the one recorded at $schemaPath,")
+      case Some(r) => same(r, got, s"the one recorded at $schemaPath,")
       case None =>
-        current.foreach(same(_, "the schema its parts hold,"))
+        current.foreach(same(_, got, "the schema its parts hold,"))
         Hdfs.atomicWrite(fs, schemaPath,
           SchemaBridge.asNullable(got).json)
     }
+
+  /** [[record]] for a named-table part: each table is checked against
+    * its recorded schema, and a table no part wrote before is added. */
+  private def recordTables(fs: FileSystem, part: Part): Unit = {
+    val r = recorded(fs).getOrElse(new StructType())
+    val (known, added) = part.tables.partition(t =>
+      r.fieldNames.contains(t.name))
+    known.foreach(t => same(r(t.name).dataType.asInstanceOf[StructType],
+      t.ordered.schema, s"table ${t.name}'s recorded at $schemaPath,"))
+    if (added.nonEmpty)
+      Hdfs.atomicWrite(fs, schemaPath, added.foldLeft(r)((s, t) =>
+        s.add(t.name, SchemaBridge.asNullable(t.ordered.schema))).json)
   }
 
   /** Names of the dirs that hold `_SUCCESS`. A fold's retire step
@@ -147,6 +179,11 @@ final class PartLog(path: String) {
   /** The published view: the manifest's base if it is committed, and
     * every committed part above the watermark. */
   def view(spark: SparkSession): View = view(Hdfs.of(spark, path))
+
+  /** The published view, or None for a log with no visible part or
+    * base. */
+  def resolve(spark: SparkSession): Option[View] =
+    Some(view(spark)).filter(v => v.manifest.nonEmpty || v.dirs.nonEmpty)
 
   /** The view restricted to the parts whose ids pass `keep`. */
   private def view(fs: FileSystem, keep: Long => Boolean = _ => true)
@@ -179,13 +216,17 @@ final class PartLog(path: String) {
   /** Throws if the manifest's base is gone: a reader that out-slept the
     * grace window must not return the parts alone. A [[rebuild]] reads
     * no rows, so it still replaces such a log. */
-  private def rows(spark: SparkSession, v: View): DataFrame = {
+  private def checkBase(v: View): Unit = {
     v.manifest.map(m => baseDir(m.gen)).filterNot(v.dirs.contains)
       .foreach(b => throw new IllegalStateException(
         s"part log $path: base $b is gone. The reader out-slept the " +
           "grace window (two folds passed since its manifest read); " +
           "re-resolve and retry"))
     require(v.dirs.nonEmpty, s"no committed parts at $path")
+  }
+
+  private def rows(spark: SparkSession, v: View): DataFrame = {
+    checkBase(v)
     v.schema match {
       case Some(s) => spark.read.schema(s).parquet(v.dirs: _*)
       // a log written before schemas were recorded: infer
@@ -193,16 +234,54 @@ final class PartLog(path: String) {
     }
   }
 
-  /** Keyed append of one block as part `batch=<batchId>`. */
-  def append(block: DataFrame, batchId: Long): Unit = {
-    val spark = block.sparkSession
+  /** Record the schema the parts hold on a log written before schemas
+    * were recorded; a no-op once one is. A writer that may only read
+    * (a memo whose calls all hit) calls it when it opens the log, so
+    * its reads stop inferring. */
+  def recordSchema(spark: SparkSession): Unit = {
     val fs = Hdfs.of(spark, path)
+    val v = view(fs)
+    if (v.schema.isEmpty && v.dirs.nonEmpty)
+      record(fs, rows(spark, v).schema, None)
+  }
+
+  /** Table `name` of a named-table log, over `dirs`: the dirs of the
+    * resolved view `v`, or a subset of them (the parts whose notes
+    * pass a check). Read with the table's recorded schema, one scan
+    * per dir, unioned: Spark discovers a partition column only below
+    * one common base path, and the table's own dir sits between the
+    * part and its partitions. A filter on the partition column pushes
+    * into every scan. */
+  def table(spark: SparkSession, v: View, name: String,
+      dirs: Seq[String]): DataFrame = {
+    checkBase(v)
+    require(dirs.nonEmpty, s"part log $path: table $name over no dirs")
+    val s = v.schema.filter(_.fieldNames.contains(name))
+      .getOrElse(throw new IllegalStateException(
+        s"part log $path: no recorded schema for table $name"))
+    val ts = s(name).dataType.asInstanceOf[StructType]
+    dirs.map(d => spark.read.schema(ts).parquet(s"$d/$name"))
+      .reduce(_ unionByName _)
+  }
+
+  /** Note `name` of the part or base at `dir`, if it holds one. */
+  def note(spark: SparkSession, dir: String, name: String): Option[String] =
+    text(Hdfs.of(spark, dir), new Path(dir, name))
+
+  private def guard(fs: FileSystem, batchId: Long): Unit = {
     val through = manifest(fs).fold(-1L)(_.through)
     require(batchId > through,
       s"part log $path: batch $batchId is at or below the fold " +
         s"watermark $through. Its rows are already folded, so a replay " +
         "would double-count; a stream whose checkpoint was wiped must " +
         "be re-pointed or the store rebuilt")
+  }
+
+  /** Keyed append of one block as part `batch=<batchId>`. */
+  def append(block: DataFrame, batchId: Long): Unit = {
+    val spark = block.sparkSession
+    val fs = Hdfs.of(spark, path)
+    guard(fs, batchId)
     record(fs, block.schema, {
       val v = view(fs)
       if (v.dirs.isEmpty) None else Some(rows(spark, v).schema)
@@ -210,27 +289,62 @@ final class PartLog(path: String) {
     block.write.mode(SaveMode.Overwrite).parquet(s"$path/batch=$batchId")
   }
 
+  /** Keyed append of a named-table part as `batch=<batchId>`, through
+    * one `part-append` run: retract, one step per table, commit. */
+  def append(part: Part, batchId: Long): Unit = {
+    val fs = Hdfs.of(part.tables.head.rows.sparkSession, path)
+    guard(fs, batchId)
+    recordTables(fs, part)
+    CommitProtocol.run("part-append",
+      land(fs, new Path(path, s"batch=$batchId"), part))
+  }
+
+  /** The steps that land `part` at `dir`. `_SUCCESS` goes first and
+    * last, so an earlier attempt's tables and notes never show beside
+    * this one's. */
+  private def land(fs: FileSystem, dir: Path, part: Part)
+      : Seq[CommitProtocol.Step] = {
+    import CommitProtocol.step
+    val done = new Path(dir, "_SUCCESS")
+    step("retract") { fs.delete(done, false); fs.delete(dir, true) } +:
+      part.tables.map(t => step(s"write-${t.name}") {
+        val w = t.ordered.write.mode(SaveMode.Overwrite)
+        t.partitionBy.fold(w)(w.partitionBy(_)).parquet(s"$dir/${t.name}")
+      }) :+
+      step("commit") {
+        part.notes.foreach { case (n, c) =>
+          val out = fs.create(new Path(dir, n), true)
+          try out.write(c.getBytes("UTF-8")) finally out.close()
+        }
+        fs.create(done, true).close()
+      }
+  }
+
   /** The one fold over the view below `below`. `next` builds the next
-    * base from the snapshot, or returns None to leave the log as it
-    * is. */
+    * base from the snapshot and returns how to land it at a dir, or
+    * None to leave the log as it is. */
   private def fold(spark: SparkSession, below: Long = Long.MaxValue)(
-      next: View => Option[DataFrame]): Unit = {
+      next: View => Option[String => Unit]): Unit = {
     val fs = Hdfs.of(spark, path)
     val v = view(fs, _ < below)
-    next(v).foreach { base =>
-      record(fs, base.schema, None)
+    next(v).foreach { landAt =>
       val m = Manifest(v.manifest.fold(0L)(_.gen + 1), v.through)
       import CommitProtocol.{run, step}
       run("part-fold", Seq(
         // a crashed earlier attempt at this generation is overwritten
-        step("land-next-base") {
-          base.write.mode(SaveMode.Overwrite).parquet(baseDir(m.gen))
-        },
+        step("land-next-base") { landAt(baseDir(m.gen)) },
         step("publish-manifest") {
           Hdfs.atomicWrite(fs, manifestPath, s"${m.gen} ${m.through}")
         },
         step("retire-superseded") { retire(fs, v.manifest, m.gen) }))
     }
+  }
+
+  /** Land `base` as one rows dir, once its schema is recorded. */
+  private def rowsBase(fs: FileSystem, base: DataFrame)
+      : Option[String => Unit] = {
+    record(fs, base.schema, None)
+    Some(dir => base.write.mode(SaveMode.Overwrite).parquet(dir))
   }
 
   /** Fold the visible rows through `merge` into the next base, cast
@@ -245,14 +359,37 @@ final class PartLog(path: String) {
       if (v.parts < fanIn || (v.manifest.isEmpty && v.dirs.isEmpty)) None
       else {
         val parts = rows(spark, v)
-        Some(castToRawSchema(merge(parts), parts.schema))
+        rowsBase(Hdfs.of(spark, path),
+          castToRawSchema(merge(parts), parts.schema))
       }
     }
+
+  /** Fold a named-table log: `next` builds the next base [[Part]] from
+    * the snapshot (one merge per table, reading each through
+    * [[table]]). Does nothing while no part is visible above the base,
+    * so a retried fold whose publish already landed is a no-op. */
+  def compactParts(spark: SparkSession)(next: View => Part): Unit = {
+    val fs = Hdfs.of(spark, path)
+    fold(spark) { v =>
+      if (v.parts == 0) None
+      else {
+        val part = next(v)
+        recordTables(fs, part)
+        Some(dir => land(fs, new Path(dir), part).foreach(_.body()))
+      }
+    }
+  }
 
   /** Replace the log's content with `base`, superseding every part
     * committed before the fold's snapshot. */
   def rebuild(base: DataFrame): Unit =
-    fold(base.sparkSession)(_ => Some(base))
+    fold(base.sparkSession)(_ =>
+      rowsBase(Hdfs.of(base.sparkSession, path), base))
+
+  /** Delete the whole log: a store rebuilt from its source drops the
+    * parts the source already holds. */
+  def drop(spark: SparkSession): Unit =
+    Hdfs.of(spark, path).delete(new Path(path), true)
 
   /** Delete the dirs `prev` already did not admit, except the base
     * `keep` just published. Bases go first: a reader that out-slept the
@@ -305,6 +442,22 @@ final class PartLog(path: String) {
 }
 
 object PartLog {
+
+  /** One table of a named-table [[Part]], optionally partitioned by
+    * one column. */
+  final case class Table(name: String, rows: DataFrame,
+      partitionBy: Option[String] = None) {
+    /** The rows with the partition column last: the order a read
+      * returns them in, so a fold's base keeps the recorded schema. */
+    def ordered: DataFrame = partitionBy.fold(rows)(p => rows.select(
+      (rows.columns.filterNot(_ == p) :+ p).map(rows.col).toSeq: _*))
+  }
+
+  /** A named-table part or base: its tables, landed in order, and
+    * small text notes (name -> content) written after them, before
+    * `_SUCCESS`. */
+  final case class Part(tables: Seq[Table],
+      notes: Map[String, String] = Map.empty)
 
   /** The published generation and its replay watermark. */
   final case class Manifest(gen: Long, through: Long)

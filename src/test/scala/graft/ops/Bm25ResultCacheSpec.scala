@@ -64,7 +64,7 @@ class Bm25ResultCacheSpec extends SparkSpec {
     assert(before == canon(Bm25.scoreTopKIndexedBatch(spark, path, qs, 5)))
     val stamp0 = Bm25ResultCache.indexStamp(spark, path)
     // grow the index with a committed delta batch
-    Bm25.appendPostings(docs.filter(col("doc_id") >= 400 &&
+    Bm25.ingestBatch(docs.filter(col("doc_id") >= 400 &&
       col("doc_id") < 450), path, batchId = 1L)
     val stamp1 = Bm25ResultCache.indexStamp(spark, path)
     assert(stamp0 != stamp1)
@@ -100,6 +100,45 @@ class Bm25ResultCacheSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(keys == Seq(Bm25ResultCache.tsKey(live.sorted, 5,
       Bm25ResultCache.indexStamp(spark, path))), keys.toString)
+  }
+
+  test("a memo without _schema has it recorded by its next call: an " +
+      "all-hit call heals it, and the next memo read starts no job") {
+    val path = tmpDir("bm25-rc-schema")
+    val memo = tmpDir("bm25-rc-schema-memo")
+    Bm25.ensurePostings(docs, path)
+    val qs = Seq(("q", Seq("key", "join"))).toDF("query_id", "terms")
+    val truth = canon(Bm25.scoreTopKIndexedBatch(spark, path, qs, 5))
+    assert(canon(Bm25ResultCache.scoreTopKCachedBatch(spark, path, memo,
+      qs, 5)) == truth)
+    // a memo written before schemas were recorded
+    val log = new graft.scale.PartLog(memo)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(log.schemaPath, false))
+    // an all-hit call appends nothing, yet records the schema
+    assert(canon(Bm25ResultCache.scoreTopKCachedBatch(spark, path, memo,
+      qs, 5)) == truth)
+    assert(log.view(spark).parts == 1, "the all-hit call appended")
+    assert(fs.exists(log.schemaPath), "the call did not record _schema")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val bus = org.apache.spark.sql.graftbridge.ListenerBridge
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      bus.drain(spark.sparkContext)
+      jobs.set(0)
+      val rows = log.readOption(spark)
+      bus.drain(spark.sparkContext)
+      assert(jobs.get == 0, s"the memo read started ${jobs.get} jobs")
+      assert(rows.exists(_.count() > 0))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(canon(Bm25ResultCache.scoreTopKCachedBatch(spark, path, memo,
+      qs, 5)) == truth)
   }
 
   test("empty batch and no-terms batch throw the uncached path's " +

@@ -45,31 +45,75 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("postings probe is partition-pruned to the query terms' buckets") {
-    val docs = Tables.documents(spark, sf0001)
+    val all = Tables.documents(spark, sf0001)
+    val base = all.filter(col("doc_id") < 480)
     val path = tmpDir("bm25-prune")
-    Bm25.ensurePostings(docs, path)
+    Bm25.ensurePostings(base, path)
+    // one arrival batch, so the probe unions the base postings with
+    // the arrival log's postings table
+    Bm25.ingestBatch(all.filter(col("doc_id") >= 480), path, 0L)
     // the probe is STAGED (round-15), so the pruned scan lives in the
     // staged subtree's own execution — assert over EVERY plan the
     // query fires, not just the final pass
     val plans = plansDuring {
       Bm25.scoreTopKIndexed(spark, path, Seq("window"), 5).collect()
     }
-    assert(plans.exists(p => "PartitionFilters: \\[[^\\]]*bucket".r
-        .findFirstIn(p).isDefined),
-      s"postings scan not partition-pruned in any pass:\n" +
-        plans.mkString("\n----\n"))
+    // every postings scan — the base's and the arrivals' — carries the
+    // bucket partition filter
+    val scans = plans.flatMap("FileScan parquet [^\n]*".r.findAllIn(_))
+    val postingsScans = scans.filter(_.contains("postings"))
+    assert(postingsScans.exists(_.contains(s"$path/postings")) &&
+        postingsScans.exists(_.contains("/arrivals/")),
+      s"expected a base and an arrival postings scan:\n" +
+        scans.mkString("\n"))
+    assert(postingsScans.forall(s => "PartitionFilters: \\[[^\\]]*bucket".r
+        .findFirstIn(s).isDefined),
+      s"a postings scan is not partition-pruned:\n" +
+        postingsScans.mkString("\n"))
     assert(plans.forall(!_.contains("text#")),
       "indexed path must never read the corpus text column")
+    assert(Bm25.scoreTopKIndexed(spark, path, Seq("window"), 5)
+      .collect().toSet == Bm25.scoreTopK(all, Seq("window"), 5)
+      .collect().toSet)
+
+    // an all-token-less batch: no postings, only its raw count. Scores
+    // are unchanged, and the arrival tables read with their recorded
+    // schema (the empty postings table infers nothing)
+    val before = Bm25.scoreTopKIndexed(spark, path,
+      Seq("window", "merge"), 10).collect().toSet
+    Bm25.ingestBatch(Seq((9001L, "12345 !!!"), (9002L, ""))
+      .toDF("doc_id", "text"), path, 1L)
+    assert(Bm25.scoreTopKIndexed(spark, path, Seq("window", "merge"), 10)
+      .collect().toSet == before,
+      "a token-less batch must leave every score unchanged")
+    val log = Bm25.arrivals(path)
+    val v = log.view(spark)
+    assert(v.parts == 2)
+    val recorded = v.schema.get
+    Seq("postings", "stats").foreach { t =>
+      assert(log.table(spark, v, t, v.dirs).schema ==
+        recorded(t).dataType, s"table $t not read with its recorded schema")
+    }
+    // the ensure fingerprint counts the token-less rows as arrived
+    val meta = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val t1 = fs.getFileStatus(meta).getModificationTime
+    Bm25.ensurePostings(all.select("doc_id", "text").unionByName(Seq(
+      (9001L, "12345 !!!"),
+      (9002L, "")).toDF("doc_id", "text")), path)
+    assert(fs.getFileStatus(meta).getModificationTime == t1,
+      "base + arrivals (token-less ones too) must be current")
   }
 
-  test("appendPostings: arriving docs score immediately and exactly " +
+  test("ingestBatch: arriving docs score immediately and exactly " +
       "(indexed == direct over the grown corpus)") {
     val base = Tables.documents(spark, sf0001).filter(col("doc_id") < 480)
     val arrivals = Tables.documents(spark, sf0001)
       .filter(col("doc_id") >= 480)
     val path = tmpDir("bm25-append")
     Bm25.ensurePostings(base, path)
-    Bm25.appendPostings(arrivals, path, batchId = 0L)
+    Bm25.ingestBatch(arrivals, path, batchId = 0L)
     val grown = Tables.documents(spark, sf0001)
     val terms = Seq("window", "merge")
     val direct = Bm25.scoreTopK(grown, terms, 15).collect()
@@ -78,15 +122,16 @@ class Bm25Spec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
     assert(indexed == direct,
-      "append must make indexed scoring equal a full rebuild")
-    // folding the delta into the base must not change a single score
+      "an arrival must make indexed scoring equal a full rebuild")
+    // folding the arrivals into the log's base must not change a score
     Bm25.compactDeltas(spark, path)
     val compacted = Bm25.scoreTopKIndexed(spark, path, terms, 15)
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
     assert(compacted == direct,
       "compaction must preserve scores exactly")
-    // stats carried the increments: a post-compact ensure is a no-op
+    // the fold's base carries the summed stats: a post-compact ensure
+    // is a no-op
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val meta = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
@@ -94,9 +139,17 @@ class Bm25Spec extends SparkSpec {
     Bm25.ensurePostings(grown, path)
     assert(fs.getFileStatus(meta).getModificationTime == t1,
       "ensure over the grown corpus must see the appended index as current")
+    // a corpus that differs rebuilds the index and drops the log
+    Bm25.ensurePostings(base, path)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(
+      Bm25.arrivals(path).path)), "a rebuild must drop the arrival log")
+    assert(Bm25.scoreTopKIndexed(spark, path, terms, 15).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet ==
+      Bm25.scoreTopK(base, terms, 15).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet)
   }
 
-  test("appendPostings is idempotent under replay and reader-safe " +
+  test("ingestBatch is idempotent under replay and reader-safe " +
       "across a crash between postings and stats") {
     val all = Tables.documents(spark, sf0001)
     val base = all.filter(col("doc_id") < 480)
@@ -112,31 +165,24 @@ class Bm25Spec extends SparkSpec {
     val grownDirect = Bm25.scoreTopK(all, terms, 15).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
 
-    // CRASH SHAPE: postings dir lands, stats dir doesn't (the write
-    // order makes stats the commit marker). Simulated by writing the
-    // batch's postings half directly, as the ingest would, with no
-    // stats dir beside it.
-    val crashDir = s"${Bm25.deltaDir(path)}/batch=7"
-    arrivals
-      .select(col("doc_id"), explode(split(lower(col("text")),
-        "[^a-z]+")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .withColumn("dl", sum(col("tf")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(64))
-        .cast("int"))
-      .write.partitionBy("bucket").parquet(crashDir)
+    // CRASH SHAPE: the part's postings table lands, its stats table and
+    // _SUCCESS don't (the process dies after the postings step)
+    graft.scale.CommitProtocol.crashAfter = Some(("part-append", 1))
+    try intercept[graft.scale.CommitProtocol.InjectedCrash] {
+      Bm25.ingestBatch(arrivals, path, batchId = 7L)
+    } finally graft.scale.CommitProtocol.crashAfter = None
+    assert(new java.io.File(
+      s"${Bm25.arrivals(path).path}/batch=7/postings").exists())
     assert(indexed() == baseOnly,
-      "an uncommitted (stats-less) batch must be invisible to readers")
+      "an uncommitted (_SUCCESS-less) part must be invisible to readers")
 
-    // REPLAY completes the same batch id: overwrites its own dirs
-    Bm25.appendPostings(arrivals, path, batchId = 7L)
+    // REPLAY completes the same batch id: overwrites its own part
+    Bm25.ingestBatch(arrivals, path, batchId = 7L)
     assert(indexed() == grownDirect,
       "replay after the crash must land the batch exactly once")
 
     // SECOND replay of the same id: still exactly once
-    Bm25.appendPostings(arrivals, path, batchId = 7L)
+    Bm25.ingestBatch(arrivals, path, batchId = 7L)
     assert(indexed() == grownDirect,
       "replaying a committed append must not double-count")
   }
@@ -256,7 +302,7 @@ class Bm25Spec extends SparkSpec {
     val base = all.filter(col("doc_id") < 480)
     val path = tmpDir("bm25-ibatch-delta")
     Bm25.ensurePostings(base, path)
-    Bm25.appendPostings(all.filter(col("doc_id") >= 480), path, 0L)
+    Bm25.ingestBatch(all.filter(col("doc_id") >= 480), path, 0L)
     val qs = Seq(("wm", Seq("window", "merge"))).toDF("query_id", "terms")
     val got = Bm25.scoreTopKIndexedBatch(spark, path, qs, 15).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->

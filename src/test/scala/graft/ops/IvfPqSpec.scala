@@ -153,16 +153,26 @@ class IvfPqSpec extends SparkSpec {
       (r.getLong(1), r.getDouble(2))
     }
     assert(top1 == ((420L, 1.0)),
-      "pre-compaction: delta vector must be scored (exact path)")
+      "pre-compaction: the arrival must be scored")
     graft.pipeline.VectorIngestPipeline.compactDeltas(spark, p)
     assert(top1 == ((420L, 1.0)),
-      "post-compaction: folded-but-unencoded vector must be scored")
+      "post-compaction: the folded arrival must be scored")
     VectorIndex.refreshPq(spark, p)
     assert(spark.read.parquet(s"$p/pq_cells").count() ==
       spark.read.parquet(s"$p/cells").count(),
-      "refreshPq must re-cover the grown base")
+      "refreshPq must re-cover the base")
     assert(top1 == ((420L, 1.0)),
-      "post-refresh: the vector must surface via the compressed path")
+      "post-refresh: the arrival, coded under retired books, must " +
+        "still be scored (exactly)")
+    graft.pipeline.VectorIngestPipeline.ingestBatch(
+      emb.filter(col("vec_id") >= 450 && col("vec_id") < 460)
+        .select(col("vec_id"), col("embedding")), p, 1L)
+    graft.pipeline.VectorIngestPipeline.compactDeltas(spark, p)
+    val (coded, uncoded) = VectorIndex.deltaByCoverage(spark, p)
+    assert(coded.isDefined && uncoded.isEmpty,
+      "the fold must re-encode every arrival under the current books")
+    assert(top1 == ((420L, 1.0)),
+      "post-fold: the vector must surface via the compressed path")
   }
 
   test("ensure is fingerprint-guarded: second call is a no-op, a " +
@@ -198,12 +208,12 @@ class IvfPqSpec extends SparkSpec {
       "no batch may fall back to exact while books are current")
     assert(coded.get._1.count() == 50,
       "code delta must cover exactly the landed rows")
-    // ReadSchema pin across every fired job: pq_cells_delta scans
-    // read (vec_id, binary code) only — embeddings appear in NO
-    // code-delta scan (the float delta is touched only by the
+    // ReadSchema pin across every fired job: the arrivals' codes
+    // scans read (vec_id, binary code) only — embeddings appear in NO
+    // codes scan (the arrivals' cells are touched only by the
     // shortlist rerank, which is the same contract as the base cells)
     val scanRe =
-      ("FileScan parquet [^\\n]*pq_cells_delta[^\\n]*" +
+      ("FileScan parquet [^\\n]*/arrivals/[^\\n]*/codes[^\\n]*" +
         "ReadSchema: (struct<[^>\\n]*>)").r
     val seen = java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
@@ -276,20 +286,22 @@ class IvfPqSpec extends SparkSpec {
       "stale-books batch demoted to exact, fresh batch still covered")
     assert(top1 == ((420L, 1.0)),
       "the demoted batch must still be scored (exactly)")
-    // crash window: codes written but the stamp missing -> uncoded
+    // a part whose note is missing -> uncoded
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(
-      s"${VectorIndex.pqDeltaDir(p)}/batch=1/_books_id"), false)
+      s"${VectorIndex.arrivals(p).path}/batch=1/${VectorIndex.BooksNote}"),
+      false)
     val (c2, u2) = VectorIndex.deltaByCoverage(spark, p)
     assert(c2.isEmpty && u2.isDefined,
-      "every batch without a current-books stamp must score exactly")
+      "every part without a current-books note must score exactly")
     assert(top1 == ((420L, 1.0)))
-    // compaction folds floats AND removes the code deltas with them
+    // the fold re-encodes every arrival under the current books: one
+    // covered base, nothing demoted
     graft.pipeline.VectorIngestPipeline.compactDeltas(spark, p)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      VectorIndex.pqDeltaDir(p))),
-      "code deltas must die with their float batches at compaction")
+    val (c3, u3) = VectorIndex.deltaByCoverage(spark, p)
+    assert(c3.exists(_._1.count() == 60) && u3.isEmpty,
+      "the fold must leave every arrival coded under the current books")
     assert(top1 == ((420L, 1.0)))
   }
 }

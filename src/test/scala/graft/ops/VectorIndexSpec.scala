@@ -50,17 +50,25 @@ class VectorIndexSpec extends SparkSpec {
     val corpus = Tables.embeddings(spark, sf0001)
     val base = corpus.filter(col("vec_id") % 2 === 0)
     val delta = corpus.filter(col("vec_id") % 2 === 1)
+      .select(col("vec_id"), col("embedding"))
     val path = tmpDir("ivf-append") + "/index"
-    VectorIndex.buildIvf(base, path, numCells = 8, refineIters = 1)
-    VectorIndex.appendIvf(delta, path)
+    VectorIndex.ensureIvf(base, path, numCells = 8, refineIters = 1)
+    graft.pipeline.VectorIngestPipeline.ingestBatch(delta, path, 0L)
 
-    // index now holds the full corpus, centroids untouched
-    assert(spark.read.parquet(s"$path/cells").count() == corpus.count())
+    // the arrivals land in the arrival log's cells table; the built
+    // cells and the centroids are untouched
+    val log = VectorIndex.arrivals(path)
+    val v = log.view(spark)
+    assert(log.table(spark, v, "cells", v.dirs).count() == delta.count())
+    assert(spark.read.parquet(s"$path/cells").count() == base.count())
     assert(spark.read.parquet(s"$path/centroids").count() == 8)
-    // the refreshed fingerprint makes ensureIvf treat the grown index
-    // as current (no rebuild wiping the appended half)
+    // base + arrivals cover the corpus, so ensureIvf treats the grown
+    // index as current (no rebuild wiping the arrivals)
+    val meta = new java.io.File(s"$path/_graft_meta")
+    val t1 = meta.lastModified()
     VectorIndex.ensureIvf(corpus, path, numCells = 8)
-    assert(spark.read.parquet(s"$path/cells").count() == corpus.count())
+    assert(meta.lastModified() == t1 &&
+      new java.io.File(log.path).exists())
 
     // appended vectors are retrievable: querying ALL cells must surface
     // exactly the brute-force top-k over the full corpus

@@ -70,9 +70,8 @@ class PostingsPipelineSpec extends SparkSpec {
       "compaction must be answer-neutral")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(
-      new org.apache.hadoop.fs.Path(Bm25.deltaDir(path))),
-      "compaction retires the delta dirs")
+    assert(Bm25.arrivals(path).view(spark).parts == 0,
+      "compaction folds every part into the arrival log's base")
     // and the folded base carries the arrivals: a fresh ensure over
     // the grown corpus sees the index as current
     val meta = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")

@@ -8,8 +8,7 @@ import graft.{SparkSpec, Tables}
 import graft.ops.{Bm25, Rrf, Similarity, VectorIndex}
 
 /** The retrieval stack's incremental capstone: one document stream
-  * (text + embedding) maintains BM25 postings deltas AND IVF cell
-  * deltas; a hybrid probe mid-stream retrieves arrived docs by keyword
+  * (text + embedding) maintains the BM25 AND the IVF arrival logs; a hybrid probe mid-stream retrieves arrived docs by keyword
   * and by similarity immediately and exactly; compacting both sides
   * changes no answer; a replayed batch changes no answer.
   */
@@ -90,15 +89,11 @@ class RetrievalPipelineSpec extends SparkSpec {
     RetrievalPipeline.compact(spark, bmPath, ivfPath)
     assert(hybrid() == preCompact,
       "compaction of either store must change no probe answer")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        Bm25.deltaDir(bmPath))) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(
-        VectorIngestPipeline.deltaDir(ivfPath))),
-      "compaction retires both delta trees")
+    assert(Seq(Bm25.arrivals(bmPath), VectorIndex.arrivals(ivfPath))
+        .forall(_.view(spark).parts == 0),
+      "compaction folds every part of both arrival logs")
 
-    // and the dense planted arrival still surfaces from the base
+    // and the dense planted arrival still surfaces from the log's base
     val denseAfter = VectorIndex.queryIvf(spark, ivfPath, probe, 1)
       .collect().head
     assert((denseAfter.getLong(1), denseAfter.getDouble(2))

@@ -62,7 +62,7 @@ class VectorIngestPipelineSpec extends SparkSpec {
     val idx = s"$base/idx"
     val src = s"$base/src"
     Files.createDirectories(Paths.get(src))
-    VectorIndex.buildIvf(vecsDF(0L until 40L), idx,
+    VectorIndex.ensureIvf(vecsDF(0L until 40L), idx,
       numCells = 4, refineIters = 1)
 
     // two arrival waves, one AvailableNow run each (batch 0 then 1)
@@ -96,15 +96,17 @@ class VectorIngestPipelineSpec extends SparkSpec {
       idx, 0L)
     assert(ivf() == expected, "replayed batch must not double-ingest")
 
-    // compaction folds deltas into the base cells; answers unchanged,
-    // delta dir gone
+    // compaction folds the parts into the arrival log's base; answers
+    // unchanged, no part left above it, the built cells untouched
     VectorIngestPipeline.compactDeltas(spark, idx)
     assert(ivf() == expected, "compaction must not change answers")
-    assert(!new java.io.File(
-      VectorIngestPipeline.deltaDir(idx)).exists())
+    val v = VectorIndex.arrivals(idx).view(spark)
+    assert(v.parts == 0 && v.dirs == Seq(
+      s"${VectorIndex.arrivals(idx).path}/batch=compacted-0"))
+    assert(spark.read.parquet(s"$idx/cells").count() == 40)
 
-    // the refreshed fingerprint sees the grown corpus as current: an
-    // ensureIvf over the same 60 vectors must NOT trigger a rebuild
+    // base + arrivals cover the grown corpus: an ensureIvf over the
+    // same 60 vectors must NOT trigger a rebuild
     // (probe: centroids file mtimes unchanged)
     val centDir = new java.io.File(s"$idx/centroids")
     val before = centDir.listFiles().map(f =>
@@ -126,10 +128,8 @@ class VectorIngestPipelineSpec extends SparkSpec {
     // dir (only _SUCCESS) and schema inference threw, killing the
     // stream; an empty batch must write NOTHING instead
     VectorIngestPipeline.ingestBatch(empty, idx, 7L)
-    assert(!new java.io.File(
-      s"${VectorIngestPipeline.deltaDir(idx)}/batch=7").exists(),
-      "an empty batch must not leave a rows-less delta dir")
-    assert(!new java.io.File(VectorIndex.pqDeltaDir(idx)).exists())
+    assert(!new java.io.File(VectorIndex.arrivals(idx).path).exists(),
+      "an empty batch must not leave a rows-less part")
     // and the index still answers
     assert(VectorIndex.queryIvf(spark, idx,
       vecsDF(3L until 4L), 5, nProbe = 4).count() == 5)
@@ -141,14 +141,18 @@ class VectorIngestPipelineSpec extends SparkSpec {
     VectorIndex.ensureIvfPq(vecsDF(0L until 40L), idx, numCells = 4,
       m = 4, k = 8)
     VectorIngestPipeline.ingestBatch(vecsDF(40L until 50L), idx, 0L)
-    // batch 1's write died during job commit: its cell files landed,
-    // its _SUCCESS did not. Its one row copies vector 3 under a fresh
-    // id, so a probe that admitted it would rank it first for query 3.
-    val torn = s"${VectorIngestPipeline.deltaDir(idx)}/batch=1"
-    VectorIndex.assignCells(Seq((777L, emb(3L))).toDF("vec_id", "embedding"),
-        idx)
-      .write.partitionBy("cell").parquet(torn)
-    Files.delete(Paths.get(s"$torn/_SUCCESS"))
+    // batch 1's append died after both tables landed, before its
+    // _SUCCESS. Its one row copies vector 3 under a fresh id, so a
+    // probe that admitted it would rank it first for query 3.
+    graft.scale.CommitProtocol.crashAfter = Some(("part-append", 2))
+    try intercept[graft.scale.CommitProtocol.InjectedCrash] {
+      VectorIngestPipeline.ingestBatch(
+        Seq((777L, emb(3L))).toDF("vec_id", "embedding"), idx, 1L)
+    } finally graft.scale.CommitProtocol.crashAfter = None
+    val torn = s"${VectorIndex.arrivals(idx).path}/batch=1"
+    assert(Seq("cells", "codes").forall(t =>
+      new java.io.File(s"$torn/$t/_SUCCESS").exists()) &&
+      !new java.io.File(s"$torn/_SUCCESS").exists())
     val q = vecsDF(Seq(3L))
     def neighbors(): Seq[Long] =
       (VectorIndex.queryIvf(spark, idx, q, k = 5, nProbe = 4).collect() ++
@@ -157,9 +161,45 @@ class VectorIngestPipelineSpec extends SparkSpec {
     assert(neighbors().size == 10 && !neighbors().contains(777L),
       s"the torn batch was probed: ${neighbors()}")
     VectorIngestPipeline.compactDeltas(spark, idx)
-    assert(spark.read.parquet(s"$idx/cells")
+    val log = VectorIndex.arrivals(idx)
+    val v = log.view(spark)
+    assert(log.table(spark, v, "cells", v.dirs)
       .filter(col("vec_id") === 777L).isEmpty,
-      "the compaction folded the torn batch into the base cells")
+      "the compaction folded the torn batch")
     assert(neighbors().size == 10 && !neighbors().contains(777L))
+  }
+
+  test("ensureIvf over a corpus that includes uncompacted arrivals " +
+      "keeps the index: the full probe equals brute force and never " +
+      "repeats a neighbor") {
+    val idx = tmpDir("vecingest-ensure") + "/idx"
+    VectorIndex.ensureIvf(vecsDF(0L until 40L), idx, numCells = 4)
+    VectorIngestPipeline.ingestBatch(vecsDF(40L until 50L), idx, 0L)
+    val centDir = new java.io.File(s"$idx/centroids")
+    def mtimes = centDir.listFiles().map(f =>
+      f.getName -> f.lastModified()).toMap
+    val before = mtimes
+    VectorIndex.ensureIvf(vecsDF(0L until 50L), idx, numCells = 4)
+    assert(mtimes == before, "base + arrivals cover the corpus")
+    val queryIds = Seq(3L, 41L)
+    def probe(corpus: Seq[Long]) = {
+      val got = VectorIndex.queryIvf(spark, idx, vecsDF(queryIds),
+          k = 20, nProbe = 4)
+        .select(col("query_id"), col("neighbor_id"), col("sim"),
+          col("rank"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getLong(3)))
+        .sortBy(t => (t._1, t._4)).toSeq
+      assert(got.groupBy(_._1).values.forall(ns =>
+        ns.map(_._2).distinct.size == ns.size),
+        s"a neighbor repeats: $got")
+      assert(got == brute(corpus, queryIds, k = 20))
+    }
+    probe(0L until 50L)
+    // a corpus the index does not cover rebuilds it and drops the log
+    VectorIndex.ensureIvf(vecsDF(0L until 45L), idx, numCells = 4)
+    assert(!new java.io.File(VectorIndex.arrivals(idx).path).exists())
+    probe(0L until 45L)
   }
 }

@@ -11,21 +11,19 @@ import graft.ops.{Bm25, VectorIndex}
   * asserted in every window. The shapes swept:
   *
   *  - the [[PartLog]] fold (`part-fold`: the agg store, the sample
-  *    layout's compact and rebuild, the BM25 result-cache memo GC):
-  *    every window reads the complete old view or the complete new
-  *    one, and a folded batch id is refused once the manifest is
-  *    published;
-  *  - the gram index's retract-first append and the ingest runs (BM25
-  *    and IVF deltas, and the media runs, whose steps are PartLog
-  *    appends): the canonical read in any crash window is a complete
-  *    consistent answer — the committed state, or (for
-  *    marker-committed appends) the batch-invisible or stage-prefix
-  *    state; never a partial view, never an exception.
-  *  - the BM25/IVF maintenance folds (postings, cell deltas — documented
-  *    "no reader/replay in flight"): any window where the read could
-  *    be inexact still has its delta dirs on disk — the operator's
-  *    check-before-retry signal — and the prescribed remediation
-  *    (rebuild from source) restores the exact answer.
+  *    layout's compact and rebuild, the BM25 result-cache memo GC, and
+  *    the BM25 and IVF arrival folds): every window reads the complete
+  *    old view or the complete new one, a retried fold heals it, and a
+  *    folded batch id is refused once the manifest is published;
+  *  - the named-table part append (`part-append`: the BM25 and IVF
+  *    arrivals), swept after the retract, after each table and after
+  *    the last table but before `_SUCCESS`: the batch is invisible
+  *    until its `_SUCCESS` lands, then complete;
+  *  - the gram index's retract-first append and the media runs (whose
+  *    steps are PartLog appends): the canonical read in any crash
+  *    window is a complete consistent answer — the committed state,
+  *    or the batch-invisible or stage-prefix state; never a partial
+  *    view, never an exception.
   *
   * Step boundaries are enumerated from [[CommitProtocol.stepsOf]]
   * after one clean run, so a store that grows a step is automatically
@@ -54,6 +52,8 @@ class CommitCrashSpec extends SparkSpec {
     /** For the part-log folds: re-append a batch id the fold covers,
       * which must be refused in every window after the publish. */
     def replayFolded: Option[String => Unit] = None
+    /** The step list the sweep must find, where it is pinned. */
+    def expectSteps: Option[Seq[String]] = None
   }
 
   private def docs = Tables.documents(spark, sf0001)
@@ -140,123 +140,126 @@ class CommitCrashSpec extends SparkSpec {
       got == after || got.isEmpty
   }
 
-  // ---- 4. BM25 ingest (stats dir = the batch's commit marker)
+  // ---- 4. BM25 arrival append (a two-table part: postings, stats)
 
   private object Bm25Ingest extends CrashCase {
     val name = "bm25 delta ingest"
-    val op = "bm25-ingest"
+    val op = "part-append"
     private def base = docs.filter(col("doc_id") < 400)
     private def arrivals =
       docs.filter(col("doc_id") >= 400 && col("doc_id") < 430)
     private val terms = Seq("window", "merge", "dup")
     def setup(dir: String): Unit = { Bm25.ensurePostings(base, dir); () }
     def mutate(dir: String): Unit =
-      Bm25.appendPostings(arrivals, dir, batchId = 0L)
+      Bm25.ingestBatch(arrivals, dir, batchId = 0L)
     def observe(dir: String): Seq[String] =
       Bm25.scoreTopKIndexed(spark, dir, terms, 15).collect()
         .map(r => s"${r.getLong(0)} ${r.getDouble(1)} ${r.getLong(2)}")
         .toSeq
     private lazy val baseOnly = {
       val d = tmpDir("crash-bm25-baseonly")
-      Bm25.ensurePostings(base, d)
+      setup(d)
       observe(d)
     }
+    // a part without _SUCCESS is invisible: scores are exactly
+    // base-only until the commit step, complete after it
     override def acceptable(dir: String, after: Seq[String],
-        got: Seq[String]): Boolean =
-      // uncommitted batch is invisible: scores are exactly base-only
-      got == after || got == baseOnly
+        got: Seq[String]): Boolean = got == after || got == baseOnly
+    // windows after the first table and after the last table, before
+    // _SUCCESS
+    override def expectSteps: Option[Seq[String]] = Some(Seq("retract",
+      "write-postings", "write-stats", "commit"))
   }
 
-  // ---- 5. IVF vector ingest (float delta + coded delta)
+  // ---- 5. IVF arrival append (cells, codes and the books note)
 
   private object IvfIngest extends CrashCase {
     val name = "ivf vector ingest"
-    val op = "ivf-ingest"
+    val op = "part-append"
     private def base = emb.filter(col("vec_id") < 400)
-    private def delta =
+    private[CommitCrashSpec] def delta =
       emb.filter(col("vec_id") >= 400 && col("vec_id") < 450)
         .select(col("vec_id"), col("embedding"))
     def setup(dir: String): Unit = { VectorIndex.ensureIvfPq(base, dir); () }
     def mutate(dir: String): Unit =
       graft.pipeline.VectorIngestPipeline.ingestBatch(delta, dir, 0L)
     def observe(dir: String): Seq[String] = {
-      // the planted-arrival probe: a query that IS delta vector 420
-      // (fresh id, so self-exclusion doesn't hide it) must surface it
-      // at sim 1.0 through WHATEVER path the window leaves valid
-      // (exact fallback for floats-without-codes, ADC once coded)
+      // the planted-arrival probe: a query that IS arrival vector 420
+      // (fresh id, so self-exclusion doesn't hide it) surfaces it at
+      // sim 1.0 through the ADC path once its part commits
       val probe = emb.filter(col("vec_id") === 420)
         .select(lit(9999L).as("vec_id"), col("embedding"))
       val r = VectorIndex.queryIvfPq(spark, dir, probe, 1)
         .collect().head
       Seq(s"${r.getLong(1)} ${r.getDouble(2)}")
     }
+    private lazy val baseOnly = {
+      val d = tmpDir("crash-ivf-baseonly")
+      setup(d)
+      observe(d)
+    }
+    override def acceptable(dir: String, after: Seq[String],
+        got: Seq[String]): Boolean = got == after || got == baseOnly
+    override def expectSteps: Option[Seq[String]] = Some(Seq("retract",
+      "write-cells", "write-codes", "commit"))
   }
 
-  // ---- 6. BM25 delta compaction (maintenance fold: detectable-or-exact)
+  // ---- 6. BM25 arrival fold (the PartLog fold of a two-table log)
 
   private object Bm25Compact extends CrashCase {
     val name = "bm25 delta compaction"
-    val op = "bm25-compact"
+    val op = "part-fold"
     private def base = docs.filter(col("doc_id") < 400)
-    private def arrivals =
-      docs.filter(col("doc_id") >= 400 && col("doc_id") < 430)
-    private def full = docs.filter(col("doc_id") < 430)
+    private def arrivals(lo: Long) =
+      docs.filter(col("doc_id") >= lo && col("doc_id") < lo + 15)
     private val terms = Seq("window", "merge", "dup")
     def setup(dir: String): Unit = {
       Bm25.ensurePostings(base, dir)
-      Bm25.appendPostings(arrivals, dir, batchId = 0L)
+      Bm25.ingestBatch(arrivals(400), dir, batchId = 0L)
+      Bm25.ingestBatch(arrivals(415), dir, batchId = 1L)
     }
     def mutate(dir: String): Unit = Bm25.compactDeltas(spark, dir)
+    // the scores, then how many parts the view holds above its base:
+    // the old view and the new one score alike, so the part count
+    // tells them apart
     def observe(dir: String): Seq[String] =
       Bm25.scoreTopKIndexed(spark, dir, terms, 15).collect()
         .map(r => s"${r.getLong(0)} ${r.getDouble(1)} ${r.getLong(2)}")
-        .toSeq
-    override def acceptable(dir: String, after: Seq[String],
-        got: Seq[String]): Boolean =
-      // a window where the read could be inexact must still hold its
-      // delta dirs — the documented check-before-retry signal
-      got == after || {
-        val fs = Hdfs.of(spark, dir)
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/postings_delta"))
-      }
-    override def heal(dir: String): Unit = {
-      // the contract's remediation: never blind-retry a maintenance
-      // fold — rebuild the index from source (stamp deleted so the
-      // rebuild is unconditional; ensurePostings clears stale deltas)
-      val fs = Hdfs.of(spark, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      Bm25.ensurePostings(full, dir)
+        .toSeq :+ s"parts=${Bm25.arrivals(dir).view(spark).parts}"
+    private lazy val before = {
+      val d = tmpDir("crash-bm25-fold-before")
+      setup(d)
+      observe(d)
     }
+    override def acceptable(dir: String, after: Seq[String],
+        got: Seq[String]): Boolean = got == after || got == before
+    override def replayFolded: Option[String => Unit] = Some(dir =>
+      Bm25.ingestBatch(arrivals(415), dir, batchId = 1L))
   }
 
-  // ---- 7. IVF delta compaction (maintenance fold)
+  // ---- 7. IVF arrival fold (re-encodes the codes under the books)
 
   private object IvfCompact extends CrashCase {
     val name = "ivf delta compaction"
-    val op = "ivf-compact"
-    private def base = emb.filter(col("vec_id") < 400)
-    private def delta =
-      emb.filter(col("vec_id") >= 400 && col("vec_id") < 450)
-        .select(col("vec_id"), col("embedding"))
+    val op = "part-fold"
     def setup(dir: String): Unit = {
-      VectorIndex.ensureIvfPq(base, dir)
-      graft.pipeline.VectorIngestPipeline.ingestBatch(delta, dir, 0L)
+      IvfIngest.setup(dir)
+      IvfIngest.mutate(dir)
     }
     def mutate(dir: String): Unit =
       graft.pipeline.VectorIngestPipeline.compactDeltas(spark, dir)
-    def observe(dir: String): Seq[String] = IvfIngest.observe(dir)
-    override def acceptable(dir: String, after: Seq[String],
-        got: Seq[String]): Boolean =
-      got == after || {
-        val fs = Hdfs.of(spark, dir)
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/cells_delta"))
-      }
-    override def heal(dir: String): Unit = {
-      val fs = Hdfs.of(spark, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      VectorIndex.ensureIvfPq(
-        emb.filter(col("vec_id") < 450), dir)
+    def observe(dir: String): Seq[String] = IvfIngest.observe(dir) :+
+      s"parts=${VectorIndex.arrivals(dir).view(spark).parts}"
+    private lazy val before = {
+      val d = tmpDir("crash-ivf-fold-before")
+      setup(d)
+      observe(d)
     }
+    override def acceptable(dir: String, after: Seq[String],
+        got: Seq[String]): Boolean = got == after || got == before
+    override def replayFolded: Option[String => Unit] = Some(dir =>
+      graft.pipeline.VectorIngestPipeline.ingestBatch(
+        IvfIngest.delta, dir, 0L))
   }
 
   // ---- 8. SampleLayout rebuild (the same fold, from the source)
@@ -446,6 +449,7 @@ class CommitCrashSpec extends SparkSpec {
       assert(after.nonEmpty, s"${c.name}: empty committed answer")
       val steps = CommitProtocol.stepsOf(c.op)
       assert(steps.nonEmpty, s"${c.name}: op ${c.op} never registered")
+      c.expectSteps.foreach(want => assert(steps == want, steps))
 
       steps.indices.foreach { i =>
         val dir = tmpDir(s"crash-${c.op}-$i")
